@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.engine.Superstep
 import graft.graph.GraphOps
 
 /** Bounded-horizon absorbing-walk hit probability toward a target set —
@@ -26,11 +27,10 @@ import graft.graph.GraphOps
   * per step against the dst-partitioned persisted edge table, one hash
   * aggregation, one vertex-sized merge join against the persisted
   * (flag, degree) base table. The state is referenced once per step, so
-  * the whole horizon chains lazily with an eager truncation every 5 steps
-  * (the round-4 lp_converge lesson). No driver-side action inside the
-  * loop. Vertices with no out-edges and not in S keep h = 0 (the walk is
-  * stuck, it never hits), which the update expresses with a null-degree
-  * guard so directed inputs are handled too.
+  * the whole horizon is one read-once [[Superstep.fixed]] chain. No
+  * driver-side action inside the loop. Vertices with no out-edges and not
+  * in S keep h = 0 (the walk is stuck, it never hits), which the update
+  * expresses with a null-degree guard so directed inputs are handled too.
   */
 object Absorbing {
 
@@ -52,30 +52,18 @@ object Absorbing {
     val edgesByDst = edges.repartition(partitions, col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var h = base.select(col("id"), col("is_t").cast("double").as("p"))
-    val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var t = 0
-    while (t < steps) {
-      t += 1
+    Superstep.fixed(base.select(col("id"), col("is_t").cast("double").as("p")),
+        steps, readsPrevOnce = true) { (h, _) =>
       val gathered = edgesByDst
         .join(h, edgesByDst("dst") === h("id"))
         .select(edgesByDst("src").as("id"), col("p"))
         .groupBy("id").agg(sum(col("p")).as("s"))
-      h = base.join(gathered, Seq("id"), "left")
+      base.join(gathered, Seq("id"), "left")
         .select(col("id"),
           when(col("is_t") === 1, lit(1.0))
             .when(col("deg").isNull, lit(0.0))
             .otherwise(coalesce(col("s"), lit(0.0)) / col("deg"))
             .as("p"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pending += h
-      if (t % 5 == 0 && t < steps) {
-        h = h.localCheckpoint(eager = true)
-        pending.foreach(_.unpersist(blocking = false))
-        pending.clear()
-      }
     }
-    pending.dropRight(1).foreach(_.unpersist(blocking = false))
-    h
   }
 }

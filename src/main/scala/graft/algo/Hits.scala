@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.Superstep
 import graft.graph.GraphOps
 
 /** HITS (Kleinberg hubs & authorities) — the classic companion to
@@ -35,8 +36,9 @@ object Hits {
 
   /** `values / sum(values)`, with the sum as an in-plan broadcast scalar;
     * if the sum is 0 every value is 0 already — keep them (no NaN).
+    * Shared with [[Salsa]].
     */
-  private def l1Normalize(df: DataFrame, valueCol: String,
+  private[algo] def l1Normalize(df: DataFrame, valueCol: String,
                           outCol: String): DataFrame = {
     val total = df.agg(sum(col(valueCol)).as("_l1"))
     df.crossJoin(total)
@@ -65,11 +67,11 @@ object Hits {
     val verts = GraphOps.vertices(eSrc).persist(StorageLevel.MEMORY_AND_DISK)
     val n = verts.count()
 
-    var scores = verts.select(col("id"),
-      lit(1.0 / n).as("auth"), lit(1.0 / n).as("hub"))
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
+    // Read more than once: auth feeds both the hub gather and the final
+    // join, and each normalizer reads its input twice (sum + divide).
+    val scores = Superstep.fixed(verts.select(col("id"),
+        lit(1.0 / n).as("auth"), lit(1.0 / n).as("hub")),
+        iterations, readsPrevOnce = false) { (scores, _) =>
       // authority update: gather hub mass along edge direction. The
       // score state is stats-less mid-loop, so pin a shuffled-hash build
       // (vertex-sized per partition) — otherwise the planner sort-merges
@@ -91,16 +93,9 @@ object Hits {
         .select(col("id"), coalesce(col("h"), lit(0.0)).as("h"))
       val hub = l1Normalize(hJoined, "h", "hub")
         .withColumnRenamed("id", "hid2")
-      // Eager truncation is load-bearing here, not just plan hygiene: the
-      // normalizers reference aJoined/hJoined twice (sum + divide), so a
-      // lazy multi-iteration chain would double the subtree per iteration
-      // (the Gauss–Seidel 2^n lesson). One materialization job per
-      // iteration; superseded checkpoint blocks are released by the
-      // ContextCleaner once the previous wrapper is unreferenced.
-      scores = auth
+      auth
         .join(hub, col("id") === col("hid2"))
         .select(col("id"), col("auth"), col("hub"))
-        .localCheckpoint(eager = true)
     }
     eSrc.unpersist(blocking = false)
     eDst.unpersist(blocking = false)

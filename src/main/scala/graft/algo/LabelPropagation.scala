@@ -261,21 +261,6 @@ object LabelPropagation {
   def initLabels(vertices: DataFrame): DataFrame =
     vertices.select(col("id"), col("id").as("label"))
 
-  /** Exactly `supersteps` updates, no convergence actions — for
-    * oracle-checked fixed-step queries and benchmarks where the step
-    * count must be identical across engines and parallelism levels.
-    *
-    * Execution shape: each step's labels get a LAZY persist (they are
-    * referenced twice by the next step in non-symmetric mode), and an
-    * eager localCheckpoint only every `eagerEvery` steps (0 = never) to
-    * bound plan depth on long runs. No per-step materialization job —
-    * the per-step `persist + localCheckpoint(eager=true)` of round 1 ran
-    * one full job per superstep and measured 5× slower than this lazy
-    * chain on the bench graph (VERDICT r1).
-    *
-    * @param packedArgmax None = derive from [[packedBudgetOk]] (one extra
-    *        aggregation job); Some(b) = caller-asserted eligibility.
-    */
   /** Symmetric-mode superstep 1 shortcut: with init labels label(v) = v,
     * the gather's label lookup is the identity — message (src, label(dst))
     * IS the edge row (src, dst) — so the first superstep is the argmax
@@ -289,27 +274,36 @@ object LabelPropagation {
     argmax(edges.select(col("src").as("id"), col("dst").as("label")),
       packed, mapSideCombine)
 
+  /** Exactly `supersteps` updates, no convergence actions — for
+    * oracle-checked fixed-step queries and benchmarks where the step
+    * count must be identical across engines and parallelism levels.
+    * Symmetric mode reads the previous labels once per superstep (the
+    * gather), so the run is one lazy [[Superstep.fixed]] chain; the
+    * keep-previous join of non-symmetric mode reads them a second time.
+    *
+    * @param packedArgmax None = derive from [[packedBudgetOk]] (one extra
+    *        aggregation job); Some(b) = caller-asserted eligibility.
+    */
   def runFixed(edges: DataFrame, supersteps: Int,
                symmetric: Boolean = false,
-               packedArgmax: Option[Boolean] = None,
-               eagerEvery: Int = 10): DataFrame = {
+               packedArgmax: Option[Boolean] = None): DataFrame = {
     val packed = resolvePacked(edges, packedArgmax)
-    var labels =
-      if (symmetric && supersteps > 0) null // first step needs no init
-      else initLabels(
-        if (symmetric) GraphOps.verticesSymmetric(edges)
-        else GraphOps.vertices(edges))
-    var i = 0
-    while (i < supersteps) {
-      i += 1
-      labels = (if (i == 1 && symmetric) firstStepSymmetric(edges, packed)
-        else superstep(edges, labels, symmetric, packed))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (eagerEvery > 0 && i % eagerEvery == 0 && i < supersteps)
-        labels = labels.localCheckpoint(eager = true)
+    Superstep.fixed(fixedInit(edges, supersteps, symmetric), supersteps,
+        readsPrevOnce = symmetric) { (labels, i) =>
+      if (i == 1 && symmetric) firstStepSymmetric(edges, packed)
+      else superstep(edges, labels, symmetric, packed)
     }
-    labels
   }
+
+  /** Init of the fixed-step runs: the identity labeling, or nothing when
+    * the symmetric first superstep reads only the edge table.
+    */
+  private def fixedInit(edges: DataFrame, supersteps: Int,
+                        symmetric: Boolean): DataFrame =
+    if (symmetric && supersteps > 0) null
+    else initLabels(
+      if (symmetric) GraphOps.verticesSymmetric(edges)
+      else GraphOps.vertices(edges))
 
   /** SLPA-style label memory (overlapping communities): the multiset of
     * labels each vertex held across the first `supersteps` synchronous
@@ -326,51 +320,17 @@ object LabelPropagation {
                   symmetric: Boolean = false,
                   packedArgmax: Option[Boolean] = None): DataFrame = {
     val packed = resolvePacked(edges, packedArgmax)
-    var labels =
-      if (symmetric && supersteps > 0) null
-      else initLabels(
-        if (symmetric) GraphOps.verticesSymmetric(edges)
-        else GraphOps.vertices(edges))
-    var hist: DataFrame = null
-    var i = 0
-    while (i < supersteps) {
-      i += 1
-      // each step's labels are referenced twice (next superstep + the
-      // history union) — Materialize.eager truncates the plan AND releases
-      // the pre-checkpoint cache entry, where a bare persist leaked one
-      // MEMORY_AND_DISK entry per superstep for the session (ADVICE r4)
-      labels = (if (i == 1 && symmetric) firstStepSymmetric(edges, packed)
-        else superstep(edges, labels, symmetric, packed))
-        .transform(graft.engine.Materialize.eager)
-      val it = labels.select(col("id"), col("label"))
-      hist = if (hist == null) it else hist.union(it)
+    // each step's labels are read twice (next superstep + the history
+    // union); step i receives the materialized labels of step i-1
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val last = Superstep.fixed(fixedInit(edges, supersteps, symmetric), supersteps,
+        readsPrevOnce = false) { (labels, i) =>
+      if (i > 1) held += labels
+      if (i == 1 && symmetric) firstStepSymmetric(edges, packed)
+      else superstep(edges, labels, symmetric, packed)
     }
-    hist.groupBy("id", "label").agg(count(lit(1)).as("n_rounds"))
-  }
-
-  /** Purely lazily chained fixed supersteps: ONE action executes the
-    * whole multi-superstep DAG with no intermediate persists (each
-    * superstep's aggregations are shuffle boundaries, so stages run
-    * exactly once when the result is consumed once). Depth-limited by
-    * plan size; use [[runFixed]]/[[run]] beyond ~10 steps.
-    */
-  def chainFixed(edges: DataFrame, supersteps: Int,
-                 symmetric: Boolean = false,
-                 packedArgmax: Option[Boolean] = None): DataFrame = {
-    val packed = resolvePacked(edges, packedArgmax)
-    var labels =
-      if (symmetric && supersteps > 0) null
-      else initLabels(
-        if (symmetric) GraphOps.verticesSymmetric(edges)
-        else GraphOps.vertices(edges))
-    var i = 0
-    while (i < supersteps) {
-      i += 1
-      labels =
-        if (i == 1 && symmetric) firstStepSymmetric(edges, packed)
-        else superstep(edges, labels, symmetric, packed)
-    }
-    labels
+    (held :+ last).map(_.select(col("id"), col("label"))).reduce(_ union _)
+      .groupBy("id", "label").agg(count(lit(1)).as("n_rounds"))
   }
 
   /** Run to convergence. `edges` should be symmetrized for undirected
@@ -405,16 +365,13 @@ object LabelPropagation {
     */
   def runSeededFixed(edges: DataFrame, seeds: DataFrame,
                      supersteps: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val verts = GraphOps.vertices(edges)
     val seedTag = seeds.select(col("id"), lit(1L).as("is_seed"))
-    var labels = verts
+    val init = verts
       .join(seeds.select(col("id"), col("label")), Seq("id"), "left")
       .select(col("id"), col("label"))
       .transform(graft.engine.Materialize.eager)
-    var t = 0
-    while (t < supersteps) {
-      t += 1
+    Superstep.fixed(init, supersteps, readsPrevOnce = false) { (labels, _) =>
       val msgs = edges.join(labels.filter(col("label").isNotNull),
           edges("dst") === col("id"))
         .select(edges("src").as("id"), col("label"))
@@ -422,17 +379,13 @@ object LabelPropagation {
       val best = counts.groupBy("id")
         .agg(max(struct(col("cnt"), (lit(0L) - col("label")).as("nl"))).as("m"))
         .select(col("id"), (lit(0L) - col("m.nl")).as("nb"))
-      val next = labels
+      labels
         .join(seedTag, Seq("id"), "left")
         .join(best, Seq("id"), "left")
         .select(col("id"),
           when(col("is_seed").isNotNull, col("label"))
             .otherwise(coalesce(col("nb"), col("label"))).as("label"))
-        .transform(graft.engine.Materialize.eager)
-      labels.unpersist(blocking = false)
-      labels = next
     }
-    labels
   }
 
   def run(

@@ -1,8 +1,9 @@
 package graft.algo
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.{Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** PageRank over the edge table (north_rule algorithm; absent from the
@@ -37,6 +38,75 @@ object PageRank {
     */
   private def stateSide(ranks: DataFrame): DataFrame = ranks.hint("shuffle_hash")
 
+  /** Setup shared by the power iterations: the vertex table, the
+    * out-degree table, the edges carrying their source's out-degree
+    * (src-partitioned, persisted) and the dangling (zero-out-degree)
+    * vertices, persisted on first use. Launches no action — each caller
+    * counts what it reads.
+    *
+    * @param symmetric the src column alone covers every endpoint, so the
+    *        persisted out-degree table's key set IS the vertex set — one
+    *        aggregation serves |V|, the init ranks AND the edge decoration
+    *        (guide §2.4: two operations keyed the same way share one
+    *        pass). A symmetrized graph has no dangling vertices.
+    * @param weighted edges carry `weight`, and the degree is the integral
+    *        out-weight `wout` instead of the edge count `outdeg`
+    * @param keepDeg persist the degree table (read again after the loop)
+    */
+  private final class Setup(edges: DataFrame, partitions: Int,
+                            symmetric: Boolean = false,
+                            weighted: Boolean = false,
+                            keepDeg: Boolean = false) {
+    val outDeg: DataFrame = {
+      val d = edges.groupBy(col("src").as("id")).agg(
+        if (weighted) sum(col("weight")).cast("long").as("wout")
+        else count(lit(1)).as("outdeg"))
+      if (symmetric || keepDeg) d.persist(StorageLevel.MEMORY_AND_DISK) else d
+    }
+    val verts: DataFrame =
+      if (symmetric) outDeg.select(col("id"))
+      else GraphOps.vertices(
+          if (weighted) edges.select(col("src"), col("dst")) else edges)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    val edgesDeg: DataFrame = edges.join(stateSide(outDeg), edges("src") === outDeg("id"))
+      .select(Seq(edges("src"), edges("dst")) ++
+        (if (weighted) Seq(edges("weight"), col("wout")) else Seq(col("outdeg"))): _*)
+      .repartition(partitions, col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    lazy val dangling: DataFrame = verts.join(outDeg, Seq("id"), "left_anti")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The fixed-iteration power step of [[runFixed]], [[runFixedWeighted]]
+    * and [[runPersonalizedFixed]]: the dangling mass (a driver action,
+    * only when danglers exist), one gather join of `contrib` per edge and
+    * one hash aggregation per destination into `s`, then `update(dMass)`
+    * over `attach(sums)`. Danglers make the mass sum a second read of the
+    * ranks, so the chain materializes every step; without them the whole
+    * run chains lazily.
+    */
+  private def powerFixed(setup: Setup, init: DataFrame, iterations: Int,
+                         hasDangling: Boolean, contrib: Column,
+                         attach: DataFrame => DataFrame)(
+                         update: Double => Column): DataFrame =
+    Superstep.fixed(init, iterations, readsPrevOnce = !hasDangling) { (ranks, _) =>
+      import setup.{dangling, edgesDeg}
+      val dMass =
+        if (hasDangling)
+          dangling.join(ranks, "id").agg(sum("rank")).first().getDouble(0)
+        else 0.0
+      val sums = edgesDeg
+        .join(stateSide(ranks), edgesDeg("src") === ranks("id"))
+        .select(edgesDeg("dst").as("id"), contrib.as("c"))
+        .groupBy("id").agg(sum("c").as("s"))
+      attach(sums).select(col("id"), update(dMass).as("rank"))
+    }
+
+  /** Uniform-teleport update: (1−d)/N + d·(s + D/N). */
+  private def uniformUpdate(damping: Double, n: Long)(dMass: Double): Column =
+    lit((1.0 - damping) / n) +
+      lit(damping) * (coalesce(col("s"), lit(0.0)) + lit(dMass / n))
+
   /** @param autoSkew derive an OUT-degree hot-vertex threshold
     *        ([[GraphOps.planSkewAuto]] keyed on `src` — PageRank's
     *        per-iteration join keys on the rank SOURCE, so the skewed key
@@ -69,16 +139,10 @@ object PageRank {
       initRanks: Option[DataFrame] = None,
       startIter: Int = 0,
       priorMetrics: Seq[graft.model.SuperstepMetrics] = Nil): Result = {
-    val verts = GraphOps.vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    val setup = new Setup(edges, partitions)
+    import setup.{dangling, edgesDeg, verts}
     val n = verts.count()
-    val outDeg = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(stateSide(outDeg), edges("src") === outDeg("id"))
-      .select(edges("src"), edges("dst"), col("outdeg"))
-      .repartition(partitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     edgesDeg.count()
-    val dangling = verts.join(outDeg, Seq("id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val hasDangling = dangling.count() > 0L
     val skewPlan =
       if (autoSkew) GraphOps.planSkewAuto(edgesDeg, partitions, key = "src")
@@ -166,79 +230,14 @@ object PageRank {
     */
   def runFixed(edges: DataFrame, iterations: Int, damping: Double = 0.85,
                partitions: Int = 32, symmetric: Boolean = false): DataFrame = {
-    // symmetric: the src column alone covers every endpoint, so the
-    // out-degree table's key set IS the vertex set — one persisted
-    // aggregation serves |V|, the init ranks AND the edge decoration,
-    // replacing the separate vertices-distinct job of the general path
-    // (guide §2.4: two operations keyed the same way share one pass).
-    val outDeg0 = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
-    val (verts, n, outDeg) =
-      if (symmetric) {
-        val od = outDeg0.persist(StorageLevel.MEMORY_AND_DISK)
-        (od.select(col("id")), od.count(), od)
-      } else {
-        val v = GraphOps.vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-        (v, v.count(), outDeg0)
-      }
-    val edgesDeg = edges.join(stateSide(outDeg), edges("src") === outDeg("id"))
-      .select(edges("src"), edges("dst"), col("outdeg"))
-      .repartition(partitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val dangling =
-      if (symmetric) verts.limit(0)
-      else verts.join(outDeg, Seq("id"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    val setup = new Setup(edges, partitions, symmetric = symmetric)
+    import setup.{dangling, verts}
+    val n = verts.count()
     val hasDangling = !symmetric && dangling.count() > 0L
-
-    var ranks = verts.select(col("id"), lit(1.0 / n).as("rank"))
-    // superseded rank tables pending release: safe to free only once an
-    // eager truncation has materialized everything downstream of them —
-    // unpersisting a LAZY chain member earlier would force recomputation.
-    // (Round 2 never freed them and 10 iterations kept 10 rank tables
-    // cached, evicting the edge table at scale — VERDICT r2.)
-    val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
-      // With danglers the per-iteration mass sum is an action anyway; on
-      // dangler-free (e.g. symmetrized) graphs the whole fixed run chains
-      // lazily — ranks are referenced once per iteration, so no plan
-      // doubling — with an eager truncation only every 5 iterations
-      // (round 1 materialized every iteration: one extra job each).
-      val dMass =
-        if (hasDangling)
-          dangling.join(ranks, "id").agg(sum("rank")).first().getDouble(0)
-        else 0.0
-      val contribs = edgesDeg
-        .join(stateSide(ranks), edgesDeg("src") === ranks("id"))
-        .select(edgesDeg("dst").as("id"), (col("rank") / col("outdeg")).as("c"))
-      val sums = contribs.groupBy("id").agg(sum("c").as("s"))
-      ranks = (if (symmetric)
-          sums.select(col("id"),
-            (lit((1.0 - damping) / n) +
-              lit(damping) * (coalesce(col("s"), lit(0.0)) + lit(dMass / n)))
-              .as("rank"))
-        else verts.join(sums, Seq("id"), "left")
-          .select(col("id"),
-            (lit((1.0 - damping) / n) +
-              lit(damping) * (coalesce(col("s"), lit(0.0)) + lit(dMass / n)))
-              .as("rank")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pending += ranks
-      if (hasDangling || (iter % 5 == 0 && iter < iterations)) {
-        ranks = ranks.localCheckpoint(eager = true)
-        // the new checkpoint holds the data; the lazy chain members cached
-        // before it are dead weight — free their cache entries (superseded
-        // checkpoint BLOCKS have no cache entry to free; the ContextCleaner
-        // releases them once the wrapper is unreferenced)
-        pending.foreach(_.unpersist(blocking = false))
-        pending.clear()
-      }
-    }
-    // intermediates above the last truncation cache nothing the caller
-    // needs twice; keep only the final table cached
-    pending.dropRight(1).foreach(_.unpersist(blocking = false))
-    ranks
+    val attach: DataFrame => DataFrame =
+      if (symmetric) identity else verts.join(_, Seq("id"), "left")
+    powerFixed(setup, verts.select(col("id"), lit(1.0 / n).as("rank")), iterations,
+      hasDangling, col("rank") / col("outdeg"), attach)(uniformUpdate(damping, n))
   }
 
   /** Weighted PageRank, fixed iterations — the rank a vertex passes along
@@ -255,53 +254,13 @@ object PageRank {
   def runFixedWeighted(weightedEdges: DataFrame, iterations: Int,
                        damping: Double = 0.85,
                        partitions: Int = 32): DataFrame = {
-    val plain = weightedEdges.select(col("src"), col("dst"))
-    val verts = GraphOps.vertices(plain).persist(StorageLevel.MEMORY_AND_DISK)
+    val setup = new Setup(weightedEdges, partitions, weighted = true)
+    import setup.{dangling, verts}
     val n = verts.count()
-    val wOut = weightedEdges.groupBy(col("src").as("id"))
-      .agg(sum(col("weight")).cast("long").as("wout"))
-    val edgesW = weightedEdges.join(stateSide(wOut), weightedEdges("src") === wOut("id"))
-      .select(weightedEdges("src"), weightedEdges("dst"),
-        weightedEdges("weight"), col("wout"))
-      .repartition(partitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val dangling = verts.join(wOut, Seq("id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val hasDangling = dangling.count() > 0L
-
-    var ranks = verts.select(col("id"), lit(1.0 / n).as("rank"))
-    val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
-      val dMass =
-        if (hasDangling)
-          dangling.join(ranks, "id").agg(sum("rank")).first().getDouble(0)
-        else 0.0
-      val contribs = edgesW
-        .join(stateSide(ranks), edgesW("src") === ranks("id"))
-        .select(edgesW("dst").as("id"),
-          (col("rank") * col("weight") / col("wout")).as("c"))
-      val sums = contribs.groupBy("id").agg(sum("c").as("s"))
-      ranks = verts.join(sums, Seq("id"), "left")
-        .select(col("id"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("s"), lit(0.0)) + lit(dMass / n)))
-            .as("rank"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pending += ranks
-      if (hasDangling || (iter % 5 == 0 && iter < iterations)) {
-        ranks = ranks.localCheckpoint(eager = true)
-        // the new checkpoint holds the data; the lazy chain members cached
-        // before it are dead weight — free their cache entries (superseded
-        // checkpoint BLOCKS have no cache entry to free; the ContextCleaner
-        // releases them once the wrapper is unreferenced)
-        pending.foreach(_.unpersist(blocking = false))
-        pending.clear()
-      }
-    }
-    pending.dropRight(1).foreach(_.unpersist(blocking = false))
-    ranks
+    powerFixed(setup, verts.select(col("id"), lit(1.0 / n).as("rank")), iterations,
+      hasDangling, col("rank") * col("weight") / col("wout"),
+      verts.join(_, Seq("id"), "left"))(uniformUpdate(damping, n))
   }
 
   /** Personalized PageRank, fixed iterations: the teleport mass returns to
@@ -318,57 +277,24 @@ object PageRank {
   def runPersonalizedFixed(edges: DataFrame, sources: DataFrame,
                            iterations: Int, damping: Double = 0.85,
                            partitions: Int = 32): DataFrame = {
-    val verts = GraphOps.vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val outDeg = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(stateSide(outDeg), edges("src") === outDeg("id"))
-      .select(edges("src"), edges("dst"), col("outdeg"))
-      .repartition(partitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val dangling = verts.join(outDeg, Seq("id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val hasDangling = dangling.count() > 0L
+    val setup = new Setup(edges, partitions)
+    val hasDangling = setup.dangling.count() > 0L
 
     val nS = sources.count()
     // reset(v): 1/|S| on the source set — carried as a column on the
     // vertex table so every iteration is reset-aware without re-joining
-    val reset = verts
+    val reset = setup.verts
       .join(sources.select(col("id"), lit(1.0 / nS).as("reset")), Seq("id"), "left")
       .select(col("id"), coalesce(col("reset"), lit(0.0)).as("reset"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     reset.count()
 
-    var ranks = reset.select(col("id"), col("reset").as("rank"))
-    val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
-      val dMass =
-        if (hasDangling)
-          dangling.join(ranks, "id").agg(sum("rank")).first().getDouble(0)
-        else 0.0
-      val contribs = edgesDeg
-        .join(stateSide(ranks), edgesDeg("src") === ranks("id"))
-        .select(edgesDeg("dst").as("id"), (col("rank") / col("outdeg")).as("c"))
-      val sums = contribs.groupBy("id").agg(sum("c").as("s"))
-      ranks = reset.join(sums, Seq("id"), "left")
-        .select(col("id"),
-          ((lit(1.0 - damping) + lit(damping) * lit(dMass)) * col("reset") +
-            lit(damping) * coalesce(col("s"), lit(0.0)))
-            .as("rank"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pending += ranks
-      if (hasDangling || (iter % 5 == 0 && iter < iterations)) {
-        ranks = ranks.localCheckpoint(eager = true)
-        // the new checkpoint holds the data; the lazy chain members cached
-        // before it are dead weight — free their cache entries (superseded
-        // checkpoint BLOCKS have no cache entry to free; the ContextCleaner
-        // releases them once the wrapper is unreferenced)
-        pending.foreach(_.unpersist(blocking = false))
-        pending.clear()
-      }
+    powerFixed(setup, reset.select(col("id"), col("reset").as("rank")), iterations,
+      hasDangling, col("rank") / col("outdeg"), reset.join(_, Seq("id"), "left")) {
+      dMass =>
+        (lit(1.0 - damping) + lit(damping) * lit(dMass)) * col("reset") +
+          lit(damping) * coalesce(col("s"), lit(0.0))
     }
-    pending.dropRight(1).foreach(_.unpersist(blocking = false))
-    ranks
   }
 
   /** Batch topic-sensitive PageRank (Haveliwala, WWW 2002): k
@@ -390,14 +316,8 @@ object PageRank {
   def runTopicsFixed(edges: DataFrame, topicSeeds: DataFrame,
                      iterations: Int, damping: Double = 0.85,
                      partitions: Int = 32): DataFrame = {
-    val verts = GraphOps.vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val outDeg = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(stateSide(outDeg), edges("src") === outDeg("id"))
-      .select(edges("src"), edges("dst"), col("outdeg"))
-      .repartition(partitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val dangling = verts.join(outDeg, Seq("id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val setup = new Setup(edges, partitions)
+    import setup.{dangling, edgesDeg, verts}
     val hasDangling = dangling.count() > 0L
 
     val sizes = topicSeeds.groupBy("topic").agg(count(lit(1)).as("ns"))
@@ -409,12 +329,12 @@ object PageRank {
       .select(col("topic"), col("id"),
         when(col("isSeed").isNotNull, lit(1.0) / col("ns"))
           .otherwise(lit(0.0)).as("reset"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(Materialize.eager)
 
-    var ranks = reset.select(col("topic"), col("id"), col("reset").as("rank"))
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
+    // read twice per step when danglers exist (dangling probe + contribs)
+    val ranks = Superstep.fixed(
+        reset.select(col("topic"), col("id"), col("reset").as("rank")),
+        iterations, readsPrevOnce = false) { (ranks, _) =>
       // per-topic dangling mass, broadcast back in-plan (k rows)
       val dMass =
         if (!hasDangling) null
@@ -426,20 +346,17 @@ object PageRank {
         .select(col("topic"), edgesDeg("dst").as("id"),
           (col("rank") / col("outdeg")).as("c"))
       val sums = contribs.groupBy("topic", "id").agg(sum("c").as("s"))
-      var next = reset.join(sums, Seq("topic", "id"), "left")
-      next =
-        if (hasDangling)
-          next.join(broadcast(dMass), col("topic") === col("dt"), "left")
-            .select(col("topic"), col("id"),
-              ((lit(1.0 - damping) +
-                lit(damping) * coalesce(col("dmass"), lit(0.0))) * col("reset") +
-                lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
-        else
-          next.select(col("topic"), col("id"),
-            (lit(1.0 - damping) * col("reset") +
+      val next = reset.join(sums, Seq("topic", "id"), "left")
+      if (hasDangling)
+        next.join(broadcast(dMass), col("topic") === col("dt"), "left")
+          .select(col("topic"), col("id"),
+            ((lit(1.0 - damping) +
+              lit(damping) * coalesce(col("dmass"), lit(0.0))) * col("reset") +
               lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
-      // referenced twice next iteration (dangling probe + contribs)
-      ranks = next.transform(graft.engine.Materialize.eager)
+      else
+        next.select(col("topic"), col("id"),
+          (lit(1.0 - damping) * col("reset") +
+            lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
     }
     edgesDeg.unpersist(blocking = false)
     dangling.unpersist(blocking = false)
@@ -528,23 +445,15 @@ object PageRank {
     */
   def opicFixed(edges: DataFrame, iterations: Int,
                 partitions: Int = 32): DataFrame = {
-    val verts = GraphOps.vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    val setup = new Setup(edges, partitions)
+    import setup.{dangling, edgesDeg, verts}
     val n = verts.count()
-    val outDeg = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(stateSide(outDeg), edges("src") === outDeg("id"))
-      .select(edges("src"), edges("dst"), col("outdeg"))
-      .repartition(partitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val dangling = verts.join(outDeg, Seq("id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val hasDangling = dangling.count() > 0L
 
-    var st = verts
+    val init = verts
       .select(col("id"), lit(1.0 / n).as("cash"), lit(1.0 / n).as("hist"))
-      .transform(graft.engine.Materialize.eager)
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
+      .transform(Materialize.eager)
+    val out = Superstep.fixed(init, iterations, readsPrevOnce = false) { (st, _) =>
       val dMass =
         if (hasDangling)
           dangling.join(st, "id").agg(sum("cash")).first().getDouble(0)
@@ -553,18 +462,17 @@ object PageRank {
         .join(st, edgesDeg("src") === st("id"))
         .select(edgesDeg("dst").as("id"), (col("cash") / col("outdeg")).as("c"))
       val sums = contribs.groupBy("id").agg(sum("c").as("s"))
-      st = st.select(col("id"), col("hist"))
+      st.select(col("id"), col("hist"))
         .join(sums, Seq("id"), "left")
         .select(col("id"),
           (coalesce(col("s"), lit(0.0)) + lit(dMass / n)).as("cash"),
           col("hist"))
         .select(col("id"), col("cash"), (col("hist") + col("cash")).as("hist"))
-        .transform(graft.engine.Materialize.eager)
     }
     edgesDeg.unpersist(blocking = false)
     dangling.unpersist(blocking = false)
     verts.unpersist(blocking = false)
-    st
+    out
   }
 
   /** SybilRank (Cao et al., NSDI 2012) — degree-normalized trust
@@ -595,32 +503,23 @@ object PageRank {
     */
   def sybilRankFixed(edges: DataFrame, seeds: DataFrame, iterations: Int,
                      partitions: Int = 32): DataFrame = {
-    val verts = GraphOps.vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val outDeg = edges.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edgesDeg = edges.join(stateSide(outDeg), edges("src") === outDeg("id"))
-      .select(edges("src"), edges("dst"), col("outdeg"))
-      .repartition(partitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val setup = new Setup(edges, partitions, keepDeg = true)
+    import setup.{edgesDeg, outDeg, verts}
     val nS = seeds.count()
     require(nS > 0, "SybilRank needs a non-empty seed set")
 
-    var trust = verts
+    val init = verts
       .join(seeds.select(col("id"), lit(1.0 / nS).as("t")), Seq("id"), "left")
       .select(col("id"), coalesce(col("t"), lit(0.0)).as("trust"))
-      .transform(graft.engine.Materialize.eager)
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
+      .transform(Materialize.eager)
+    val trust = Superstep.fixed(init, iterations, readsPrevOnce = false) { (trust, _) =>
       val sums = edgesDeg
         .join(trust, edgesDeg("src") === trust("id"))
         .select(edgesDeg("dst").as("id"),
           (col("trust") / col("outdeg")).as("c"))
         .groupBy("id").agg(sum("c").as("s"))
-      trust = verts.join(sums, Seq("id"), "left")
+      verts.join(sums, Seq("id"), "left")
         .select(col("id"), coalesce(col("s"), lit(0.0)).as("trust"))
-        .transform(graft.engine.Materialize.eager)
     }
     val res = trust.join(outDeg, Seq("id"), "left")
       .select(col("id"), col("trust"),

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.algo.Hits.l1Normalize
+import graft.engine.Superstep
 import graft.graph.GraphOps
 
 /** SALSA (Lempel–Moran, "Stochastic Approach for Link-Structure
@@ -32,15 +34,6 @@ import graft.graph.GraphOps
   */
 object Salsa {
 
-  private def l1Normalize(df: DataFrame, valueCol: String,
-                          outCol: String): DataFrame = {
-    val total = df.agg(sum(col(valueCol)).as("_l1"))
-    df.crossJoin(total)
-      .select(col("id"),
-        when(col("_l1") =!= 0.0, col(valueCol) / col("_l1"))
-          .otherwise(col(valueCol)).as(outCol))
-  }
-
   /** Fixed-iteration SALSA over a directed edge table. Returns
     * (id, auth, hub) for every vertex, L1-normalized per half-step.
     */
@@ -63,11 +56,9 @@ object Salsa {
     val verts = GraphOps.vertices(eSrc).persist(StorageLevel.MEMORY_AND_DISK)
     val n = verts.count()
 
-    var scores = verts.select(col("id"),
-      lit(1.0 / n).as("auth"), lit(1.0 / n).as("hub"))
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
+    val scores = Superstep.fixed(verts.select(col("id"),
+        lit(1.0 / n).as("auth"), lit(1.0 / n).as("hub")),
+        iterations, readsPrevOnce = false) { (scores, _) =>
       // shuffled-hash build of the score state (PageRank.stateSide
       // rationale: no stats mid-loop → SMJ re-sorts the edge side)
       val aRaw = eSrc.join(scores.select(col("id").as("hid"), col("hub"))
@@ -87,10 +78,9 @@ object Salsa {
         .select(col("id"), coalesce(col("h"), lit(0.0)).as("h"))
       val hub = l1Normalize(hJoined, "h", "hub")
         .withColumnRenamed("id", "hid2")
-      scores = auth
+      auth
         .join(hub, col("id") === col("hid2"))
         .select(col("id"), col("auth"), col("hub"))
-        .localCheckpoint(eager = true)
     }
     eSrc.unpersist(blocking = false)
     eDst.unpersist(blocking = false)

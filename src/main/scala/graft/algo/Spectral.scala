@@ -1,8 +1,9 @@
 package graft.algo
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.Superstep
 import graft.graph.GraphOps
 
 /** Spectral / walk-counting centralities: Katz and eigenvector. Both are
@@ -13,6 +14,36 @@ import graft.graph.GraphOps
   */
 object Spectral {
 
+  /** The walk-sum power iteration shared by [[katzFixed]],
+    * [[katzWalkSums]] and [[eigenvectorWalkCounts]]: the edge table is
+    * src-partitioned and persisted once, and each step gathers the
+    * `value` column along the edges into `s` per destination and sets
+    * `value = update(s, step)` on every vertex. Each step references the
+    * previous scores once, so the whole run chains lazily.
+    */
+  private def walkFixed(edges: DataFrame, iterations: Int, partitions: Int,
+                        value: String, init: Column)(
+                        update: (Column, Int) => Column): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
+      .repartition(partitions, col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val verts = GraphOps.vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
+    val out = Superstep.fixed(verts.select(col("id"), init.as(value)), iterations,
+        readsPrevOnce = true) { (x, step) =>
+      // shuffled-hash build of the vertex state (PageRank.stateSide
+      // rationale: no stats mid-loop → SMJ re-sorts the edge side)
+      val gathered = e.join(x.select(col("id").as("xid"), col(value))
+          .hint("shuffle_hash"),
+          col("src") === col("xid"))
+        .groupBy(col("dst").as("id")).agg(sum(col(value)).as("s"))
+      verts.join(gathered, Seq("id"), "left")
+        .select(col("id"), update(col("s"), step).as(value))
+    }
+    e.unpersist(blocking = false)
+    verts.unpersist(blocking = false)
+    out
+  }
+
   /** Katz centrality, fixed iterations (Katz 1953):
     *
     *   x_k(v) = β + α · Σ_{u→v} x_{k-1}(u),   x_0 = β
@@ -22,46 +53,12 @@ object Spectral {
     * fixed-iteration form is well-defined (and gate-replayable) for any
     * α. Unlike PageRank there is no per-source normalization, so hubs
     * pointed at by other hubs compound — the classic "status" index.
-    *
-    * Each step references the previous scores once, so the whole fixed
-    * run chains lazily with an eager truncation only every 5 steps (the
-    * PageRank runFixed pattern — one extra job per 5 iterations, not per
-    * iteration).
     */
   def katzFixed(edges: DataFrame, iterations: Int, alpha: Double = 0.005,
-                beta: Double = 1.0, partitions: Int = 32): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(partitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = GraphOps.vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
-
-    var x = verts.select(col("id"), lit(beta).as("katz"))
-    val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
-      // shuffled-hash build of the vertex state (PageRank.stateSide
-      // rationale: no stats mid-loop → SMJ re-sorts the edge side)
-      val gathered = e.join(x.select(col("id").as("xid"), col("katz"))
-          .hint("shuffle_hash"),
-          col("src") === col("xid"))
-        .groupBy(col("dst").as("id")).agg(sum(col("katz")).as("s"))
-      x = verts.join(gathered, Seq("id"), "left")
-        .select(col("id"),
-          (lit(beta) + lit(alpha) * coalesce(col("s"), lit(0.0))).as("katz"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pending += x
-      if (iter % 5 == 0 && iter < iterations) {
-        x = x.localCheckpoint(eager = true)
-        pending.foreach(_.unpersist(blocking = false))
-        pending.clear()
-      }
+                beta: Double = 1.0, partitions: Int = 32): DataFrame =
+    walkFixed(edges, iterations, partitions, "katz", lit(beta)) { (s, _) =>
+      lit(beta) + lit(alpha) * coalesce(s, lit(0.0))
     }
-    pending.dropRight(1).foreach(_.unpersist(blocking = false))
-    e.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    x
-  }
 
   /** Katz iterate in EXACT integer arithmetic for rational α = 1/invAlpha:
     * substituting z_k = invAlpha^k · x_k into x_k = β + α·Σ x_{k-1} (β=1)
@@ -85,37 +82,10 @@ object Spectral {
     require(iterations >= 1 && invAlpha >= 2)
     require(BigInt(invAlpha).pow(iterations) < BigInt(Long.MaxValue) / 4,
       s"invAlpha^iterations overflows: $invAlpha^$iterations")
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(partitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = GraphOps.vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
-
-    var z = verts.select(col("id"), lit(1L).as("z"))
-    val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var iter = 0
-    var scale = 1L
-    while (iter < iterations) {
-      iter += 1
-      scale *= invAlpha
-      val gathered = e.join(z.select(col("id").as("zid"), col("z"))
-          .hint("shuffle_hash"),
-          col("src") === col("zid"))
-        .groupBy(col("dst").as("id")).agg(sum(col("z")).as("s"))
-      z = verts.join(gathered, Seq("id"), "left")
-        .select(col("id"),
-          (lit(scale) + coalesce(col("s"), lit(0L))).cast("long").as("z"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pending += z
-      if (iter % 5 == 0 && iter < iterations) {
-        z = z.localCheckpoint(eager = true)
-        pending.foreach(_.unpersist(blocking = false))
-        pending.clear()
-      }
+    walkFixed(edges, iterations, partitions, "z", lit(1L)) { (s, step) =>
+      val scale = BigInt(invAlpha).pow(step).toLong
+      (lit(scale) + coalesce(s, lit(0L))).cast("long")
     }
-    pending.dropRight(1).foreach(_.unpersist(blocking = false))
-    e.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    z
   }
 
   /** Eigenvector-centrality power iteration in EXACT integer arithmetic:
@@ -133,40 +103,13 @@ object Spectral {
     *
     * Iterates grow like λ_max^k, so keep k small (3–5) or pre-scale:
     * w_k ≤ n·d_max^k must stay under 2^63 (checked via require on the
-    * caller-supplied bound when provided). Per-step state is referenced
-    * once → lazy chain, truncation every 5 steps.
+    * caller-supplied bound when provided).
     */
   def eigenvectorWalkCounts(edges: DataFrame, iterations: Int,
-                            partitions: Int = 32): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(partitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = GraphOps.vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
-
-    var w = verts.select(col("id"), lit(1L).as("walks"))
-    val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
-      val gathered = e.join(w.select(col("id").as("wid"), col("walks"))
-          .hint("shuffle_hash"),
-          col("src") === col("wid"))
-        .groupBy(col("dst").as("id")).agg(sum(col("walks")).as("s"))
-      w = verts.join(gathered, Seq("id"), "left")
-        .select(col("id"), coalesce(col("s"), lit(0L)).cast("long").as("walks"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pending += w
-      if (iter % 5 == 0 && iter < iterations) {
-        w = w.localCheckpoint(eager = true)
-        pending.foreach(_.unpersist(blocking = false))
-        pending.clear()
-      }
+                            partitions: Int = 32): DataFrame =
+    walkFixed(edges, iterations, partitions, "walks", lit(1L)) { (s, _) =>
+      coalesce(s, lit(0L)).cast("long")
     }
-    pending.dropRight(1).foreach(_.unpersist(blocking = false))
-    e.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    w
-  }
 
   /** Final-step normalized eigenvector scores from [[eigenvectorWalkCounts]]:
     * (id, walks, score) with score = walks / Σwalks (L1 direction). The

@@ -29,6 +29,42 @@ class PageRankFootprintSpec extends GraftSuite {
     assert(math.abs(s - 1.0) < 1e-6)
     edges.unpersist(blocking = false)
   }
+
+  test("every read-once fixed-step operator frees its superseded states") {
+    import graft.algo.{Absorbing, Spectral}
+    val edges = GraphOps.prepareForGather(
+      edgesDf(undirected(Fixtures.karatePairs)), 4)
+    edges.count()
+    val weighted = edges.withColumn("weight", (col("src") + col("dst")) % 3 + 1)
+    val seeds = spark.range(1, 4).select(col("id"))
+    val operators: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "PageRank.runFixed symmetric" ->
+        (() => PageRank.runFixed(edges, 12, partitions = 4, symmetric = true)),
+      "PageRank.runFixedWeighted" ->
+        (() => PageRank.runFixedWeighted(weighted, 12, partitions = 4)),
+      "PageRank.runPersonalizedFixed" ->
+        (() => PageRank.runPersonalizedFixed(edges, seeds, 12, partitions = 4)),
+      "Spectral.katzFixed" -> (() => Spectral.katzFixed(edges, 12, partitions = 4)),
+      "Spectral.katzWalkSums" ->
+        (() => Spectral.katzWalkSums(edges, 12, invAlpha = 2L, partitions = 4)),
+      "Spectral.eigenvectorWalkCounts" ->
+        (() => Spectral.eigenvectorWalkCounts(edges, 12, partitions = 4)),
+      "Absorbing.hitProbabilityFixed" ->
+        (() => Absorbing.hitProbabilityFixed(edges, seeds, 12, partitions = 4)),
+      "LabelPropagation.runFixed" ->
+        (() => LabelPropagation.runFixed(edges, 12, symmetric = true)))
+    operators.foreach { case (name, run) =>
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val out = run()
+      out.count()
+      val grown = spark.sparkContext.getPersistentRDDs.size - before
+      // setup tables + the final state + at most two live checkpoints —
+      // NOT one state per step (12 would leak here)
+      assert(grown <= 6, s"$name: persistent RDDs grew by $grown; superseded states leak")
+      out.unpersist(blocking = false)
+    }
+    edges.unpersist(blocking = false)
+  }
 }
 
 class CheckpointerFsSpec extends GraftSuite {

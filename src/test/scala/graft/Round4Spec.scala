@@ -96,28 +96,15 @@ class HitsRound4Spec extends GraftSuite {
     // its own job, so job counts say nothing about driver round-trips —
     // each blocking action (count / first / eager checkpoint) starts
     // exactly one SQL execution
-    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(
-          event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        event match {
-          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            execs.incrementAndGet()
-          case _ => ()
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val scores = Hits.runFixed(e, iterations = 3, partitions = 4)
-      scores.count()
-      Thread.sleep(1000) // listener bus is async
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val execs = countActions {
+      Hits.runFixed(e, iterations = 3, partitions = 4).count()
+    }.sqlExecutions
     // setup (verts.count) + ONE eager checkpoint per iteration + the final
     // count = iterations + 2. The round-3 shape ran two scalar `.first()`
     // actions per iteration on top of the checkpoint (3/iteration = 11
     // here) — VERDICT r3 task 7.
-    assert(execs.get() <= 3 + 2,
-      s"HITS ran ${execs.get()} SQL executions for 3 iterations — " +
+    assert(execs <= 3 + 2,
+      s"HITS ran $execs SQL executions for 3 iterations — " +
         "normalization actions are back on the driver path")
   }
 

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
-
 /** Round-6 optimization plan-shape assertions (VERDICT r5 task 1): the
   * k-means++ seeding loop must never plan a global (empty-partitionBy)
   * window — the per-step argmax is a TakeOrderedAndProject and the
@@ -10,35 +7,6 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 class Round6PlanSpec extends GraftSuite {
   import spark.implicits._
-
-  /** Collect every physical plan executed while `body` runs — the seeding
-    * loop materializes through checkpoints, so the interesting plans are
-    * the per-step executions, not the final (LogicalRDD) result plan.
-    */
-  private def executedPlans(body: => Unit): Seq[String] = {
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(name: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString() }
-      override def onFailure(name: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      // listener delivery is async: wait until the captured set is quiet
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      var last = -1
-      var stable = 0
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-        val n = plans.synchronized(plans.size)
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    } finally spark.listenerManager.unregister(listener)
-    plans.synchronized { plans.toSeq }
-  }
 
   test("kmeansppSeeds plans no window; argmax is TakeOrderedAndProject") {
     val v = (0L to 200L)

@@ -38,7 +38,83 @@ abstract class GraftSuite extends AnyFunSuite {
 
   def labelsMap(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Listener delivery is async: poll `size` until it holds still for
+    * three consecutive 200 ms ticks (30 s cap).
+    */
+  private def awaitQuiet(size: => Int): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    var last = -1
+    var stable = 0
+    while (stable < 3 && System.nanoTime() < deadline) {
+      Thread.sleep(200)
+      val n = size
+      if (n == last) stable += 1 else { stable = 0; last = n }
+    }
+  }
+
+  /** Spark jobs and SQL executions launched while `body` runs. AQE
+    * submits every exchange as its own job, so the job count tracks
+    * stages; each blocking action (count / first / eager checkpoint)
+    * starts exactly one SQL execution.
+    */
+  def countActions(body: => Unit): ActionCounts = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          event: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onOtherEvent(
+          event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        event match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            execs.incrementAndGet()
+          case _ => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      awaitQuiet(jobs.get() + execs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+    ActionCounts(jobs.get(), execs.get())
+  }
+
+  /** Every physical plan executed while `body` runs — loops that
+    * materialize through checkpoints hide their per-step plans behind the
+    * final (LogicalRDD) result plan.
+    */
+  def executedPlans(body: => Unit): Seq[String] = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(name: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString() }
+      override def onFailure(name: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      awaitQuiet(plans.synchronized(plans.size))
+    } finally spark.listenerManager.unregister(listener)
+    plans.synchronized { plans.toSeq }
+  }
+
+  /** Entries in the session's cache manager (package-private in Spark,
+    * hence the reflective call).
+    */
+  def cacheEntries(): Int = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
 }
+
+final case class ActionCounts(jobs: Int, sqlExecutions: Int)
 
 object Fixtures {
   /** Zachary karate club, 34 nodes / 78 undirected pairs (public dataset;
