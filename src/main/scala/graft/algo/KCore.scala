@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.Superstep
 import graft.graph.GraphOps
 
 /** k-core decomposition by distributed peeling — the standard
@@ -21,9 +22,11 @@ import graft.graph.GraphOps
   * shrinking input. The fixed point (usually ≤ tens of rounds on web
   * graphs) is the exact k-core.
   *
-  * The surviving-vertex state feeds two semi-joins per round, so each
-  * round eagerly truncates lineage (twice-referenced state in a lazy
-  * chain doubles the plan per round).
+  * The surviving-vertex state feeds two semi-joins per round, so every
+  * round's state is truncated before the next round reads it
+  * (twice-referenced state in a lazy chain doubles the plan per round):
+  * eagerly on the fixed schedules, by the convergence driver's probe on
+  * the fixpoint forms.
   */
 object KCore {
 
@@ -39,6 +42,39 @@ object KCore {
     require(k >= 1, s"k-core requires k >= 1 (got $k); the 0-core is " +
       "GraphOps.vertices(edges) by definition")
 
+  /** One unweighted peel round, lazy: the vertices of `alive` with at
+    * least k neighbors in `alive` (two semi-joins restrict the symmetric
+    * edge table `e`, then one partial-aggregated degree count).
+    */
+  private def peel(e: DataFrame, alive: DataFrame, k: Long): DataFrame =
+    e.join(alive.select(col("id").as("sid")), col("src") === col("sid"), "left_semi")
+      .join(alive.select(col("id").as("did")), col("dst") === col("did"), "left_semi")
+      .groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k)
+      .select(col("id"))
+
+  /** Peels level k from `alive` (`n` vertices) to its fixed point on the
+    * convergence driver: a round's probe counts the survivors, and an
+    * unchanged survivor set is the fixed point — and so is an empty one
+    * (the k-core does not exist; nothing left to peel).
+    *
+    * @return (survivors, rounds run, converged, survivor count)
+    */
+  private def peelToCore(e: DataFrame, alive: DataFrame, n: Long, k: Long,
+                         maxRounds: Int): (DataFrame, Int, Boolean, Long) = {
+    var left = n
+    val res = Superstep.converge("kcore", alive, if (n == 0L) 0 else maxRounds) {
+      (a, _) => peel(e, a, k)
+    }((next, _, _) => next.agg(count(lit(1))), (_, row) => {
+      val m = row.getLong(0)
+      val verdict = Superstep.Verdict(left - m, 0L, m == left || m == 0L)
+      left = m
+      verdict
+    })
+    (res.labels, res.iterations, res.converged, left)
+  }
+
   /** Exactly `rounds` peel rounds — the gate-able fixed-schedule form
     * (after convergence it equals the true k-core).
     */
@@ -51,14 +87,7 @@ object KCore {
     var r = 0
     while (r < rounds) {
       r += 1
-      val sub = e
-        .join(alive.select(col("id").as("sid")), col("src") === col("sid"), "left_semi")
-        .join(alive.select(col("id").as("did")), col("dst") === col("did"), "left_semi")
-      val next = sub.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("id"))
-        .localCheckpoint(eager = true)
+      val next = peel(e, alive, k).localCheckpoint(eager = true)
       alive.unpersist(blocking = false)
       alive = next
     }
@@ -109,31 +138,11 @@ object KCore {
     requireValidK(k)
     val e = GraphOps.symmetrize(edges.select("src", "dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var alive = GraphOps.vertices(e)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var n = alive.count()
-    var r = 0
-    var converged = false
-    while (!converged && r < maxRounds && n > 0L) {
-      r += 1
-      val sub = e
-        .join(alive.select(col("id").as("sid")), col("src") === col("sid"), "left_semi")
-        .join(alive.select(col("id").as("did")), col("dst") === col("did"), "left_semi")
-      val next = sub.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("id"))
-        .localCheckpoint(eager = true)
-      val m = next.count()
-      // an unchanged survivor set is the fixed point — and so is an empty
-      // one (the k-core does not exist; nothing left to peel)
-      converged = m == n || m == 0L
-      n = m
-      alive.unpersist(blocking = false)
-      alive = next
-    }
+    val verts = GraphOps.vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
+    val (core, rounds, converged, _) = peelToCore(e, verts, verts.count(), k, maxRounds)
+    if (core ne verts) verts.unpersist(blocking = false)
     e.unpersist(blocking = false)
-    (alive, r, converged)
+    (core, rounds, converged)
   }
 
   /** One fixed-schedule peel pass at level k starting from `alive`
@@ -146,14 +155,7 @@ object KCore {
     var r = 0
     while (r < rounds) {
       r += 1
-      val sub = e
-        .join(alive.select(col("id").as("sid")), col("src") === col("sid"), "left_semi")
-        .join(alive.select(col("id").as("did")), col("dst") === col("did"), "left_semi")
-      alive = sub.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("id"))
-        .localCheckpoint(eager = true)
+      alive = peel(e, alive, k).localCheckpoint(eager = true)
     }
     alive
   }
@@ -211,17 +213,12 @@ object KCore {
     val memberships = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var k = 1L
     while (n > 0L) {
-      var stable = false
-      var r = 0
-      while (!stable && r < maxRoundsPerK && n > 0L) {
-        r += 1
-        val next = peelRounds(e, alive, k, 1)
-        val m = next.count()
-        stable = m == n
-        n = m
-        alive = next
-      }
-      if (n > 0L) memberships += alive.select(col("id"), lit(k).as("k"))
+      val (core, _, converged, m) = peelToCore(e, alive, n, k, maxRoundsPerK)
+      require(converged,
+        s"coreness: the $k-core did not converge in $maxRoundsPerK rounds")
+      if (m > 0L) memberships += core.select(col("id"), lit(k).as("k"))
+      alive = core
+      n = m
       k += 1
     }
     val out =

@@ -57,24 +57,35 @@ object PageRank {
                             symmetric: Boolean = false,
                             weighted: Boolean = false,
                             keepDeg: Boolean = false) {
+    // the entries this setup registered: a table whose plan an earlier
+    // caller already cached shares that caller's entry and stays theirs
+    private val owned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private def keep(df: DataFrame): DataFrame = {
+      if (df.storageLevel == StorageLevel.NONE) owned += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
     val outDeg: DataFrame = {
       val d = edges.groupBy(col("src").as("id")).agg(
         if (weighted) sum(col("weight")).cast("long").as("wout")
         else count(lit(1)).as("outdeg"))
-      if (symmetric || keepDeg) d.persist(StorageLevel.MEMORY_AND_DISK) else d
+      if (symmetric || keepDeg) keep(d) else d
     }
     val verts: DataFrame =
       if (symmetric) outDeg.select(col("id"))
-      else GraphOps.vertices(
-          if (weighted) edges.select(col("src"), col("dst")) else edges)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val edgesDeg: DataFrame = edges.join(stateSide(outDeg), edges("src") === outDeg("id"))
-      .select(Seq(edges("src"), edges("dst")) ++
-        (if (weighted) Seq(edges("weight"), col("wout")) else Seq(col("outdeg"))): _*)
-      .repartition(partitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    lazy val dangling: DataFrame = verts.join(outDeg, Seq("id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      else keep(GraphOps.vertices(
+          if (weighted) edges.select(col("src"), col("dst")) else edges))
+    val edgesDeg: DataFrame = keep(
+      edges.join(stateSide(outDeg), edges("src") === outDeg("id"))
+        .select(Seq(edges("src"), edges("dst")) ++
+          (if (weighted) Seq(edges("weight"), col("wout")) else Seq(col("outdeg"))): _*)
+        .repartition(partitions, col("src")))
+    lazy val dangling: DataFrame = keep(verts.join(outDeg, Seq("id"), "left_anti"))
+
+    /** Releases the entries this setup registered; call only once nothing
+      * lazy reads them.
+      */
+    def release(): Unit = owned.foreach(_.unpersist(blocking = false))
   }
 
   /** The fixed-iteration power step of [[runFixed]], [[runFixedWeighted]]
@@ -148,19 +159,18 @@ object PageRank {
       if (autoSkew) GraphOps.planSkewAuto(edgesDeg, partitions, key = "src")
       else None
 
-    var ranks = initRanks
-      .map(_.select(col("id"), col("rank")))
-      .getOrElse(verts.select(col("id"), lit(1.0 / n).as("rank")))
+    // the rank rides the `label` column inside the loop: it is the column
+    // the durable snapshots (and their resume readers) carry
+    val init = initRanks
+      .map(_.select(col("id"), col("rank").as("label")))
+      .getOrElse(verts.select(col("id"), lit(1.0 / n).as("label")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    ranks.count()
+    init.count()
 
-    var iter = startIter
-    var converged = false
     val hist = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val metrics = scala.collection.mutable.ArrayBuffer[graft.model.SuperstepMetrics](
-      priorMetrics: _*)
-    while (iter < maxIter && !converged) {
-      iter += 1
+    val res = Superstep.converge("pagerank", init, maxIter, checkpointer,
+        checkpointEvery, startIter, priorMetrics) { (prev, _) =>
+      val ranks = prev.select(col("id"), col("label").as("rank"))
       val dMass =
         if (hasDangling)
           dangling.join(ranks, "id").agg(sum("rank")).first().getDouble(0)
@@ -181,38 +191,30 @@ object PageRank {
             .select(edgesDeg("dst").as("id"), (col("rank") / col("outdeg")).as("c"))
       }
       val sums = contribs.groupBy("id").agg(sum("c").as("s"))
-      val next = verts.join(sums, Seq("id"), "left")
+      verts.join(sums, Seq("id"), "left")
         .select(col("id"),
           (lit((1.0 - damping) / n) +
             lit(damping) * (coalesce(col("s"), lit(0.0)) + lit(dMass / n)))
-            .as("rank"))
-        // eager checkpoint only — a persist before it would register a
-        // cache entry the returned wrapper can never release
-        .localCheckpoint(eager = true)
-      // prev side hash-built (guide §3.1): the checkpointed rank table
-      // carries no stats, so the planner would sort-merge this
-      // vertex-sized co-partitioned join every iteration
-      val delta = next.join(ranks.withColumnRenamed("rank", "prev")
-          .hint("shuffle_hash"), "id")
-        .agg(max(abs(col("rank") - col("prev")))).first().getDouble(0)
-      hist += delta
-      ranks.unpersist(blocking = false)
-      ranks = next
-      converged = delta < eps
-      checkpointer.foreach { cp =>
-        metrics += graft.model.SuperstepMetrics("pagerank", iter,
-          changes = math.round(delta * 1e15), communities = 0L,
-          wallMillis = 0L)
-        if (iter % checkpointEvery == 0 || converged || iter >= maxIter) {
-          val reread = cp.checkpoint("pagerank", iter,
-            ranks.select(col("id"), col("rank").as("label")))
-          cp.writeMetrics("pagerank", metrics.toSeq)
-          ranks = reread.select(col("id"), col("label").as("rank"))
-        }
-      }
+            .as("label"))
+    }((next, prev, _) =>
+      next.join(prev.withColumnRenamed("label", "prev").hint("shuffle_hash"), "id")
+        .agg(max(abs(col("label") - col("prev")))),
+      (_, row) => {
+        val delta = row.getDouble(0)
+        hist += delta
+        Superstep.Verdict(math.round(delta * 1e15), 0L, delta < eps)
+      })
+    // the final round is always a snapshot, cadence round or not
+    val last = checkpointer match {
+      case Some(cp) if res.iterations > startIter && res.iterations % checkpointEvery != 0 =>
+        cp.checkpoint("pagerank", res.iterations, res.labels)
+      case _ => res.labels
     }
+    if (res.labels ne init) init.unpersist(blocking = false)
     skewPlan.foreach(GraphOps.unpersistSkew)
-    Result(ranks, iter, converged, hist.toSeq)
+    setup.release()
+    Result(last.select(col("id"), col("label").as("rank")), res.iterations,
+      res.converged, hist.toSeq)
   }
 
   /** Fixed-iteration variant (no convergence actions between steps) —
@@ -358,9 +360,7 @@ object PageRank {
           (lit(1.0 - damping) * col("reset") +
             lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
     }
-    edgesDeg.unpersist(blocking = false)
-    dangling.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
+    setup.release()
     ranks
   }
 
@@ -469,9 +469,7 @@ object PageRank {
           col("hist"))
         .select(col("id"), col("cash"), (col("hist") + col("cash")).as("hist"))
     }
-    edgesDeg.unpersist(blocking = false)
-    dangling.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
+    setup.release()
     out
   }
 

@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.Superstep
 
 /** Weighted single/multi-source shortest paths — distributed Bellman–Ford
   * relaxation over the (src, dst, weight) edge table, the weighted
@@ -166,25 +167,16 @@ object ShortestPaths {
     val e = weightedEdges.select(col("src"), col("dst"),
         col("weight").cast("long").as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // `persisted` tracks the handle whose storage the next round
-    // supersedes: the round-0 cache entry first (unpersist must target
-    // the exact cached plan, not a projection), then each round's
-    // checkpointed frame (whose blocks the ContextCleaner frees once
-    // unreferenced — the unpersist is a no-op there, kept for the round-0
-    // case); `dist` is the (id, dist) view
-    var persisted = sources.select(col("id"), lit(0L).as("dist"))
+    val init = sources.select(col("id"), lit(0L).as("dist"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = persisted
-    var r = 0
-    var changed = true
-    while (changed && r < maxRounds) {
-      r += 1
+    val res = Superstep.converge("sssp", init, maxRounds) { (prev, _) =>
+      val dist = prev.select(col("id"), col("dist"))
       val relaxed = e
         .join(dist.select(col("id").as("rid"), col("dist").as("rdist")),
           col("src") === col("rid"))
         .groupBy(col("dst").as("id"))
         .agg(min(col("rdist") + col("w")).as("cand"))
-      val next = dist
+      dist
         .join(relaxed.select(col("id").as("nid"), col("cand")),
           col("id") === col("nid"), "full")
         .select(
@@ -195,14 +187,10 @@ object ShortestPaths {
           // an improvement is a new vertex or a strictly smaller distance
           (col("id").isNull || (col("cand").isNotNull && col("cand") < col("dist")))
             .as("improved"))
-        .localCheckpoint(eager = true)
-      changed = next.filter(col("improved")).limit(1).count() > 0L
-      persisted.unpersist(blocking = false)
-      persisted = next
-      dist = next.select(col("id"), col("dist"))
-    }
+    }((next, _, _) => next.agg(count_if(col("improved"))), Superstep.untilZero)
+    if (res.labels ne init) init.unpersist(blocking = false)
     e.unpersist(blocking = false)
-    (dist, r, !changed)
+    (res.labels.select(col("id"), col("dist")), res.iterations, res.converged)
   }
 
   /** Time-respecting earliest-arrival reachability over a TEMPORAL edge

@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.Superstep
 
 /** Minimum spanning forest by Boruvka hooking — the distributed MSF
   * algorithm (Kruskal and Prim are inherently sequential): every round,
@@ -75,19 +76,17 @@ object SpanningForest {
           .select(col("comp"),
             when(col("tt") === col("comp"), least(col("comp"), col("to")))
               .otherwise(col("to")).as("par"))
-        var parent = g2.localCheckpoint(eager = true)
-        var changed = 1L
-        while (changed > 0L) {
+        // pointer doubling: after j hops every pointer spans 2^j tree
+        // levels, so 63 hops flatten any tree of at most 2^63 vertices
+        // and the 64th round sees no change
+        val jumped = Superstep.converge("boruvka_jump",
+            g2.localCheckpoint(eager = true), 64) { (parent, _) =>
           val hop = parent.select(col("comp").as("hc"), col("par").as("hp"))
-          val next = parent.join(hop, col("par") === col("hc"))
+          parent.join(hop, col("par") === col("hc"))
             .select(col("comp"), col("hp").as("par"))
-            .localCheckpoint(eager = true)
-          // prev side hash-built (guide §3.1): stats-less pointer table
-          changed = next.join(parent.withColumnRenamed("par", "prev")
-              .hint("shuffle_hash"), "comp")
-            .filter(col("par") =!= col("prev")).count()
-          parent = next
-        }
+        }(Superstep.changedRows("comp", "par"), Superstep.untilZero)
+        require(jumped.converged, "Boruvka pointer jumping did not converge in 64 rounds")
+        val parent = jumped.labels
         val newLabels = labels
           .join(parent.select(col("comp"), col("par")), Seq("comp"))
           .select(col("id"), col("par").as("comp"))

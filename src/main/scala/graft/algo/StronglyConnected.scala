@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.Superstep
 import graft.graph.GraphOps
 
 /** Strongly connected components of the DIRECTED link graph — the
@@ -56,30 +57,25 @@ object StronglyConnected {
         .join(remaining.select(col("id").as("sid")), col("src") === col("sid"), "left_semi")
         .join(remaining.select(col("id").as("did")), col("dst") === col("did"), "left_semi")
         .transform(graft.engine.Materialize.eager)
-      // 1. forward max-color fixpoint
-      var colors = remaining.select(col("id"), col("id").as("color"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      colors.count()
-      var changed = 1L
-      while (changed > 0L) {
+      // 1. forward max-color fixpoint. A color travels one edge per round
+      //    along a simple path, so `nRemaining` rounds always suffice.
+      val fixpoint = Superstep.converge("scc_color",
+          remaining.select(col("id"), col("id").as("color")),
+          math.min(nRemaining, Int.MaxValue.toLong).toInt) { (colors, _) =>
         // self-message fold (the CC superstep shape with max for min):
         // max(own ∪ predecessor colors) needs no keep-previous join, and
         // the stats-less color state hash-builds (PageRank.stateSide
         // rationale) instead of re-sorting the subgraph every round
-        val next = sub
+        sub
           .join(colors.select(col("id").as("cid"), col("color"))
             .hint("shuffle_hash"), col("src") === col("cid"))
           .select(col("dst").as("id"), col("color"))
           .union(colors.select(col("id"), col("color")))
           .groupBy("id").agg(max(col("color")).as("color"))
-          .localCheckpoint(eager = true)
-        // prev side hash-built (guide §3.1): stats-less checkpointed colors
-        changed = next.join(colors.withColumnRenamed("color", "prev")
-            .hint("shuffle_hash"), "id")
-          .filter(col("color") =!= col("prev")).count()
-        colors.unpersist(blocking = false)
-        colors = next
-      }
+      }(Superstep.changedRows("id", "color"), Superstep.untilZero)
+      require(fixpoint.converged,
+        s"SCC coloring did not converge in $nRemaining rounds")
+      val colors = fixpoint.labels
       // 2. backward BFS from every root within its own color class;
       //    visited(v) carries the root it reaches (= its color, so one
       //    column suffices)
@@ -122,7 +118,6 @@ object StronglyConnected {
         .transform(graft.engine.Materialize.eager)
       remaining.unpersist(blocking = false)
       visited.unpersist(blocking = false)
-      colors.unpersist(blocking = false)
       sub.unpersist(blocking = false)
       remaining = newRemaining
       nRemaining = remaining.count()
@@ -184,33 +179,24 @@ object StronglyConnected {
   def dagLevels(compEdges: DataFrame, maxRounds: Int = 1000): DataFrame = {
     val e = compEdges.select(col("csrc"), col("cdst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var lv = e.select(col("csrc").as("comp"))
+    val lv0 = e.select(col("csrc").as("comp"))
       .union(e.select(col("cdst"))).distinct()
       .select(col("comp"), lit(0L).as("level"))
       .localCheckpoint(eager = true)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0L) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"dagLevels did not stabilize in $maxRounds rounds — input has a cycle")
+    val levels = Superstep.converge("dag_levels", lv0, maxRounds) { (lv, _) =>
       val gathered = e
         .join(lv.select(col("comp").as("cid"), col("level").as("plv")),
           col("csrc") === col("cid"))
         .groupBy(col("cdst").as("comp"))
         .agg((max(col("plv")) + 1L).as("inLv"))
-      val next = lv.join(gathered, Seq("comp"), "left")
+      lv.join(gathered, Seq("comp"), "left")
         .select(col("comp"),
           greatest(col("level"), coalesce(col("inLv"), col("level"))).as("level"))
-        .localCheckpoint(eager = true)
-      // prev side hash-built (guide §3.1): stats-less checkpointed levels
-      changed = next.join(lv.withColumnRenamed("level", "prev")
-          .hint("shuffle_hash"), "comp")
-        .filter(col("level") =!= col("prev")).count()
-      lv = next
-    }
+    }(Superstep.changedRows("comp", "level"), Superstep.untilZero)
+    require(levels.converged,
+      s"dagLevels did not stabilize in $maxRounds rounds — input has a cycle")
     e.unpersist(blocking = false)
-    lv
+    levels.labels
   }
 
   /** Bounded-length path counts from the DAG's sources: paths(v) =

@@ -1,13 +1,16 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.model.SuperstepMetrics
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Generic Pregel-style superstep driver (SURVEY.md §2.3-2.5).
+/** The two Pregel-style superstep drivers (SURVEY.md §2.3-2.5):
+  * [[Superstep.fixed]] runs a fixed number of steps with no convergence
+  * actions, and [[Superstep.converge]] runs rounds until a one-row probe
+  * aggregate says stop ([[Superstep.run]] is LP/CC on it).
   *
   * The reference's host loop (`algorithms.h:373-473` sequential,
   * `algorithms.h:650-773` GPU sync) is: snapshot labels → per-node update
@@ -17,11 +20,9 @@ import scala.collection.mutable.ArrayBuffer
   * the stopping rules are ported in [[Convergence]].
   *
   * Plan-growth control: iterative DataFrame loops grow the logical plan
-  * without bound; every `checkpointEvery` iterations the label table is
-  * written to the run's checkpoint directory and re-read, truncating
-  * lineage and simultaneously providing the resumable per-superstep
-  * checkpoint demanded by the north_rule. Between checkpoints,
-  * `localCheckpoint` keeps the plan shallow.
+  * without bound, so both drivers truncate lineage; the convergence
+  * driver's durable checkpoints double as the resumable per-superstep
+  * checkpoint demanded by the north_rule.
   */
 object Superstep {
 
@@ -112,47 +113,146 @@ object Superstep {
     state
   }
 
-  /** Run `update` until convergence.
+  /** What a convergence caller reads from one round's probe row: the
+    * round's metrics scalars and whether to stop.
+    */
+  final case class Verdict(changes: Long, communities: Long, stop: Boolean)
+
+  /** Rounds until `stop` says so — the convergence driver of every
+    * fixpoint whose stability test is one aggregate per round (LP, CC,
+    * PageRank to tolerance, the SCC color fixpoint, DAG levels, Borůvka's
+    * pointer jump, k-core peeling, shortest paths). One round is the
+    * reference host loop (`algorithms.h:373-473`): the Jacobi `step` from
+    * the previous state, then ONE driver action, the caller's one-row
+    * `probe` aggregate — over `next` alone or over `next ⋈ prev` with the
+    * prev side hash-built (guide §3.1: a truncated state carries no real
+    * statistics, so an unhinted vertex-keyed join plans a sort-merge that
+    * re-sorts both sides every round). All monitored scalars come from
+    * that one pass, as in LMFAO's batched aggregates.
+    *
+    * The driver owns every per-round mechanic:
+    *   - truncation: a durable [[Checkpointer.checkpoint]] every
+    *     `checkpointEvery` rounds when a checkpointer is set (also the
+    *     resume point), a LAZY `localCheckpoint` otherwise. Lazy is safe
+    *     because the probe of round i materializes (and truncates) the
+    *     state of round i before step i+1 reads it, so a step that reads
+    *     its state twice still reads stored blocks. (The lazy
+    *     checkpoint is an SQL execution of its own, in which AQE runs the
+    *     step's shuffle-map stages; the state's last stage runs inside the
+    *     probe's job.) An eager checkpoint followed by a separate
+    *     stability action runs that last stage as a job of its own every
+    *     round (round 3's LP regression 15.5→26.9 s);
+    *   - release of the superseded states it created (a durable
+    *     snapshot's re-read is a cache entry). It never releases `init`,
+    *     which stays the caller's;
+    *   - the round cap `lastRound` and resume numbering: rounds are
+    *     numbered from `startIter + 1`, so a resumed run never renumbers
+    *     (or overwrites) snapshots it did not write;
+    *   - one [[SuperstepMetrics]] record per round, appended to
+    *     `priorMetrics` and rewritten to `metrics.json` every round when a
+    *     checkpointer is set.
+    *
+    * Statistics: a truncated state keeps the size ESTIMATE of the plan
+    * that produced it, not its real size. A step that joins the state
+    * with itself (or with a function of itself) multiplies that estimate
+    * by itself every round — the digits double per round, the
+    * `BigInteger.multiply` stall [[Materialize]] describes. Such loops
+    * stay off this driver: `ConnectedComponents.runAlternating` and
+    * `Truss.kTruss` keep real statistics through [[Materialize.eager]].
+    * `StronglyConnected.dagLevels`, Borůvka's pointer jump and
+    * `ShortestPaths.run` do join their state with a function of itself;
+    * they already compounded the estimate under the bare eager checkpoint
+    * they used before, and still do here.
+    *
+    * @param lastRound the last round number this call may run (a total-run
+    *                  cap: a resumed call passes the same value)
+    * @param step      (state after round i−1, i) → state after round i
+    * @param probe     (next, prev, i) → a one-row aggregate
+    * @param stop      (i, probe row) → the round's [[Verdict]]
+    * @return the last state, the last round number, and whether `stop`
+    *         ended the run (false when `lastRound` did)
+    */
+  def converge(algorithm: String, init: DataFrame, lastRound: Int,
+               checkpointer: Option[Checkpointer] = None,
+               checkpointEvery: Int = 5, startIter: Int = 0,
+               priorMetrics: Seq[SuperstepMetrics] = Nil)(
+      step: (DataFrame, Int) => DataFrame)(
+      probe: (DataFrame, DataFrame, Int) => DataFrame,
+      stop: (Int, Row) => Verdict): Result = {
+    val metrics = ArrayBuffer.from(priorMetrics)
+    var state = init
+    var iter = startIter
+    var converged = false
+    while (iter < lastRound && !converged) {
+      val t0 = System.nanoTime()
+      iter += 1
+      val prev = state
+      val next = step(prev, iter)
+      state = checkpointer match {
+        case Some(cp) if iter % checkpointEvery == 0 => cp.checkpoint(algorithm, iter, next)
+        case _ => next.localCheckpoint(eager = false)
+      }
+      val verdict = stop(iter, probe(state, prev, iter).first())
+      metrics += SuperstepMetrics(algorithm, iter, verdict.changes,
+        verdict.communities, (System.nanoTime() - t0) / 1000000L)
+      checkpointer.foreach(_.writeMetrics(algorithm, metrics.toSeq))
+      if (prev ne init) prev.unpersist(blocking = false)
+      converged = verdict.stop
+    }
+    Result(state, iter, converged, metrics.toSeq)
+  }
+
+  /** Probe for a state keyed by `key`: the number of rows whose `value`
+    * differs from the previous round's.
+    */
+  def changedRows(key: String, value: String)(
+      next: DataFrame, prev: DataFrame, iter: Int): DataFrame =
+    next.join(prev.withColumnRenamed(value, "prev").hint("shuffle_hash"), key)
+      .agg(coalesce(sum(when(col(value) =!= col("prev"), 1L).otherwise(0L)), lit(0L)))
+
+  /** Stop when the probe's count (column 0) is zero. */
+  def untilZero(iter: Int, row: Row): Verdict =
+    Verdict(row.getLong(0), 0L, row.getLong(0) == 0L)
+
+  /** Label propagation and connected components on [[converge]]: run
+    * `update` until the [[Convergence]] rules stop it.
     *
     * @param initLabels  (id, label) initial state
     * @param update      previous labels → new labels (must return (id, label))
-    * @param countChanges if true, convergence uses the changed-vertex count
-    *                     (reference `lp_compare_labels`, `kernels.h:719-735`)
+    * @param earlyStop   curve-fit early stop (see [[Convergence]])
+    * @param plateau     plateau rule; monotone algorithms (CC) disable it
     * @param checkpointer optional durable per-superstep checkpointing
-    */
-  /** @param startIter    resume offset: iteration numbering continues at
-    *                      `startIter + 1` so a resumed run never renumbers
-    *                      (and never overwrites) snapshots it did not write
-    *                      — pair with [[Checkpointer.pruneAbove]] to drop
-    *                      stale post-crash snapshots first. NOTE: `maxIter`
-    *                      counts iterations THIS invocation may run (cap =
-    *                      startIter + maxIter); a resuming caller that
-    *                      wants a total-run budget must pass the remainder
-    *                      (see [[graft.cli.Main]], ADVICE r2)
-    * @param priorMetrics  metrics history of the interrupted run up to the
-    *                      resume point; re-emitted in metrics.json (no
-    *                      history loss) and used to seed the convergence
-    *                      rules' community-count history
-    * @param identityInit  caller asserts `initLabels` maps every vertex to
-    *                      itself (label == id). Iteration 1's convergence
-    *                      scalars then fold to a join-free aggregate over
-    *                      the new labels alone (`label != id` counts the
-    *                      changes), removing the prev-side join of the
-    *                      first superstep (guide §2.4). Requires
-    *                      `startIter == 0`: a resumed run's init is the
-    *                      resumed labels, not the identity.
+    * @param maxIter     iterations THIS invocation may run (cap =
+    *                    startIter + maxIter); a resuming caller that wants a
+    *                    total-run budget must pass the remainder (see
+    *                    [[graft.cli.Main]], ADVICE r2)
+    * @param startIter   resume offset (see [[converge]]) — pair with
+    *                    [[Checkpointer.pruneAbove]] to drop stale post-crash
+    *                    snapshots first
+    * @param priorMetrics metrics history of the interrupted run up to the
+    *                    resume point; re-emitted in metrics.json (no
+    *                    history loss) and used to seed the convergence
+    *                    rules' community-count history
+    * @param identityInit caller asserts `initLabels` maps every vertex to
+    *                    itself (label == id). Iteration 1's convergence
+    *                    scalars then fold to a join-free aggregate over the
+    *                    new labels alone (`label != id` counts the changes;
+    *                    next covers exactly the vertex set, the invariant
+    *                    every later prev⋈next join already relies on),
+    *                    removing the prev-side join of the first superstep
+    *                    (guide §2.4). Requires `startIter == 0`: a resumed
+    *                    run's init is the resumed labels, not the identity.
     * @param materializeInit false = skip the setup persist+count of the
-    *                      init table — correct only when iteration 1's
-    *                      update references init AT MOST once (it is then
-    *                      computed inside that iteration's single job
-    *                      instead of a separate setup action; a
-    *                      twice-referenced lazy init would be computed
-    *                      twice). Callers assert this about their own
-    *                      update function. Requires `identityInit`:
-    *                      otherwise iteration 1's convergence join reads
-    *                      the init a second time. The init table may then
-    *                      never be evaluated at all (LP's symmetric first
-    *                      superstep reads only the edge table).
+    *                    init table — correct only when iteration 1's update
+    *                    references init AT MOST once (it is then computed
+    *                    inside that iteration's single job instead of a
+    *                    separate setup action; a twice-referenced lazy init
+    *                    would be computed twice). Callers assert this about
+    *                    their own update function. Requires `identityInit`:
+    *                    otherwise iteration 1's convergence join reads the
+    *                    init a second time. The init table may then never
+    *                    be evaluated at all (LP's symmetric first superstep
+    *                    reads only the edge table).
     */
   def run(
       algorithm: String,
@@ -173,87 +273,34 @@ object Superstep {
     require(materializeInit || identityInit,
       "materializeInit = false requires identityInit")
 
-    val cap = startIter + maxIter.getOrElse(maxIterations(nNodes))
-    val metrics = ArrayBuffer.empty[SuperstepMetrics]
-    metrics ++= priorMetrics
     val conv = new Convergence(earlyStop, plateau)
     priorMetrics.foreach(m => conv.seed(m.communities))
-
-    var labels =
+    val init =
       if (materializeInit) {
         val l = initLabels.persist(StorageLevel.MEMORY_AND_DISK)
         l.count()
         l
       } else initLabels
-    var iter = startIter
-    var converged = false
-
-    while (iter < cap && !converged) {
-      val t0 = System.nanoTime()
-      iter += 1
-      val prev = labels
-      var next = update(prev)
-        .select(col("id"), col("label"))
-
-      // Lineage truncation: durable checkpoint every K supersteps (also the
-      // resume point), LAZY local checkpoint otherwise — the convergence
-      // aggregation below is then the ONE job per superstep, and running it
-      // materializes + caches the new labels and truncates their lineage as
-      // a side effect. The Jacobi update references `prev` exactly once, so
-      // nothing is computed twice. (Round 3 ran `persist +
-      // localCheckpoint(eager = true)` here — a full extra job per
-      // superstep before the convergence job over the same data — which
-      // regressed lp_converge 15.5→26.9 s; same lesson as runFixed's
-      // round-1 5× regression, VERDICT r3 #2.)
-      next = checkpointer match {
-        case Some(cp) if iter % checkpointEvery == 0 =>
-          cp.checkpoint(algorithm, iter, next)
-        case _ =>
-          next.localCheckpoint(eager = false)
-      }
-
-      // Convergence scalars — the only data that crosses to the driver
-      // (the reference copies the whole labels array back per iteration,
-      // `algorithms.h:735-739`; we keep labels distributed). Both scalars
-      // come from ONE aggregation job over the prev⋈next join — except on
-      // iteration 1 of an identity-init run, where prev maps every id to
-      // itself and the join folds away: `label != id` over next alone is
-      // the same changed-vertex count (next covers exactly the vertex set,
-      // the invariant every later prev⋈next join already relies on).
-      val convRow = (if (identityInit && iter == startIter + 1)
-          next.agg(
-            coalesce(sum(when(col("label") =!= col("id"), 1L).otherwise(0L)),
-              lit(0L)).as("chg"),
-            countDistinct(col("label")).as("com"))
-        else
-          // prev side pinned to a shuffled-hash build (guide §3.1): the
-          // lazily-checkpointed prev carries no stats, so the planner
-          // falls back to sort-merge — two vertex-table sorts per
-          // superstep, rescued only by AQE's runtime broadcast rewrite
-          // (which cannot fire at web-scale vertex counts). Both sides
-          // are hash-partitioned on id by the preceding aggregations, so
-          // the hash join runs exchange-free with no per-superstep
-          // driver broadcast hop.
-          next.join(prev.withColumnRenamed("label", "labelAnt")
-              .hint("shuffle_hash"), "id")
-            .agg(
-              coalesce(sum(when(col("label") =!= col("labelAnt"), 1L).otherwise(0L)),
-                lit(0L)).as("chg"),
-              countDistinct(col("label")).as("com")))
-        .first()
-      val changes = convRow.getLong(0)
-      val communities = convRow.getLong(1)
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-
-      metrics += SuperstepMetrics(algorithm, iter, changes, communities, wallMs)
-      checkpointer.foreach(_.writeMetrics(algorithm, metrics.toSeq))
-
-      prev.unpersist(blocking = false)
-      labels = next
-      converged = conv.shouldStop(iter, changes, communities)
-    }
-
-    Result(labels, iter, converged, metrics.toSeq)
+    // changed-vertex and community counts in one aggregation (reference
+    // `lp_compare_labels`, `kernels.h:719-735`)
+    def scalars(changed: Column)(df: DataFrame): DataFrame = df.agg(
+      coalesce(sum(when(changed, 1L).otherwise(0L)), lit(0L)).as("chg"),
+      countDistinct(col("label")).as("com"))
+    val res = converge(algorithm, init,
+        startIter + maxIter.getOrElse(maxIterations(nNodes)),
+        checkpointer, checkpointEvery, startIter, priorMetrics)(
+        (prev, _) => update(prev).select(col("id"), col("label")))(
+      (next, prev, iter) =>
+        if (identityInit && iter == 1) next.transform(scalars(col("label") =!= col("id")))
+        else next.join(prev.withColumnRenamed("label", "labelAnt")
+            .hint("shuffle_hash"), "id")
+          .transform(scalars(col("label") =!= col("labelAnt"))),
+      (iter, row) => {
+        val (changes, communities) = (row.getLong(0), row.getLong(1))
+        Verdict(changes, communities, conv.shouldStop(iter, changes, communities))
+      })
+    if (res.labels ne init) init.unpersist(blocking = false)
+    res
   }
 }
 

@@ -15,10 +15,15 @@ import graft.sources.{PagesSynth, TextExtract}
   *
   * Usage:   sbt "runMain graft.tools.BenchExtra <query> [reps]"
   *   query ∈ lp_fixed5 | lp_converge | cc_converge | pagerank_10 |
-  *           triangles | all
+  *           triangles | all | scaling | registry
   * Env:     SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PAGES (default
   *          200000), SPARK_GRAFT_PLANS=1 → print executed plans once.
-  * Output:  one line per rep: `EXTRA <query> <seconds>`.
+  *          registry: SPARK_GRAFT_SF_DIR (default sf0.01),
+  *          SPARK_GRAFT_ONLY (comma-separated subset, as in Verify).
+  * Output:  one line per rep: `EXTRA <query> <seconds>`; registry mode
+  *          prints one `REGQ <name> <seconds> <jobs>` line per query,
+  *          where jobs = the Spark jobs that query started, so one sweep
+  *          per commit gives the job table of a change.
   */
 object BenchExtra {
 
@@ -81,17 +86,26 @@ object BenchExtra {
 
     // registry mode: time EVERY declared query at the given scale factor
     // with the noop sink (guide §1.4) — the measure-first sweep over the
-    // whole oracle-gated surface. Prints one `REGQ <name> <sec>` line per
-    // query, slowest last. Env: SPARK_GRAFT_SF_DIR (default sf0.01).
+    // whole oracle-gated surface, slowest last. Each query starts with an
+    // empty cache, so its job count does not depend on the queries before
+    // it; jobs are counted by the description every job of the query
+    // inherits (broadcast and subquery jobs included).
     if (query == "registry") {
       val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-      // SPARK_GRAFT_ONLY: comma-separated subset (same contract as Verify)
       val only = sys.env.get("SPARK_GRAFT_ONLY")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
         .filter(_.nonEmpty)
+      val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .foreach(d => jobs.merge(d, 1, (a: Integer, b: Integer) => a + b))
+      })
       val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
       graft.SparkEntry.queries.toSeq.sortBy(_._1)
         .filter(kv => only.forall(_(kv._1))).foreach { case (name, fn) =>
+        spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(s"registry: $name")
         try {
           val (_, sec) = time {
@@ -102,7 +116,10 @@ object BenchExtra {
           System.err.println(s"[registry] $name failed: ${e.getMessage}")
         }
       }
-      results.sortBy(_._2).foreach { case (n, s) => println(f"REGQ $n $s%.3f") }
+      Thread.sleep(2000) // listener delivery is asynchronous
+      results.sortBy(_._2).foreach { case (n, s) =>
+        println(f"REGQ $n $s%.3f ${jobs.getOrDefault(s"registry: $n", 0)}")
+      }
       println(f"REGQ_TOTAL ${results.map(_._2).sum}%.1f over ${results.size} queries")
       spark.stop()
       return

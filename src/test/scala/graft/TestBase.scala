@@ -53,18 +53,25 @@ abstract class GraftSuite extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs and SQL executions launched while `body` runs. AQE
-    * submits every exchange as its own job, so the job count tracks
-    * stages; each blocking action (count / first / eager checkpoint)
-    * starts exactly one SQL execution.
+  /** Spark jobs, SQL executions and result jobs launched while `body`
+    * runs. AQE submits every exchange as its own map-stage job, so the job
+    * count tracks stages; each blocking action (count / first / eager
+    * checkpoint) starts exactly one SQL execution — and so does a lazy
+    * `localCheckpoint`, in which AQE runs the shuffle-map stages only. A
+    * result job is one whose final stage is a result stage, not a shuffle
+    * map: one per blocking action (plus one per broadcast).
     */
   def countActions(body: => Unit): ActionCounts = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val execs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val results = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          event: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          event: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
+        if (org.apache.spark.scheduler.StageKind.endsInResult(event))
+          results.incrementAndGet()
+      }
       override def onOtherEvent(
           event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
         event match {
@@ -78,7 +85,7 @@ abstract class GraftSuite extends AnyFunSuite {
       body
       awaitQuiet(jobs.get() + execs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
-    ActionCounts(jobs.get(), execs.get())
+    ActionCounts(jobs.get(), execs.get(), results.get())
   }
 
   /** Every physical plan executed while `body` runs — loops that
@@ -114,7 +121,7 @@ abstract class GraftSuite extends AnyFunSuite {
   }
 }
 
-final case class ActionCounts(jobs: Int, sqlExecutions: Int)
+final case class ActionCounts(jobs: Int, sqlExecutions: Int, resultJobs: Int)
 
 object Fixtures {
   /** Zachary karate club, 34 nodes / 78 undirected pairs (public dataset;
