@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.{Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** Distance-based centralities over the multi-source BFS levels that
@@ -65,7 +66,8 @@ object Centrality {
     * is partial-aggregable, so map-side combine bounds the shuffle by
     * distinct vertices per partition) then merged with the previous ball.
     * State is referenced twice per step (gather + merge), so each round
-    * eagerly truncates.
+    * of the convergence driver truncates eagerly with real statistics;
+    * the round's one probe is N(h).
     *
     * Stops early when N(h) grows by less than `tolerance` relative — on
     * a connected graph that is the effective-diameter horizon, h ≪ n.
@@ -86,36 +88,33 @@ object Centrality {
     import spark.implicits._
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var balls = graft.graph.GraphOps.vertices(e)
+    val balls0 = GraphOps.vertices(e)
       .groupBy(col("id")).agg(hll_sketch_agg(col("id"), lgConfigK).as("sk"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(Materialize.eager)
     // coalesce: an empty vertex set sums to NULL, and the series should
     // degrade to a single (0, 0) row rather than NPE
-    def total(b: DataFrame): Long =
+    def total(b: DataFrame): DataFrame =
       b.agg(coalesce(sum(hll_sketch_estimate(col("sk"))), lit(0L)))
-        .first().getLong(0)
-    var prevN = total(balls)
+    var prevN = total(balls0).first().getLong(0)
     val series = scala.collection.mutable.ArrayBuffer[(Long, Long)]((0L, prevN))
-    var h = 0
-    var done = prevN == 0L // empty graph: the series is just (0, 0)
-    while (!done && h < maxDepth) {
-      h += 1
+    // empty graph: no rounds, the series is just (0, 0)
+    Superstep.converge("hyperanf", balls0,
+        if (prevN == 0L) 0 else maxDepth, realStats = true) { (balls, _) =>
       val gathered = e.join(balls, e("dst") === balls("id"))
         .groupBy(e("src").as("gid"))
         .agg(hll_union_agg(col("sk")).as("gsk"))
-      val next = balls.join(gathered, balls("id") === col("gid"), "left")
+      balls.join(gathered, balls("id") === col("gid"), "left")
         .select(col("id"),
           when(col("gsk").isNull, col("sk"))
             .otherwise(hll_union(col("sk"), col("gsk"))).as("sk"))
-        .transform(graft.engine.Materialize.eager)
-      balls.unpersist(blocking = false)
-      balls = next
-      val n = total(balls)
+    }((next, _, _) => total(next), (h, row) => {
+      val n = row.getLong(0)
       series += ((h.toLong, n))
-      done = n <= prevN || (n - prevN).toDouble / prevN < tolerance
+      val verdict = Superstep.Verdict(n - prevN, 0L,
+        n <= prevN || (n - prevN).toDouble / prevN < tolerance)
       prevN = n
-    }
-    balls.unpersist(blocking = false)
+      verdict
+    })
     e.unpersist(blocking = false)
     series.toSeq.toDF("depth", "pairs_est")
   }

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.{Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** Influence-maximization operators over the link graph: VoteRank seed
@@ -41,12 +42,10 @@ object Influence {
     val scal = e.agg(count(lit(1)).as("slots")).crossJoin(
       GraphOps.vertices(e).agg(count(lit(1)).as("n"))).first()
     val delta = math.round(1000000.0 * scal.getLong(1) / scal.getLong(0))
-    var va = GraphOps.vertices(e).select(col("id"), lit(1000000L).as("va"))
-      .transform(graft.engine.Materialize.eager)
+    val va0 = GraphOps.vertices(e).select(col("id"), lit(1000000L).as("va"))
+      .transform(Materialize.eager)
     var selected = List.empty[(Long, Long, Long)] // (rank, id, score)
-    var r = 0
-    while (r < k) {
-      r += 1
+    Superstep.fixed(va0, k, readsPrevOnce = false) { (va, r) =>
       val chosen = selected.map(_._2)
       val scores = e.join(va.withColumnRenamed("id", "nid"),
           col("dst") === col("nid"))
@@ -58,13 +57,12 @@ object Influence {
       selected = selected :+ ((r.toLong, wid, wscore))
       val nbrs = e.filter(col("src") === wid).select(col("dst").as("id"))
         .distinct().withColumn("hit", lit(1L))
-      va = va.join(nbrs, Seq("id"), "left")
+      va.join(nbrs, Seq("id"), "left")
         .select(col("id"),
           when(col("id") === wid, lit(0L))
             .when(col("hit").isNotNull,
               greatest(col("va") - delta, lit(0L)))
             .otherwise(col("va")).as("va"))
-        .transform(graft.engine.Materialize.eager)
     }
     selected.toDF("rank", "id", "score_e6")
   }
@@ -87,11 +85,9 @@ object Influence {
     require(rounds >= 1 && tden >= 1)
     val e = edges.select(col("src"), col("dst"))
     val deg = GraphOps.degrees(e)
-    var active = seeds.select(col("id"), lit(0L).as("round"))
-      .transform(graft.engine.Materialize.eager)
-    var r = 0
-    while (r < rounds) {
-      r += 1
+    val seeded = seeds.select(col("id"), lit(0L).as("round"))
+      .transform(Materialize.eager)
+    Superstep.fixed(seeded, rounds, readsPrevOnce = false) { (active, r) =>
       val gathered = e.join(active.select(col("id").as("aid")),
           col("dst") === col("aid"))
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("na"))
@@ -102,10 +98,8 @@ object Influence {
         .join(thresholds, Seq("id"))
         .filter(col("na") * tden >= col("tnum") * col("degree"))
         .select(col("id"), lit(r.toLong).as("round"))
-      active = active.union(fresh)
-        .transform(graft.engine.Materialize.eager)
+      active.union(fresh)
     }
-    active
   }
 
   /** Deterministic independent-cascade spread (Kempe–Kleinberg–Tardos
@@ -130,12 +124,10 @@ object Influence {
     val live = edges.select(col("src"), col("dst"))
       .filter(graft.text.TextIndex.md5Uniform(
         concat_ws(":", col("src"), col("dst"))) % 1000 < permille)
-      .transform(graft.engine.Materialize.eager)
-    var active = seeds.select(col("id"), lit(0L).as("round"))
-      .transform(graft.engine.Materialize.eager)
-    var r = 0
-    while (r < rounds) {
-      r += 1
+      .transform(Materialize.eager)
+    val seeded = seeds.select(col("id"), lit(0L).as("round"))
+      .transform(Materialize.eager)
+    Superstep.fixed(seeded, rounds, readsPrevOnce = false) { (active, r) =>
       val fresh = live.join(active.select(col("id").as("aid")),
           col("dst") === col("aid"))
         .select(col("src").as("id")).distinct()
@@ -143,9 +135,7 @@ object Influence {
           Seq("id"), "left")
         .filter(col("already").isNull)
         .select(col("id"), lit(r.toLong).as("round"))
-      active = active.union(fresh)
-        .transform(graft.engine.Materialize.eager)
+      active.union(fresh)
     }
-    active
   }
 }

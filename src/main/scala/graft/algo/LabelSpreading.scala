@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.{Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** Continuous label spreading (Zhu–Ghahramani harmonic propagation with
@@ -41,13 +42,11 @@ object LabelSpreading {
     require(supersteps >= 1)
     val deg = GraphOps.degrees(edges)
       .select(col("id"), col("degree"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(Materialize.eager)
     val y = seeds.select(col("id"), col("cls"), lit(1.0).as("y"))
-      .transform(graft.engine.Materialize.eager)
-    var f = y.select(col("id"), col("cls"), col("y").as("f"))
-    var t = 0
-    while (t < supersteps) {
-      t += 1
+      .transform(Materialize.eager)
+    val f0 = y.select(col("id"), col("cls"), col("y").as("f"))
+    Superstep.fixed(f0, supersteps, readsPrevOnce = false) { (f, _) =>
       val gathered = edges
         .join(f, edges("dst") === f("id"))
         .select(edges("src").as("id"), col("cls"), col("f"))
@@ -55,14 +54,12 @@ object LabelSpreading {
         .join(deg, Seq("id"))
         .select(col("id"), col("cls"),
           (lit(alpha) * col("s") / col("degree")).as("df"))
-      f = gathered
+      gathered
         .join(y, Seq("id", "cls"), "outer")
         .select(col("id"), col("cls"),
           (coalesce(col("df"), lit(0.0)) +
             lit(1.0 - alpha) * coalesce(col("y"), lit(0.0))).as("f"))
         .filter(col("f") > 0)
-        .transform(graft.engine.Materialize.eager)
     }
-    f
   }
 }

@@ -2,7 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.engine.Materialize
+import graft.engine.{Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** Deterministic distributed greedy maximal matching — Luby's algorithm
@@ -27,33 +27,39 @@ object Matching {
     */
   def greedyRounds(edges: DataFrame, rounds: Int, seed: Long): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    var canon = GraphOps.canonical(edges)
+    val canon = GraphOps.canonical(edges)
       .select(col("src"), col("dst"),
         md5(concat_ws(":", col("src"), col("dst"), lit(seed))).as("prio"))
       .transform(Materialize.eager)
-    var matched: DataFrame = null
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      val inc = canon.select(col("src").as("v"), col("prio"))
-        .union(canon.select(col("dst").as("v"), col("prio")))
+    selectRounds(canon, Nil, rounds)
+  }
+
+  /** The selection rounds over `canon` = (src, dst, carried…, prio):
+    * returns (src, dst, carried…, round) for each matched edge.
+    */
+  private def selectRounds(canon: DataFrame, carried: Seq[String],
+                           rounds: Int): DataFrame = {
+    val kept = (Seq("src", "dst") ++ carried).map(col)
+    val picked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    Superstep.fixed(canon, rounds, readsPrevOnce = false) { (alive, r) =>
+      val inc = alive.select(col("src").as("v"), col("prio"))
+        .union(alive.select(col("dst").as("v"), col("prio")))
       val vmin = inc.groupBy("v").agg(min(col("prio")).as("pmin"))
-      val sel = canon
+      val sel = alive
         .join(vmin.select(col("v").as("src"), col("pmin").as("ps")), "src")
         .join(vmin.select(col("v").as("dst"), col("pmin").as("pd")), "dst")
         .filter(col("prio") === col("ps") && col("prio") === col("pd"))
-        .select(col("src"), col("dst"), lit(r.toLong).as("round"))
+        .select(kept :+ lit(r.toLong).as("round"): _*)
         .transform(Materialize.eager)
-      matched = if (matched == null) sel else matched.union(sel)
+      picked += sel
       val mv = sel.select(col("src").as("id"))
         .union(sel.select(col("dst"))).distinct()
-      canon = canon
+      alive
         .join(mv.select(col("id").as("src")), Seq("src"), "left_anti")
         .join(mv.select(col("id").as("dst")), Seq("dst"), "left_anti")
-        .select(col("src"), col("dst"), col("prio"))
-        .transform(Materialize.eager)
+        .select(kept :+ col("prio"): _*)
     }
-    matched
+    picked.reduce(_ union _)
   }
 
   /** Weighted contraction: [[contract]] for a WEIGHTED slot table —
@@ -93,7 +99,7 @@ object Matching {
   def greedyRoundsWeighted(wEdges: DataFrame, rounds: Int,
                            seed: Long): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    var canon = wEdges.filter(col("src") < col("dst"))
+    val canon = wEdges.filter(col("src") < col("dst"))
       .select(col("src"), col("dst"), col("weight"))
       .groupBy("src", "dst").agg(max(col("weight")).as("weight"))
       .select(col("src"), col("dst"), col("weight"),
@@ -102,30 +108,7 @@ object Matching {
           md5(concat_ws(":", col("src"), col("dst"), lit(seed))))
           .as("prio"))
       .transform(Materialize.eager)
-    var matched: DataFrame = null
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      val inc = canon.select(col("src").as("v"), col("prio"))
-        .union(canon.select(col("dst").as("v"), col("prio")))
-      val vmin = inc.groupBy("v").agg(min(col("prio")).as("pmin"))
-      val sel = canon
-        .join(vmin.select(col("v").as("src"), col("pmin").as("ps")), "src")
-        .join(vmin.select(col("v").as("dst"), col("pmin").as("pd")), "dst")
-        .filter(col("prio") === col("ps") && col("prio") === col("pd"))
-        .select(col("src"), col("dst"), col("weight"),
-          lit(r.toLong).as("round"))
-        .transform(Materialize.eager)
-      matched = if (matched == null) sel else matched.union(sel)
-      val mv = sel.select(col("src").as("id"))
-        .union(sel.select(col("dst"))).distinct()
-      canon = canon
-        .join(mv.select(col("id").as("src")), Seq("src"), "left_anti")
-        .join(mv.select(col("id").as("dst")), Seq("dst"), "left_anti")
-        .select(col("src"), col("dst"), col("weight"), col("prio"))
-        .transform(Materialize.eager)
-    }
-    matched
+    selectRounds(canon, Seq("weight"), rounds)
   }
 
   /** 2-approximate vertex cover from the greedy maximal matching

@@ -225,21 +225,20 @@ object StronglyConnected {
     val comps = e.select(col("csrc").as("comp"))
       .union(e.select(col("cdst"))).distinct()
       .transform(graft.engine.Materialize.eager)
-    var p = comps.join(e.select(col("cdst").as("comp")).distinct(),
+    val p0 = comps.join(e.select(col("cdst").as("comp")).distinct(),
         Seq("comp"), "left_anti")
       .select(col("comp"), lit(1L).as("w"))
       .transform(graft.engine.Materialize.eager)
-    var total = p
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      p = e.join(p.select(col("comp").as("cid"), col("w")),
+    // each step keeps its input p_{r−1}; p_rounds is the returned state
+    val shorter = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val last = Superstep.fixed(p0, rounds, readsPrevOnce = false) { (p, _) =>
+      shorter += p
+      e.join(p.select(col("comp").as("cid"), col("w")),
           col("csrc") === col("cid"))
         .groupBy(col("cdst").as("comp")).agg(sum(col("w")).as("w"))
-        .transform(graft.engine.Materialize.eager)
-      total = total.union(p)
     }
-    val agg = total.groupBy("comp").agg(sum(col("w")).as("paths"))
+    val agg = (shorter :+ last).reduce(_ union _)
+      .groupBy("comp").agg(sum(col("w")).as("paths"))
     val out = comps.join(agg, Seq("comp"), "left")
       .select(col("comp"),
         coalesce(col("paths"), lit(0L)).cast("long").as("paths"))

@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.{Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** k-truss decomposition: the maximal subgraph whose every edge closes at
@@ -50,17 +51,24 @@ object Truss {
   def edgeSupport(canon: DataFrame): DataFrame =
     supportFrom(TriangleCount.oriented(canon))
 
-  /** One support-and-filter peel round, materialized eagerly; the oriented
-    * copy backing the three triangle legs is freed once the round lands.
+  /** The support-and-filter peel round, a driver step. The oriented copy
+    * backing the round's three triangle legs stays cached until the driver
+    * has materialized the round: each call frees the previous round's
+    * copy, and [[release]] frees the last one.
     */
-  private def peelOnce(canon: DataFrame, k: Int): DataFrame = {
-    val o = TriangleCount.oriented(canon).persist(StorageLevel.MEMORY_AND_DISK)
-    val next = canon.join(supportFrom(o), Seq("src", "dst"), "left")
-      .filter(coalesce(col("support"), lit(0L)) >= k - 2)
-      .select(col("src"), col("dst"))
-      .transform(graft.engine.Materialize.eager)
-    o.unpersist(blocking = false)
-    next
+  private final class Peel {
+    private var oriented: Option[DataFrame] = None
+
+    def release(): Unit = oriented.foreach(_.unpersist(blocking = false))
+
+    def apply(canon: DataFrame, k: Int): DataFrame = {
+      release()
+      val o = TriangleCount.oriented(canon).persist(StorageLevel.MEMORY_AND_DISK)
+      oriented = Some(o)
+      canon.join(supportFrom(o), Seq("src", "dst"), "left")
+        .filter(coalesce(col("support"), lit(0L)) >= k - 2)
+        .select(col("src"), col("dst"))
+    }
   }
 
   /** Fixed peel rounds (driver-oracle shape: the iteration count must be
@@ -68,16 +76,11 @@ object Truss {
     */
   def peelFixed(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var canon = GraphOps.canonical(edges)
-      .transform(graft.engine.Materialize.eager)
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      val next = peelOnce(canon, k)
-      canon.unpersist(blocking = false)
-      canon = next
-    }
-    canon
+    val canon = GraphOps.canonical(edges).transform(Materialize.eager)
+    val peel = new Peel
+    val out = Superstep.fixed(canon, rounds, readsPrevOnce = false)((c, _) => peel(c, k))
+    peel.release()
+    out
   }
 
   /** Full truss decomposition on a FIXED schedule — the gate-able form,
@@ -99,20 +102,14 @@ object Truss {
     */
   def trussnessFixed(edges: DataFrame, maxK: Int, roundsPerK: Int): DataFrame = {
     require(maxK >= 3 && roundsPerK >= 1)
-    val all = GraphOps.canonical(edges)
-      .transform(graft.engine.Materialize.eager)
+    val all = GraphOps.canonical(edges).transform(Materialize.eager)
+    val peel = new Peel
     var alive = all
-    val memberships = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var k = 3
-    while (k <= maxK) {
-      var r = 0
-      while (r < roundsPerK) {
-        r += 1
-        alive = peelOnce(alive, k)
-      }
-      memberships += alive.select(col("src"), col("dst"), lit(k.toLong).as("k"))
-      k += 1
+    val memberships = (3 to maxK).map { k =>
+      alive = Superstep.fixed(alive, roundsPerK, readsPrevOnce = false)((c, _) => peel(c, k))
+      alive.select(col("src"), col("dst"), lit(k.toLong).as("k"))
     }
+    peel.release()
     val best = memberships.reduce(_ union _)
       .groupBy("src", "dst").agg(max(col("k")).as("trussness"))
     all.join(best, Seq("src", "dst"), "left")
@@ -163,26 +160,29 @@ object Truss {
     out
   }
 
-  /** Peel to convergence: the k-truss. An empty survivor set converges
-    * (count stable at 0), mirroring [[KCore.kCore]]'s empty-core rule.
+  /** Peel to convergence on the convergence driver: the k-truss. A
+    * round's probe counts the survivors, and an unchanged count is the
+    * fixed point (the edge set only shrinks) — an empty survivor set
+    * included. The step joins the edge set with its own orientation, so
+    * rounds keep real statistics. Throws IllegalArgumentException when
+    * `maxRounds` rounds do not reach the fixed point.
     */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 1000): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var canon = GraphOps.canonical(edges)
-      .transform(graft.engine.Materialize.eager)
+    val canon = GraphOps.canonical(edges).transform(Materialize.eager)
     var size = canon.count()
-    var r = 0
-    var done = false
-    while (!done && r < maxRounds) {
-      r += 1
-      val next = peelOnce(canon, k)
-      val nextSize = next.count()
-      canon.unpersist(blocking = false)
-      canon = next
-      done = nextSize == size
-      size = nextSize
-    }
-    canon
+    val peel = new Peel
+    val res = Superstep.converge("ktruss", canon, maxRounds, realStats = true) {
+      (c, _) => peel(c, k)
+    }((next, _, _) => next.agg(count(lit(1))), (_, row) => {
+      val m = row.getLong(0)
+      val verdict = Superstep.Verdict(size - m, 0L, m == size)
+      size = m
+      verdict
+    })
+    peel.release()
+    require(res.converged, s"kTruss: the $k-truss did not converge in $maxRounds rounds")
+    res.labels
   }
 
   /** Augmented Forman–Ricci curvature per canonical edge (Forman 2003,

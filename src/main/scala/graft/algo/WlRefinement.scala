@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.{Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** Weisfeiler–Lehman color refinement (1-WL): iteratively re-color every
@@ -45,13 +46,11 @@ object WlRefinement {
     require(rounds >= 0)
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var colors = GraphOps.degrees(e)
+    val c0 = GraphOps.degrees(e)
       .select(col("id"),
         md5(concat(lit("d:"), col("degree").cast("string"))).as("color"))
-      .transform(graft.engine.Materialize.eager)
-    var r = 0
-    while (r < rounds) {
-      r += 1
+      .transform(Materialize.eager)
+    val colors = Superstep.fixed(c0, rounds, readsPrevOnce = false) { (colors, _) =>
       val gathered = e
         .join(colors.select(col("id").as("src"), col("color").as("nc")), "src")
       val sig =
@@ -71,12 +70,11 @@ object WlRefinement {
           gathered
             .groupBy(col("dst").as("id"))
             .agg(concat_ws(",", sort_array(collect_list(col("nc")))).as("sig"))
-      colors = colors
+      colors
         .join(sig, Seq("id"), "left")
         .select(col("id"),
           md5(concat(col("color"), lit("|"), coalesce(col("sig"), lit(""))))
             .as("color"))
-        .transform(graft.engine.Materialize.eager)
     }
     e.unpersist(blocking = false)
     colors

@@ -42,7 +42,11 @@ object Superstep {
 
   /** Exactly `steps` applications of `step`, with no convergence actions —
     * the fixed-iteration driver of the power-iteration family (PageRank,
-    * Katz, walk counts, HITS, SALSA, absorbing walks, fixed-step LP). It
+    * Katz, walk counts, HITS, SALSA, absorbing walks, fixed-step LP) and
+    * of the fixed-round loops that read their state more than once
+    * (VoteRank, the LT/IC cascades, WL refinement, label spreading,
+    * balanced-LP sharding, DAG path counts, greedy matching, MMR
+    * selection, the fixed truss peels). It
     * owns every persist / truncate / release decision; the caller states
     * one fact about its step, `readsPrevOnce`: does the plan of step i+1
     * evaluate the state of step i exactly once (counting references
@@ -121,7 +125,8 @@ object Superstep {
   /** Rounds until `stop` says so — the convergence driver of every
     * fixpoint whose stability test is one aggregate per round (LP, CC,
     * PageRank to tolerance, the SCC color fixpoint, DAG levels, Borůvka's
-    * pointer jump, k-core peeling, shortest paths). One round is the
+    * pointer jump, k-core and k-truss peeling, shortest paths, HyperANF).
+    * One round is the
     * reference host loop (`algorithms.h:373-473`): the Jacobi `step` from
     * the previous state, then ONE driver action, the caller's one-row
     * `probe` aggregate — over `next` alone or over `next ⋈ prev` with the
@@ -133,7 +138,8 @@ object Superstep {
     * The driver owns every per-round mechanic:
     *   - truncation: a durable [[Checkpointer.checkpoint]] every
     *     `checkpointEvery` rounds when a checkpointer is set (also the
-    *     resume point), a LAZY `localCheckpoint` otherwise. Lazy is safe
+    *     resume point), a LAZY `localCheckpoint` otherwise (an eager
+    *     [[Materialize.eager]] under `realStats`). Lazy is safe
     *     because the probe of round i materializes (and truncates) the
     *     state of round i before step i+1 reads it, so a step that reads
     *     its state twice still reads stored blocks. (The lazy
@@ -152,18 +158,24 @@ object Superstep {
     *     `priorMetrics` and rewritten to `metrics.json` every round when a
     *     checkpointer is set.
     *
-    * Statistics: a truncated state keeps the size ESTIMATE of the plan
-    * that produced it, not its real size. A step that joins the state
-    * with itself (or with a function of itself) multiplies that estimate
-    * by itself every round — the digits double per round, the
-    * `BigInteger.multiply` stall [[Materialize]] describes. Such loops
-    * stay off this driver: `ConnectedComponents.runAlternating` and
-    * `Truss.kTruss` keep real statistics through [[Materialize.eager]].
-    * `StronglyConnected.dagLevels`, Borůvka's pointer jump and
-    * `ShortestPaths.run` do join their state with a function of itself;
-    * they already compounded the estimate under the bare eager checkpoint
-    * they used before, and still do here.
+    * Statistics: a lazily truncated state keeps the size ESTIMATE of the
+    * plan that produced it, not its real size. A step that joins the
+    * state with itself (or with a function of itself) multiplies that
+    * estimate by itself every round — the digits double per round, the
+    * `BigInteger.multiply` stall [[Materialize]] describes. Such a caller
+    * states `realStats`. `StronglyConnected.dagLevels`, Borůvka's pointer
+    * jump and `ShortestPaths.run` do join their state with a function of
+    * itself; they already compounded the estimate under the bare eager
+    * checkpoint they used before, and still do here.
     *
+    * @param realStats true: every round that takes no durable checkpoint
+    *                  ends with [[Materialize.eager]] instead of the lazy
+    *                  `localCheckpoint`, so the state carries its real
+    *                  size, and then runs the probe — for steps that join
+    *                  the state with a function of itself (`Truss.kTruss`'s
+    *                  triangle legs, HyperANF's gather-and-merge). The
+    *                  eager truncation is a job of its own every round
+    *                  ahead of the probe's. The durable path is unchanged.
     * @param lastRound the last round number this call may run (a total-run
     *                  cap: a resumed call passes the same value)
     * @param step      (state after round i−1, i) → state after round i
@@ -175,7 +187,8 @@ object Superstep {
   def converge(algorithm: String, init: DataFrame, lastRound: Int,
                checkpointer: Option[Checkpointer] = None,
                checkpointEvery: Int = 5, startIter: Int = 0,
-               priorMetrics: Seq[SuperstepMetrics] = Nil)(
+               priorMetrics: Seq[SuperstepMetrics] = Nil,
+               realStats: Boolean = false)(
       step: (DataFrame, Int) => DataFrame)(
       probe: (DataFrame, DataFrame, Int) => DataFrame,
       stop: (Int, Row) => Verdict): Result = {
@@ -190,6 +203,7 @@ object Superstep {
       val next = step(prev, iter)
       state = checkpointer match {
         case Some(cp) if iter % checkpointEvery == 0 => cp.checkpoint(algorithm, iter, next)
+        case _ if realStats => Materialize.eager(next)
         case _ => next.localCheckpoint(eager = false)
       }
       val verdict = stop(iter, probe(state, prev, iter).first())

@@ -1198,12 +1198,12 @@ object Similarity {
         .filter(col("rn") === 1)
         .select(col("qid"), lit(rank.toLong).as("rank"), col("vec_id"),
           col("score_e6"))
-    var selected = argmax(
+    val first = argmax(
       cnd.select(col("qid"), col("vec_id"), col("sim_e6").as("score_e6")),
       1).transform(graft.engine.Materialize.eager)
-    var t = 1
-    while (t < k) {
-      t += 1
+    // step t − 1 picks rank t
+    val out = graft.engine.Superstep.fixed(first, k - 1,
+        readsPrevOnce = false) { (selected, t1) =>
       val maxSel = cc.join(selected.select(col("qid"),
           col("vec_id").as("b")), Seq("qid", "b"))
         .groupBy(col("qid"), col("a").as("vec_id"))
@@ -1215,11 +1215,10 @@ object Similarity {
         .join(maxSel, Seq("qid", "vec_id"))
         .select(col("qid"), col("vec_id"),
           (col("sim_e6") - col("msel")).as("score_e6"))
-      selected = selected.union(argmax(scored, t))
-        .transform(graft.engine.Materialize.eager)
+      selected.union(argmax(scored, t1 + 1))
     }
     cnd.unpersist(blocking = false)
     cc.unpersist(blocking = false)
-    selected
+    out
   }
 }

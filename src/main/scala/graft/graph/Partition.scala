@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.engine.Superstep
 
 /** Graph partitioning for serving/sharding — the operator a link graph
   * actually needs BEFORE any 1000-executor job: which shard owns which
@@ -57,11 +58,9 @@ object Partition {
       .transform(graft.engine.Materialize.eager)
     val n = verts.count()
     val cap = (n * capNum) / (k * capDen)
-    var assign = verts.select(col("id"), (col("id") % k).as("shard"))
+    val hashed = verts.select(col("id"), (col("id") % k).as("shard"))
       .transform(graft.engine.Materialize.eager)
-    var i = 0
-    while (i < iters) {
-      i += 1
+    Superstep.fixed(hashed, iters, readsPrevOnce = false) { (assign, _) =>
       val sizes = assign.groupBy("shard").agg(count(lit(1)).as("sz"))
       // neighbor-shard census per vertex
       val nbr = e.join(assign.select(col("id").as("dst"),
@@ -88,12 +87,9 @@ object Partition {
             col("id").asc)))
         .filter(col("rn") <= lit(cap) - coalesce(col("sz"), lit(0L)))
         .select(col("id"), col("target"))
-      val next = assign.join(admitted, Seq("id"), "left")
+      assign.join(admitted, Seq("id"), "left")
         .select(col("id"), coalesce(col("target"), col("shard")).as("shard"))
-        .transform(graft.engine.Materialize.eager)
-      assign = next
     }
-    assign
   }
 
   /** Layout audit for a vertex-sharding: edge-cut fraction (e6) and

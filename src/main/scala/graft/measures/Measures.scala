@@ -109,12 +109,6 @@ object Measures {
   def communityCount(labels: DataFrame): Long =
     labels.select("label").distinct().count()
 
-  /** Approximate community count for high-frequency metrics streams at
-    * scale (HLL sketch; exact count stays the stopping-rule input).
-    */
-  def communityCountApprox(labels: DataFrame): DataFrame =
-    labels.agg(approx_count_distinct("label").as("communities"))
-
   /** Confusion matrix N_ij = #vertices with true label i and predicted
     * label j (`compareCommunities`, `community_measures.cu:100-116`).
     */

@@ -31,18 +31,15 @@ object Sketch {
     docs.select(explode(TextIndex.termsCol).as("term"))
       .groupBy("term").agg(count(lit(1)).as("exact_n"))
 
-  /** The sketch: (row, bucket, n) — Depth × width cells, absent cells
-    * implicitly 0.
+  /** The sketch of the term counts `tc`: (row, bucket, n) — Depth ×
+    * width cells, absent cells implicitly 0.
     */
-  def countMin(docs: DataFrame, width: Int): DataFrame = {
-    require(width >= 1)
-    val tc = termCounts(docs)
+  private def countMin(tc: DataFrame, width: Int): DataFrame =
     (0 until Depth).map { r =>
       tc.groupBy(bucket(r, col("term"), width).as("bucket"))
         .agg(sum(col("exact_n")).cast("long").as("n"))
-        .select(lit(r).cast("long").as("row"), col("bucket"), col("n"))
+        .select(lit(r).as("row"), col("bucket"), col("n"))
     }.reduce(_ union _)
-  }
 
   /** CMS estimates next to exact counts for the `k` heaviest terms
     * (exact count desc, term asc): (term, exact_n, est_n). The sketch
@@ -52,11 +49,7 @@ object Sketch {
     require(width >= 1 && k >= 1)
     val tc = termCounts(docs).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sk = (0 until Depth).map { r =>
-      tc.groupBy(bucket(r, col("term"), width).as("bucket"))
-        .agg(sum(col("exact_n")).cast("long").as("n"))
-        .select(lit(r).as("row"), col("bucket"), col("n"))
-    }.reduce(_ union _)
+    val sk = countMin(tc, width)
     var out = tc.orderBy(col("exact_n").desc, col("term").asc).limit(k)
     for (r <- 0 until Depth)
       out = out.join(

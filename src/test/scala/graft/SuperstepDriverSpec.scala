@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.algo.{Hits, KCore, LabelPropagation, PageRank, ShortestPaths,
-  SpanningForest, Spectral, StronglyConnected}
+import graft.algo.{Centrality, Hits, Influence, KCore, LabelPropagation,
+  LabelSpreading, Matching, PageRank, ShortestPaths, SpanningForest, Spectral,
+  StronglyConnected, Truss, WlRefinement}
 import graft.engine.{Checkpointer, Superstep}
-import graft.graph.GraphOps
+import graft.functions.Similarity
+import graft.graph.{GraphOps, Partition}
 
 /** The two drivers of `engine/Superstep`: the fixed-step driver
   * [[Superstep.fixed]] and the convergence driver [[Superstep.converge]]
@@ -191,9 +193,31 @@ class SuperstepDriverSpec extends GraftSuite {
     rounds
   }
 
+  /** Peel rounds the k-truss of `pairs` takes, counting the stable round
+    * — an imperative replay of the support filter — and the truss.
+    */
+  private def trussRounds(pairs: Seq[(Long, Long)], k: Int): (Int, Set[(Long, Long)]) = {
+    var alive = undirected(pairs).filter(p => p._1 < p._2).toSet
+    var rounds = 0
+    var stable = false
+    while (!stable) {
+      rounds += 1
+      val adj = alive.toSeq.flatMap(p => Seq(p, p.swap)).groupBy(_._1)
+        .view.mapValues(_.map(_._2).toSet).toMap
+      val next = alive.filter { case (a, b) => (adj(a) & adj(b)).size >= k - 2 }
+      stable = next == alive
+      alive = next
+    }
+    (rounds, alive)
+  }
+
+  private def edgeSet(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("the ported loops run their known round counts") {
+    val karate = edgesDf(Fixtures.karatePairs)
     assert(StronglyConnected.run(edgesDf(reversePath))._2 === 4)
-    val (core, rounds, converged) = KCore.kCore(edgesDf(Fixtures.karatePairs), 4L)
+    val (core, rounds, converged) = KCore.kCore(karate, 4L)
     assert(rounds === peelRounds(Fixtures.karatePairs, 4) && converged)
     assert(core.count() === 10L)
     val (dist, relaxRounds, relaxed) = ShortestPaths.run(weighted(weightedPath), sources(1L))
@@ -201,6 +225,11 @@ class SuperstepDriverSpec extends GraftSuite {
     assert(labelsMap(dist) === Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
     assert(labelsMap(StronglyConnected.dagLevels(condensed(chain(5)))) ===
       (1L to 5L).map(i => i -> (i - 1)).toMap)
+    // kTruss requires convergence, so the round cap pins the round count
+    val (peels, truss) = trussRounds(Fixtures.karatePairs, 4)
+    assert(peels === 3)
+    assert(edgeSet(Truss.kTruss(karate, 4, maxRounds = peels)) === truss)
+    intercept[IllegalArgumentException](Truss.kTruss(karate, 4, maxRounds = peels - 1))
   }
 
   // A round's one action is its probe: one result job. Its lazy truncation
@@ -236,8 +265,29 @@ class SuperstepDriverSpec extends GraftSuite {
     }
   }
 
+  /** LT threshold numerator 1 for every karate vertex. */
+  private def ltThresholds: DataFrame = {
+    import spark.implicits._
+    (1L to 34L).map(_ -> 1L).toDF("id", "tnum")
+  }
+
+  private def classSeeds: DataFrame = {
+    import spark.implicits._
+    Seq((1L, 0L), (34L, 1L)).toDF("id", "cls")
+  }
+
+  private def vectors: DataFrame = {
+    import spark.implicits._
+    def pad(xs: Float*): Seq[Float] = xs ++ Seq.fill(64 - xs.length)(0.0f)
+    Seq((0L, pad(1f, 0f, 0f)), (1L, pad(0.95f, 0.31f, 0f)), (2L, pad(0.9f, 0.3f, 0.1f)),
+      (3L, pad(0.8f, 0f, 0.6f))).toDF("vec_id", "embedding")
+  }
+
   test("every ported loop leaves the cache as it found it") {
     val karate = edgesDf(Fixtures.karatePairs)
+    val sym = edgesDf(undirected(Fixtures.karatePairs))
+    val symWeighted = weighted(undirected(Fixtures.karatePairs).map { case (a, b) =>
+      (a, b, (a * b) % 5 + 1) })
     val runs: Seq[(String, () => Unit)] = Seq(
       "PageRank.run" -> (() => PageRank.run(karate, maxIter = 5, partitions = 4)),
       "StronglyConnected.run" -> (() => StronglyConnected.run(edgesDf(reversePath))),
@@ -245,7 +295,26 @@ class SuperstepDriverSpec extends GraftSuite {
       "SpanningForest.boruvka" -> (() => SpanningForest.boruvka(weightedKarate)),
       "KCore.kCore" -> (() => KCore.kCore(karate, 4L)),
       "KCore.coreness" -> (() => KCore.coreness(karate)),
-      "ShortestPaths.run" -> (() => ShortestPaths.run(weighted(weightedPath), sources(1L))))
+      "ShortestPaths.run" -> (() => ShortestPaths.run(weighted(weightedPath), sources(1L))),
+      "Influence.voteRank" -> (() => Influence.voteRank(sym, 3)),
+      "Influence.ltCascade" -> (() => Influence.ltCascade(sym, sources(1L),
+        ltThresholds, tden = 4, rounds = 3)),
+      "Influence.icCascade" -> (() => Influence.icCascade(sym, sources(1L),
+        permille = 600, rounds = 3)),
+      "WlRefinement.refine" -> (() => WlRefinement.refine(sym, 2)),
+      "LabelSpreading.run" -> (() => LabelSpreading.run(sym, classSeeds, 0.5, 3)),
+      "Partition.balancedLp" -> (() => Partition.balancedLp(sym, k = 4, iters = 2)),
+      "StronglyConnected.dagPathCounts" ->
+        (() => StronglyConnected.dagPathCounts(condensed(chain(5)), rounds = 3)),
+      "Matching.greedyRounds" -> (() => Matching.greedyRounds(sym, 3, seed = 7L)),
+      "Matching.greedyRoundsWeighted" ->
+        (() => Matching.greedyRoundsWeighted(symWeighted, 3, seed = 7L)),
+      "Similarity.mmrSelect" -> (() => Similarity.mmrSelect(vectors, cand = 3, k = 3)),
+      "Truss.peelFixed" -> (() => Truss.peelFixed(karate, 4, rounds = 2)),
+      "Truss.trussnessFixed" -> (() => Truss.trussnessFixed(karate, maxK = 5, roundsPerK = 2)),
+      "Truss.kTruss" -> (() => Truss.kTruss(karate, 4)),
+      "Centrality.neighborhoodFunctionApprox" ->
+        (() => Centrality.neighborhoodFunctionApprox(sym, maxDepth = 4)))
     runs.foreach { case (name, run) =>
       val before = cacheEntries()
       run()
@@ -258,6 +327,40 @@ class SuperstepDriverSpec extends GraftSuite {
     // the 2-core of the path needs two peel rounds
     intercept[IllegalArgumentException](KCore.coreness(path, maxRoundsPerK = 1))
     assert(labelsMap(KCore.coreness(path)) === (1L to 4L).map(_ -> 1L).toMap)
+  }
+
+  test("kTruss requires convergence") {
+    // the 4-truss of karate needs three peel rounds
+    intercept[IllegalArgumentException](
+      Truss.kTruss(edgesDf(Fixtures.karatePairs), 4, maxRounds = 1))
+  }
+
+  /** `lastRound` rounds of a step that joins its state with a function of
+    * itself, on the convergence driver; the probe never stops the run.
+    */
+  private def selfJoinRounds(lastRound: Int, realStats: Boolean): DataFrame =
+    Superstep.converge("selfjoin", init, lastRound, realStats = realStats) { (prev, _) =>
+      prev.join(prev.select(col("id"), (col("x") + 1).as("y")), "id")
+        .select(col("id"), col("y").as("x"))
+    }((next, _, _) => next.agg(count(lit(1))), (_, row) =>
+      Superstep.Verdict(row.getLong(0), 0L, stop = false)).labels
+
+  test("a realStats convergence round keeps real statistics") {
+    val size = (df: DataFrame) => df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val real = selfJoinRounds(6, realStats = true)
+    assert(size(real) < (BigInt(1) << 20), s"estimated size has ${size(real).toString.length} digits")
+    assert(real.agg(min("x"), max("x")).first() === Row(6L, 6L))
+    // the lazy truncation copies the step's estimate, which squares every round
+    val lazily = selfJoinRounds(6, realStats = false)
+    assert(size(lazily) > (BigInt(1) << 64), s"lazy estimate ${size(lazily)}")
+  }
+
+  test("a realStats convergence round costs one eager truncation and one probe") {
+    val run = (rounds: Int) => countActions(Superstep.converge("plusone", init, rounds,
+        realStats = true)(plusOne)((next, _, _) => next.agg(count(lit(1))),
+      (_, row) => Superstep.Verdict(row.getLong(0), 0L, stop = false)))
+    val (small, large) = (run(2), run(6))
+    assert(large.resultJobs - small.resultJobs === 2 * 4, s"$small in 2 rounds, $large in 6")
   }
 
   test("durable checkpoints land on the cadence rounds and metrics list every round once") {
