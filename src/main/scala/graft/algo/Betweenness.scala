@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.{Materialize, Superstep}
 
 /** Brandes betweenness centrality (reference `brandesSequential` /
   * `brandesParallel`, `algorithms.h:29-250` — compiled but never wired
@@ -53,27 +54,21 @@ object Betweenness {
   private def brandesCore(edges: DataFrame, sources: DataFrame,
                           maxDepth: Int, wantEdges: Boolean)
       : (DataFrame, DataFrame) = {
-    val spark = edges.sparkSession
     val e = edges.select(col("src").as("v"), col("dst").as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // ---- forward BFS: visited(s, id, dist, sigma) ----
     // Every self-join below re-aliases its keys (fresh exprIds) — Spark's
     // ambiguous-self-join detection rejects same-lineage joins otherwise.
-    var visited = sources.select(col("id").as("s"), col("id"),
+    val init = sources.select(col("id").as("s"), col("id"),
         lit(0).as("dist"), lit(1.0).as("sigma"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var frontier = visited
-    var level = 0
-    var maxLevel = 0
-    var go = true
-    while (go && level < maxDepth) {
-      level += 1
+      .localCheckpoint(eager = false)
+    val forward = Superstep.converge("brandes_forward", init, maxDepth) { (visited, level) =>
       // rename e's columns through a fresh select so no dataset-tagged
-      // column reference appears on both sides (frontier already carries
-      // e in its lineage from the previous level)
+      // column reference appears on both sides (the state already
+      // carries e in its lineage from the previous level)
       val eRen = e.select(col("v").as("jv"), col("w").as("jw"))
-      val expanded = frontier
+      val expanded = visited.filter(col("dist") === level - 1)
         .select(col("s").as("es"), col("id").as("eid"), col("sigma").as("esigma"))
         .join(eRen, col("eid") === col("jv"))
         .select(col("es"), col("jw").as("nid"), col("esigma"))
@@ -83,28 +78,19 @@ object Betweenness {
         .groupBy(col("es"), col("nid")).agg(sum("esigma").as("sigma"))
         .select(col("es").as("s"), col("nid").as("id"),
           lit(level).as("dist"), col("sigma"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = candidate.count()
-      if (n == 0L) { go = false; candidate.unpersist(blocking = false) }
-      else {
-        maxLevel = level
-        val nv = visited.union(candidate)
-          .transform(graft.engine.Materialize.eager)
-        if (frontier ne visited) frontier.unpersist(blocking = false)
-        visited.unpersist(blocking = false)
-        visited = nv
-        frontier = candidate
-      }
-    }
-    if (frontier ne visited) frontier.unpersist(blocking = false)
+      visited.union(candidate)
+    }(Superstep.newRows("dist"), Superstep.untilZero)
+    val visited = forward.labels
+    // the last level that reached new vertices
+    val maxLevel = if (forward.converged) forward.iterations - 1 else forward.iterations
 
     // ---- backward accumulation, level by level descending ----
+    // step i accumulates level l = maxLevel − i + 1 from level l's deltas;
     // successors(s, v, w): dist(s,w) = dist(s,v) + 1 and edge v→w
-    var delta = visited.select(col("s"), col("id"), lit(0.0).as("delta"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val edgeLevels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var l = maxLevel
-    while (l > 0) {
+    val delta = Superstep.fixed(visited.select(col("s"), col("id"), lit(0.0).as("delta")),
+        maxLevel, readsPrevOnce = false) { (delta, i) =>
+      val l = maxLevel - i + 1
       val wLev = visited.filter(col("dist") === l)
         .select(col("s").as("ws"), col("id").as("w"), col("sigma").as("sigmaW"))
       val dW = delta.select(col("s").as("ds"), col("id").as("dw"),
@@ -125,18 +111,14 @@ object Betweenness {
         // the per-level per-edge partial sums union to the full edge score
         edgeLevels += pairC.groupBy(col("cid").as("v"), col("cw").as("w"))
           .agg(sum("c").as("ec"))
-          .transform(graft.engine.Materialize.eager)
+          .transform(Materialize.eager)
       }
       val contrib = pairC
         .groupBy(col("cs"), col("cid")).agg(sum("c").as("add"))
-      val nd = delta
+      delta
         .join(contrib, delta("s") === col("cs") && delta("id") === col("cid"), "left")
         .select(delta("s"), delta("id"),
           (col("delta") + coalesce(col("add"), lit(0.0))).as("delta"))
-        .transform(graft.engine.Materialize.eager)
-      delta.unpersist(blocking = false)
-      delta = nd
-      l -= 1
     }
 
     val bc = delta.filter(col("s") =!= col("id"))
@@ -159,9 +141,8 @@ object Betweenness {
           .select(col("src"), col("dst"),
             coalesce(col("ec"), lit(0.0)).as("eb"))
       }
-    // the final delta is eagerly checkpointed (truncated lineage), so the
-    // sigma table behind it can be released now
-    visited.unpersist(blocking = false)
+    // every state that read e is materialized: the probed levels and the
+    // eager deltas
     e.unpersist(blocking = false)
     (bc, eb)
   }
@@ -182,21 +163,11 @@ object Betweenness {
                 maxDepth: Int = DepthCap): DataFrame = {
     val e = edges.select(col("src").as("v"), col("dst").as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // both loop states must be eager-TRUNCATED, not just persisted: a
-    // lazily-persisted frontier chains every prior level's AQE subplan
-    // into the next plan, and the nested InMemoryRelation/AQE tree's
-    // STRING rendering grows super-linearly — 12 levels of it OOM'd the
-    // driver on a fragmented sparse graph (round-4 g_bipartite).
-    var visited = sources.select(col("id").as("s"), col("id"),
-        lit(0).as("dist"))
-      .transform(graft.engine.Materialize.eager)
-    var frontier = visited
-    var level = 0
-    var go = true
-    while (go && level < maxDepth) {
-      level += 1
+    val init = sources.select(col("id").as("s"), col("id"), lit(0).as("dist"))
+      .localCheckpoint(eager = false)
+    val levels = Superstep.converge("bfs_levels", init, maxDepth) { (visited, level) =>
       val eRen = e.select(col("v").as("jv"), col("w").as("jw"))
-      val expanded = frontier
+      val expanded = visited.filter(col("dist") === level - 1)
         .select(col("s").as("es"), col("id").as("eid"))
         .join(eRen, col("eid") === col("jv"))
         .select(col("es"), col("jw").as("nid")).distinct()
@@ -204,17 +175,10 @@ object Betweenness {
       val candidate = expanded
         .join(seen, col("es") === col("vs") && col("nid") === col("vid"), "left_anti")
         .select(col("es").as("s"), col("nid").as("id"), lit(level).as("dist"))
-        .transform(graft.engine.Materialize.eager)
-      if (candidate.count() == 0L) {
-        go = false
-      } else {
-        visited = visited.union(candidate)
-          .transform(graft.engine.Materialize.eager)
-        frontier = candidate
-      }
-    }
+      visited.union(candidate)
+    }(Superstep.newRows("dist"), Superstep.untilZero)
     e.unpersist(blocking = false)
-    visited.select(col("s").as("source"), col("id"),
+    levels.labels.select(col("s").as("source"), col("id"),
       col("dist").cast("long").as("dist"))
   }
 
@@ -240,7 +204,7 @@ object Betweenness {
     val roots = lv.filter(col("dist") === 0)
       .select(col("source"), col("id"), col("dist"), col("id").as("parent"))
     val out = roots.union(cand.select("source", "id", "dist", "parent"))
-    val materialized = out.transform(graft.engine.Materialize.eager)
+    val materialized = out.transform(Materialize.eager)
     lv.unpersist(blocking = false)
     materialized
   }

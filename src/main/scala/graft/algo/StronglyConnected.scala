@@ -46,12 +46,17 @@ object StronglyConnected {
   def run(edges: DataFrame, maxOuterRounds: Int = 100): (DataFrame, Int) = {
     val e0 = GraphOps.dropSelfLoops(edges.select(col("src"), col("dst")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    var remaining = GraphOps.vertices(e0).persist(StorageLevel.MEMORY_AND_DISK)
-    var nRemaining = remaining.count()
+    val vertices = GraphOps.vertices(e0).localCheckpoint(eager = false)
+    var nRemaining = vertices.count()
+    if (nRemaining == 0L) { // empty edge set: no vertices, no rounds
+      e0.unpersist(blocking = false)
+      return (edges.sparkSession.range(0)
+        .select(col("id"), col("id").as("scc")), 0)
+    }
     val assigned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var outer = 0
-    while (nRemaining > 0L && outer < maxOuterRounds) {
-      outer += 1
+    // outer round: peel the SCCs of every current color root; the probe
+    // counts the vertices that remain
+    val peel = Superstep.converge("scc_peel", vertices, maxOuterRounds) { (remaining, _) =>
       // remaining subgraph (both endpoints alive)
       val sub = e0
         .join(remaining.select(col("id").as("sid")), col("src") === col("sid"), "left_semi")
@@ -59,9 +64,9 @@ object StronglyConnected {
         .transform(graft.engine.Materialize.eager)
       // 1. forward max-color fixpoint. A color travels one edge per round
       //    along a simple path, so `nRemaining` rounds always suffice.
+      val cap = math.min(nRemaining, Int.MaxValue.toLong).toInt
       val fixpoint = Superstep.converge("scc_color",
-          remaining.select(col("id"), col("id").as("color")),
-          math.min(nRemaining, Int.MaxValue.toLong).toInt) { (colors, _) =>
+          remaining.select(col("id"), col("id").as("color")), cap) { (colors, _) =>
         // self-message fold (the CC superstep shape with max for min):
         // max(own ∪ predecessor colors) needs no keep-previous join, and
         // the stats-less color state hash-builds (PageRank.stateSide
@@ -76,21 +81,20 @@ object StronglyConnected {
       require(fixpoint.converged,
         s"SCC coloring did not converge in $nRemaining rounds")
       val colors = fixpoint.labels
-      // 2. backward BFS from every root within its own color class;
-      //    visited(v) carries the root it reaches (= its color, so one
-      //    column suffices)
-      var visited = colors.filter(col("id") === col("color")).select(col("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      var frontier = visited
-      var frontierN = frontier.count()
-      while (frontierN > 0L) {
+      // 2. backward BFS from every root within its own color class; a
+      //    reached vertex's root is its color, so (id, dist) suffices.
+      //    A backward path has fewer than `nRemaining` edges.
+      val reached = Superstep.converge("scc_backward",
+          colors.filter(col("id") === col("color")).select(col("id"), lit(0).as("dist")),
+          cap) { (visited, i) =>
         // predecessors u of the frontier (edge u→v) with
         // color(u) == color(v) — the within-class restriction is safe:
         // every vertex on any v→root path of a same-color v is itself
         // colored by that root (the root reaches it, and a larger color
         // on it would contradict color(v) = root)
-        val next = sub
-          .join(frontier.select(col("id").as("fid")), col("dst") === col("fid"))
+        val found = sub
+          .join(visited.filter(col("dist") === i - 1).select(col("id").as("fid")),
+            col("dst") === col("fid"))
           .join(colors.select(col("id").as("fid2"), col("color").as("fcolor")),
             col("fid") === col("fid2"))
           .join(colors.select(col("id").as("uid"), col("color").as("ucolor")),
@@ -98,43 +102,29 @@ object StronglyConnected {
           .filter(col("ucolor") === col("fcolor"))
           .select(col("src").as("id")).distinct()
           .join(visited, Seq("id"), "left_anti")
-          .localCheckpoint(eager = true)
-        frontierN = next.count()
-        if (frontierN > 0L) {
-          val newVisited = visited.union(next).distinct()
-            .transform(graft.engine.Materialize.eager)
-          visited.unpersist(blocking = false)
-          visited = newVisited
-        }
-        frontier = next
-      }
-      // the visited set of this round: all vertices that backward-reach
+        visited.union(found.select(col("id"), lit(i).as("dist")))
+      }(Superstep.newRows("dist"), Superstep.untilZero).labels
+      // the reached set of this round: all vertices that backward-reach
       // their color root within the class → SCC membership keyed by color
-      val sccs = visited.join(colors, Seq("id"))
+      val sccs = reached.select(col("id")).join(colors, Seq("id"))
         .select(col("id"), col("color").as("root"))
         .localCheckpoint(eager = true)
       assigned += sccs
-      val newRemaining = remaining.join(sccs.select(col("id")), Seq("id"), "left_anti")
-        .transform(graft.engine.Materialize.eager)
-      remaining.unpersist(blocking = false)
-      visited.unpersist(blocking = false)
-      sub.unpersist(blocking = false)
-      remaining = newRemaining
-      nRemaining = remaining.count()
-    }
-    require(nRemaining == 0L,
+      remaining.join(sccs.select(col("id")), Seq("id"), "left_anti")
+    }((next, _, _) => next.agg(count(lit(1))), (_, row) => {
+      val left = row.getLong(0)
+      val verdict = Superstep.Verdict(nRemaining - left, 0L, left == 0L)
+      nRemaining = left
+      verdict
+    })
+    require(peel.converged,
       s"SCC peeling did not converge in $maxOuterRounds rounds")
-    if (assigned.isEmpty) { // empty edge set: no vertices, no rounds
-      e0.unpersist(blocking = false)
-      return (edges.sparkSession.range(0)
-        .select(col("id"), col("id").as("scc")), 0)
-    }
     // canonical labels: scc = min member id per root
     val membership = assigned.reduce(_ union _)
     val canon = membership.groupBy(col("root")).agg(min(col("id")).as("scc"))
     val out = membership.join(canon, "root").select(col("id"), col("scc"))
     e0.unpersist(blocking = false)
-    (out, outer)
+    (out, peel.iterations)
   }
 
   /** Condensation of the directed graph: contract every SCC to one node

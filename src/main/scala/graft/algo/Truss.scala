@@ -162,9 +162,10 @@ object Truss {
 
   /** Peel to convergence on the convergence driver: the k-truss. A
     * round's probe counts the survivors, and an unchanged count is the
-    * fixed point (the edge set only shrinks) — an empty survivor set
-    * included. The step joins the edge set with its own orientation, so
-    * rounds keep real statistics. Throws IllegalArgumentException when
+    * fixed point (the edge set only shrinks) — and so is an empty one
+    * (the k-truss does not exist; nothing left to peel). The step joins
+    * the edge set with its own orientation, so rounds keep real
+    * statistics. Throws IllegalArgumentException when
     * `maxRounds` rounds do not reach the fixed point.
     */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 1000): DataFrame = {
@@ -176,7 +177,7 @@ object Truss {
       (c, _) => peel(c, k)
     }((next, _, _) => next.agg(count(lit(1))), (_, row) => {
       val m = row.getLong(0)
-      val verdict = Superstep.Verdict(size - m, 0L, m == size)
+      val verdict = Superstep.Verdict(size - m, 0L, m == size || m == 0L)
       size = m
       verdict
     })

@@ -124,9 +124,11 @@ object Superstep {
 
   /** Rounds until `stop` says so — the convergence driver of every
     * fixpoint whose stability test is one aggregate per round (LP, CC,
-    * PageRank to tolerance, the SCC color fixpoint, DAG levels, Borůvka's
-    * pointer jump, k-core and k-truss peeling, shortest paths, HyperANF).
-    * One round is the
+    * PageRank to tolerance, the SCC color fixpoint and outer peel, DAG
+    * levels, Borůvka's pointer jump, k-core and k-truss peeling, shortest
+    * paths, HyperANF, and the frontier BFS loops: `GraphOps.reachableFrom`,
+    * `Betweenness.bfsLevels`, Brandes' forward pass and SCC's backward
+    * BFS). One round is the
     * reference host loop (`algorithms.h:373-473`): the Jacobi `step` from
     * the previous state, then ONE driver action, the caller's one-row
     * `probe` aggregate — over `next` alone or over `next ⋈ prev` with the
@@ -167,6 +169,15 @@ object Superstep {
     * jump and `ShortestPaths.run` do join their state with a function of
     * itself; they already compounded the estimate under the bare eager
     * checkpoint they used before, and still do here.
+    *
+    * A frontier BFS keeps one state, every reached row tagged with its
+    * round `dist`: the step expands the rows with `dist == i − 1` along
+    * the edges, anti-joins what it finds against the state and returns
+    * the state with the new rows (`dist = i`) appended; the probe is
+    * [[newRows]]. Those steps need no `realStats`: the state meets a
+    * function of itself only through the anti-join and the union, whose
+    * estimates add, so the estimate gains one edge-join factor per round
+    * (its digits grow linearly) and never squares.
     *
     * @param realStats true: every round that takes no durable checkpoint
     *                  ends with [[Materialize.eager]] instead of the lazy
@@ -223,6 +234,14 @@ object Superstep {
       next: DataFrame, prev: DataFrame, iter: Int): DataFrame =
     next.join(prev.withColumnRenamed(value, "prev").hint("shuffle_hash"), key)
       .agg(coalesce(sum(when(col(value) =!= col("prev"), 1L).otherwise(0L)), lit(0L)))
+
+  /** Probe for a frontier state that tags every row with the round that
+    * reached it: the number of rows with `dist == iter`, over `next`
+    * alone. With [[untilZero]] the run stops on the first round that
+    * reaches nothing new.
+    */
+  def newRows(dist: String)(next: DataFrame, prev: DataFrame, iter: Int): DataFrame =
+    next.filter(col(dist) === iter).agg(count(lit(1)))
 
   /** Stop when the probe's count (column 0) is zero. */
   def untilZero(iter: Int, row: Row): Verdict =

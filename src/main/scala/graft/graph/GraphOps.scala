@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
+import graft.engine.Superstep
 
 /** Graph restructuring operators (SURVEY.md §2.2) as Catalyst-planned
   * DataFrame transforms over a COO edge table with columns
@@ -466,9 +467,11 @@ object GraphOps {
     * included — the set-reachability primitive behind the bow-tie
     * decomposition (per-source distances are [[graft.algo.Betweenness
     * .bfsLevels]]'s job; this collapses the source dimension, so state is
-    * one row per reached vertex regardless of seed count). Frontier BFS:
-    * per round one equi-join frontier⋈edges, a distinct, and a left-anti
-    * dedup against the visited set; rounds = graph diameter.
+    * one row per reached vertex regardless of seed count). Frontier BFS
+    * on the convergence driver over one (id, dist) state: per round one
+    * equi-join frontier⋈edges, a distinct, and a left-anti dedup against
+    * the state; rounds = graph diameter, at most `maxRounds` (the
+    * vertices reached within the cap are returned).
     *
     * @param seeds 1-column (id)
     * @return 1-column (id)
@@ -477,32 +480,16 @@ object GraphOps {
                     maxRounds: Int = 10000): DataFrame = {
     val e = directed.select(col("src").as("v"), col("dst").as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var visited = seeds.select(col("id")).distinct()
-      .transform(graft.engine.Materialize.eager)
-    var frontier = visited
-    var r = 0
-    var go = true
-    while (go && r < maxRounds) {
-      r += 1
-      val next = frontier.join(e, col("id") === col("v"))
+    val init = seeds.select(col("id")).distinct().select(col("id"), lit(0).as("dist"))
+      .localCheckpoint(eager = false)
+    val reached = Superstep.converge("reach", init, maxRounds) { (prev, i) =>
+      val found = prev.filter(col("dist") === i - 1).join(e, col("id") === col("v"))
         .select(col("w").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .transform(graft.engine.Materialize.eager)
-      if (next.count() == 0L) {
-        go = false
-        next.unpersist(blocking = false)
-      } else {
-        val nv = visited.union(next)
-          .transform(graft.engine.Materialize.eager)
-        if (frontier ne visited) frontier.unpersist(blocking = false)
-        visited.unpersist(blocking = false)
-        visited = nv
-        frontier = next
-      }
-    }
-    if (frontier ne visited) frontier.unpersist(blocking = false)
+        .join(prev, Seq("id"), "left_anti")
+      prev.union(found.select(col("id"), lit(i).as("dist")))
+    }(Superstep.newRows("dist"), Superstep.untilZero)
     e.unpersist(blocking = false)
-    visited
+    reached.labels.select(col("id"))
   }
 
   /** Seeded random vertex permutation (reference `getPermutation`,

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.algo.{Centrality, Hits, Influence, KCore, LabelPropagation,
+import graft.algo.{Betweenness, BowTie, Centrality, Hits, Influence, KCore, LabelPropagation,
   LabelSpreading, Matching, PageRank, ShortestPaths, SpanningForest, Spectral,
   StronglyConnected, Truss, WlRefinement}
 import graft.engine.{Checkpointer, Superstep}
@@ -230,6 +230,11 @@ class SuperstepDriverSpec extends GraftSuite {
     assert(peels === 3)
     assert(edgeSet(Truss.kTruss(karate, 4, maxRounds = peels)) === truss)
     intercept[IllegalArgumentException](Truss.kTruss(karate, 4, maxRounds = peels - 1))
+    // an empty truss stops on the round that empties it: the replay's
+    // last round starts from no edges, and the driver does not run it
+    val (emptyPeels, none) = trussRounds(Fixtures.karatePairs, 6)
+    assert(emptyPeels === 3 && none.isEmpty)
+    assert(Truss.kTruss(karate, 6, maxRounds = emptyPeels - 1).count() === 0L)
   }
 
   // A round's one action is its probe: one result job. Its lazy truncation
@@ -254,7 +259,12 @@ class SuperstepDriverSpec extends GraftSuite {
         ("ShortestPaths.run", n => ShortestPaths.run(unitPath(n), sources(1L)),
           (4L, 8L), 4),
         ("PageRank.run", n => PageRank.run(symKarate, eps = 0.0, maxIter = n.toInt,
-          partitions = 4, autoSkew = false), (3L, 7L), 4))
+          partitions = 4, autoSkew = false), (3L, 7L), 4),
+        // a BFS from the head of a path reaches one vertex per round
+        ("GraphOps.reachableFrom",
+          n => GraphOps.reachableFrom(edgesDf(chain(n)), sources(1L)), (4L, 8L), 4),
+        ("Betweenness.bfsLevels",
+          n => Betweenness.bfsLevels(edgesDf(chain(n)), sources(1L)), (4L, 8L), 4))
       loops.foreach { case (name, run, (a, b), extraRounds) =>
         val small = countActions(run(a))
         val large = countActions(run(b))
@@ -314,7 +324,13 @@ class SuperstepDriverSpec extends GraftSuite {
       "Truss.trussnessFixed" -> (() => Truss.trussnessFixed(karate, maxK = 5, roundsPerK = 2)),
       "Truss.kTruss" -> (() => Truss.kTruss(karate, 4)),
       "Centrality.neighborhoodFunctionApprox" ->
-        (() => Centrality.neighborhoodFunctionApprox(sym, maxDepth = 4)))
+        (() => Centrality.neighborhoodFunctionApprox(sym, maxDepth = 4)),
+      "GraphOps.reachableFrom" -> (() => GraphOps.reachableFrom(karate, sources(1L))),
+      "Betweenness.bfsLevels" -> (() => Betweenness.bfsLevels(sym, sources(1L, 34L))),
+      "Betweenness.bfsParents" -> (() => Betweenness.bfsParents(sym, sources(1L, 34L))),
+      "Betweenness.run" -> (() => Betweenness.run(sym, sources(1L, 34L))),
+      "Betweenness.runEdges" -> (() => Betweenness.runEdges(sym, sources(1L, 34L))),
+      "BowTie.classify" -> (() => BowTie.classify(karate)))
     runs.foreach { case (name, run) =>
       val before = cacheEntries()
       run()
@@ -353,6 +369,15 @@ class SuperstepDriverSpec extends GraftSuite {
     // the lazy truncation copies the step's estimate, which squares every round
     val lazily = selfJoinRounds(6, realStats = false)
     assert(size(lazily) > (BigInt(1) << 64), s"lazy estimate ${size(lazily)}")
+  }
+
+  test("a frontier BFS state's size estimate grows by one edge-join factor per round") {
+    // 40 rounds on a 41-vertex path, the depth cap; the estimate was
+    // measured at 106 digits, and squaring would double them per round
+    val levels = Betweenness.bfsLevels(edgesDf(chain(41)), sources(1L))
+    val size = levels.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size.toString.length < 212, s"estimated size has ${size.toString.length} digits")
+    assert(levels.agg(max("dist")).first().getLong(0) === 40L)
   }
 
   test("a realStats convergence round costs one eager truncation and one probe") {
