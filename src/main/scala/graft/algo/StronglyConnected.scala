@@ -102,7 +102,7 @@ object StronglyConnected {
           .filter(col("ucolor") === col("fcolor"))
           .select(col("src").as("id")).distinct()
           .join(visited, Seq("id"), "left_anti")
-        visited.union(found.select(col("id"), lit(i).as("dist")))
+        Superstep.appendRows(visited, found.select(col("id"), lit(i).as("dist")))
       }(Superstep.newRows("dist"), Superstep.untilZero).labels
       // the reached set of this round: all vertices that backward-reach
       // their color root within the class → SCC membership keyed by color

@@ -174,7 +174,10 @@ object Superstep {
     * round `dist`: the step expands the rows with `dist == i − 1` along
     * the edges, anti-joins what it finds against the state and returns
     * the state with the new rows (`dist = i`) appended; the probe is
-    * [[newRows]]. Those steps need no `realStats`: the state meets a
+    * [[newRows]]. The loops whose round count the graph's diameter sets
+    * (`reachableFrom`, SCC's backward BFS) append with [[appendRows]];
+    * `bfsLevels` and Brandes stop at `Betweenness.DepthCap`. Those steps
+    * need no `realStats`: the state meets a
     * function of itself only through the anti-join and the union, whose
     * estimates add, so the estimate gains one edge-join factor per round
     * (its digits grow linearly) and never squares.
@@ -242,6 +245,18 @@ object Superstep {
     */
   def newRows(dist: String)(next: DataFrame, prev: DataFrame, iter: Int): DataFrame =
     next.filter(col(dist) === iter).agg(count(lit(1)))
+
+  /** A frontier state with one round's new rows appended, in at most
+    * `spark.sql.shuffle.partitions` partitions. A union keeps the
+    * partitions of both sides, so an uncapped state gains the new rows'
+    * partitions every round, and every later scan of it (the frontier
+    * filter, the anti-join, the probe) runs one task per partition: on a
+    * long-diameter graph the tasks per round grow with the round number.
+    * The coalesce merges partitions without a shuffle.
+    */
+  def appendRows(state: DataFrame, found: DataFrame): DataFrame =
+    state.union(found)
+      .coalesce(state.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
 
   /** Stop when the probe's count (column 0) is zero. */
   def untilZero(iter: Int, row: Row): Verdict =

@@ -486,7 +486,7 @@ object GraphOps {
       val found = prev.filter(col("dist") === i - 1).join(e, col("id") === col("v"))
         .select(col("w").as("id")).distinct()
         .join(prev, Seq("id"), "left_anti")
-      prev.union(found.select(col("id"), lit(i).as("dist")))
+      Superstep.appendRows(prev, found.select(col("id"), lit(i).as("dist")))
     }(Superstep.newRows("dist"), Superstep.untilZero)
     e.unpersist(blocking = false)
     reached.labels.select(col("id"))

@@ -5,21 +5,24 @@ Loads each query's parquet output from the Verify dump, runs the matching
 oracle SQL in DuckDB against the same scale-factor tables, sorts columns by
 name, canonicalizes values, and compares row multisets.
 
-Every oracle query runs under a wall limit (--limit seconds, default 120).
-The oracles run in a worker process, and a query that outruns the limit
+Every oracle query runs under a wall limit of LIMIT_S seconds. The
+oracles run in a worker process, and a query that outruns the limit
 kills the worker: DuckDB does not honor `interrupt()` while it plans, and
 an oracle whose CTEs inline into thousands of joins (g_mis_t3) never
 leaves planning. Such a gate prints `TIMEOUT <gate>` and is counted apart
 from failures; `ALL PASS` needs zero of both, and either makes the exit
 code nonzero.
 
-Usage: parity_check.py [--limit SECONDS] <sfDir> <verifyOutDir>
+Usage: parity_check.py <sfDir> <verifyOutDir>
 """
-import argparse, glob, hashlib, json, multiprocessing, sys
+import glob, hashlib, json, multiprocessing, sys
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+# wall seconds per oracle query
+LIMIT_S = 120
 
 
 def connect(sfdir):
@@ -59,10 +62,10 @@ class Oracle:
                                      args=(child, self.sfdir), daemon=True)
         self.proc.start()
 
-    def run(self, sql, limit):
+    def run(self, sql):
         """("ok", columns, rows), ("err", message, None), or None on timeout."""
         self.pipe.send(sql)
-        if self.pipe.poll(limit):
+        if self.pipe.poll(LIMIT_S):
             return self.pipe.recv()
         self.proc.kill()
         self.proc.join()
@@ -90,28 +93,25 @@ def rowset(cols, rows):
 
 
 def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--limit", type=float, default=120.0,
-                    help="wall seconds per oracle query")
-    ap.add_argument("sfdir")
-    ap.add_argument("outdir")
-    args = ap.parse_args()
-    con = connect(args.sfdir)
-    oracle_sql = json.load(open(f"{args.outdir}/oracle_sql.json"))
-    oracle = Oracle(args.sfdir)
+    if len(sys.argv) != 3:
+        sys.exit(__doc__)
+    sfdir, outdir = sys.argv[1], sys.argv[2]
+    con = connect(sfdir)
+    oracle_sql = json.load(open(f"{outdir}/oracle_sql.json"))
+    oracle = Oracle(sfdir)
 
     fails = timeouts = 0
     for name in sorted(oracle_sql):
-        files = glob.glob(f"{args.outdir}/{name}/*.parquet")
+        files = glob.glob(f"{outdir}/{name}/*.parquet")
         if not files:
             print(f"MISS  {name}: no spark output")
             fails += 1
             continue
-        got = con.sql(f"SELECT * FROM '{args.outdir}/{name}/*.parquet'")
+        got = con.sql(f"SELECT * FROM '{outdir}/{name}/*.parquet'")
         gcols, grows = got.columns, got.fetchall()
-        want = oracle.run(oracle_sql[name], args.limit)
+        want = oracle.run(oracle_sql[name])
         if want is None:
-            print(f"TIMEOUT {name}: oracle ran over {args.limit:g} s")
+            print(f"TIMEOUT {name}: oracle ran over {LIMIT_S} s")
             timeouts += 1
             continue
         status, wcols, wrows = want
