@@ -1,7 +1,8 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
 import graft.engine.{Materialize, Superstep}
 
@@ -50,6 +51,17 @@ object Betweenness {
   def runEdges(edges: DataFrame, sources: DataFrame,
                maxDepth: Int = DepthCap): DataFrame =
     brandesCore(edges, sources, maxDepth, wantEdges = true)._2
+
+  /** Sum of the double column `c` that does not depend on the order its
+    * rows arrive in, which any plan change moves: every value rounds to
+    * `decimal(38,18)`, whose sums are exact, and the total rounds back to
+    * a double once. Holds for partial and total sums below 10^20 in
+    * magnitude (beyond that the query fails under ANSI mode); a Brandes
+    * score is at most sources × vertices. The forward pass needs no such
+    * sum: path counts σ are integers, exact as doubles below 2^53.
+    */
+  private def exactSum(c: String): Column =
+    sum(col(c).cast(DecimalType(38, 18))).cast("double")
 
   private def brandesCore(edges: DataFrame, sources: DataFrame,
                           maxDepth: Int, wantEdges: Boolean)
@@ -110,11 +122,11 @@ object Betweenness {
         // each DAG edge (v, w) appears at exactly one level per source, so
         // the per-level per-edge partial sums union to the full edge score
         edgeLevels += pairC.groupBy(col("cid").as("v"), col("cw").as("w"))
-          .agg(sum("c").as("ec"))
-          .transform(Materialize.eager)
+          .agg(exactSum("c").as("ec"))
+          .transform(Materialize.eager(_).state)
       }
       val contrib = pairC
-        .groupBy(col("cs"), col("cid")).agg(sum("c").as("add"))
+        .groupBy(col("cs"), col("cid")).agg(exactSum("c").as("add"))
       delta
         .join(contrib, delta("s") === col("cs") && delta("id") === col("cid"), "left")
         .select(delta("s"), delta("id"),
@@ -122,7 +134,7 @@ object Betweenness {
     }
 
     val bc = delta.filter(col("s") =!= col("id"))
-      .groupBy("id").agg(sum("delta").as("bc"))
+      .groupBy("id").agg(exactSum("delta").as("bc"))
     val eb =
       if (!wantEdges) null
       else {
@@ -132,7 +144,7 @@ object Betweenness {
             // depth-0 graph (no BFS progress): no shortest-path edges
             slots.select(col("src"), col("dst"), lit(0.0).as("ec")).limit(0)
           else edgeLevels.reduce(_ union _).groupBy("v", "w")
-            .agg(sum("ec").as("ec"))
+            .agg(exactSum("ec").as("ec"))
             .select(col("v").as("src"), col("w").as("dst"), col("ec"))
         // every input slot appears in the output, 0.0 off all DAGs;
         // built from the CALLER's edge frame (the per-level partials are
@@ -204,7 +216,7 @@ object Betweenness {
     val roots = lv.filter(col("dist") === 0)
       .select(col("source"), col("id"), col("dist"), col("id").as("parent"))
     val out = roots.union(cand.select("source", "id", "dist", "parent"))
-    val materialized = out.transform(Materialize.eager)
+    val materialized = out.transform(Materialize.eager(_).state)
     lv.unpersist(blocking = false)
     materialized
   }

@@ -29,7 +29,7 @@ object Bipartite {
     // below (sources, layer join, size agg) — truncate it once or the
     // re-expanded plans blow the driver heap
     val lab = ConnectedComponents.runAlternating(edges)
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     val sources = lab.select(col("label").as("id")).distinct()
     val lv = Betweenness.bfsLevels(edges, sources)
     val own = lv.join(
@@ -37,7 +37,7 @@ object Bipartite {
       .select(col("source").as("component"), col("id"),
         (col("dist") % 2).as("p"))
       // referenced three times below (two conflict legs + coverage agg)
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     val layered = own.groupBy("component")
       .agg(count(lit(1)).as("n_layered"))
     val conflicts = edges

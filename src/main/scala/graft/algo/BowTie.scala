@@ -59,7 +59,7 @@ object BowTie {
           .otherwise(lit("other"))
           .as("bowtie"))
       // materialize before freeing the inputs the lazy plan references
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     fwdReach.unpersist(blocking = false)
     bwdReach.unpersist(blocking = false)
     coreIds.unpersist(blocking = false)

@@ -88,18 +88,16 @@ object Centrality {
     import spark.implicits._
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val balls0 = GraphOps.vertices(e)
-      .groupBy(col("id")).agg(hll_sketch_agg(col("id"), lgConfigK).as("sk"))
-      .transform(Materialize.eager)
     // coalesce: an empty vertex set sums to NULL, and the series should
     // degrade to a single (0, 0) row rather than NPE
-    def total(b: DataFrame): DataFrame =
-      b.agg(coalesce(sum(hll_sketch_estimate(col("sk"))), lit(0L)))
-    var prevN = total(balls0).first().getLong(0)
+    val total = coalesce(sum(hll_sketch_estimate(col("sk"))), lit(0L))
+    val balls0 = Materialize.eager(GraphOps.vertices(e)
+      .groupBy(col("id")).agg(hll_sketch_agg(col("id"), lgConfigK).as("sk")), total)
+    var prevN = balls0.scalars.getLong(0)
     val series = scala.collection.mutable.ArrayBuffer[(Long, Long)]((0L, prevN))
     // empty graph: no rounds, the series is just (0, 0)
-    Superstep.converge("hyperanf", balls0,
-        if (prevN == 0L) 0 else maxDepth, realStats = true) { (balls, _) =>
+    Superstep.converge("hyperanf", balls0.state,
+        if (prevN == 0L) 0 else maxDepth) { (balls, _) =>
       val gathered = e.join(balls, e("dst") === balls("id"))
         .groupBy(e("src").as("gid"))
         .agg(hll_union_agg(col("sk")).as("gsk"))
@@ -107,7 +105,7 @@ object Centrality {
         .select(col("id"),
           when(col("gsk").isNull, col("sk"))
             .otherwise(hll_union(col("sk"), col("gsk"))).as("sk"))
-    }((next, _, _) => total(next), (h, row) => {
+    }(Superstep.Observe(_ => Seq(total)), (h, row) => {
       val n = row.getLong(0)
       series += ((h.toLong, n))
       val verdict = Superstep.Verdict(n - prevN, 0L,
@@ -207,7 +205,7 @@ object Centrality {
                         pairs: DataFrame,
                         maxDepth: Int = Betweenness.DepthCap): DataFrame = {
     val lv = Betweenness.bfsLevels(edges, landmarks, maxDepth)
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     val du = lv.select(col("source").as("lu"), col("id").as("src"),
       col("dist").as("d_u"))
     val dv = lv.select(col("source").as("lv2"), col("id").as("dst2"),

@@ -30,8 +30,8 @@ object Dense {
   def peelRounds(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     var slots = edges.select(col("src"), col("dst"))
-      .transform(Materialize.eager)
-    var alive = GraphOps.vertices(slots).transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
+    var alive = GraphOps.vertices(slots).transform(Materialize.eager(_).state)
     var out: DataFrame = null
     var r = 0
     while (r < rounds) {
@@ -44,15 +44,15 @@ object Dense {
         val removed = alive.join(deg, Seq("id"), "left")
           .filter(coalesce(col("deg"), lit(0L)) * n <= t)
           .select(col("id"), lit(r.toLong).as("peel_round"))
-          .transform(Materialize.eager)
+          .transform(Materialize.eager(_).state)
         out = if (out == null) removed else out.union(removed)
         val nextAlive = alive.join(removed, Seq("id"), "left_anti")
-          .transform(Materialize.eager)
+          .transform(Materialize.eager(_).state)
         val nextSlots = slots
           .join(nextAlive.select(col("id").as("src")), Seq("src"), "left_semi")
           .join(nextAlive.select(col("id").as("dst")), Seq("dst"), "left_semi")
           .select(col("src"), col("dst"))
-          .transform(Materialize.eager)
+          .transform(Materialize.eager(_).state)
         alive = nextAlive
         slots = nextSlots
       }

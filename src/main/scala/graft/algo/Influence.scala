@@ -43,7 +43,7 @@ object Influence {
       GraphOps.vertices(e).agg(count(lit(1)).as("n"))).first()
     val delta = math.round(1000000.0 * scal.getLong(1) / scal.getLong(0))
     val va0 = GraphOps.vertices(e).select(col("id"), lit(1000000L).as("va"))
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
     var selected = List.empty[(Long, Long, Long)] // (rank, id, score)
     Superstep.fixed(va0, k, readsPrevOnce = false) { (va, r) =>
       val chosen = selected.map(_._2)
@@ -86,7 +86,7 @@ object Influence {
     val e = edges.select(col("src"), col("dst"))
     val deg = GraphOps.degrees(e)
     val seeded = seeds.select(col("id"), lit(0L).as("round"))
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
     Superstep.fixed(seeded, rounds, readsPrevOnce = false) { (active, r) =>
       val gathered = e.join(active.select(col("id").as("aid")),
           col("dst") === col("aid"))
@@ -124,9 +124,9 @@ object Influence {
     val live = edges.select(col("src"), col("dst"))
       .filter(graft.text.TextIndex.md5Uniform(
         concat_ws(":", col("src"), col("dst"))) % 1000 < permille)
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
     val seeded = seeds.select(col("id"), lit(0L).as("round"))
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
     Superstep.fixed(seeded, rounds, readsPrevOnce = false) { (active, r) =>
       val fresh = live.join(active.select(col("id").as("aid")),
           col("dst") === col("aid"))

@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.engine.Superstep
+import graft.engine.{Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** k-core decomposition by distributed peeling — the standard
@@ -23,10 +23,10 @@ import graft.graph.GraphOps
   * graphs) is the exact k-core.
   *
   * The surviving-vertex state feeds two semi-joins per round, so every
-  * round's state is truncated before the next round reads it
+  * round's state is eagerly truncated before the next round reads it
   * (twice-referenced state in a lazy chain doubles the plan per round):
-  * eagerly on the fixed schedules, by the convergence driver's probe on
-  * the fixpoint forms.
+  * the fixed schedules run on `Superstep.fixed(…, readsPrevOnce =
+  * false)`, the fixpoint forms on `Superstep.converge`.
   */
 object KCore {
 
@@ -66,7 +66,7 @@ object KCore {
     var left = n
     val res = Superstep.converge("kcore", alive, if (n == 0L) 0 else maxRounds) {
       (a, _) => peel(e, a, k)
-    }((next, _, _) => next.agg(count(lit(1))), (_, row) => {
+    }(Superstep.Observe(_ => Seq(count(lit(1)))), (_, row) => {
       val m = row.getLong(0)
       val verdict = Superstep.Verdict(left - m, 0L, m == left || m == 0L)
       left = m
@@ -82,15 +82,9 @@ object KCore {
     requireValidK(k)
     val e = GraphOps.symmetrize(edges.select("src", "dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var alive = GraphOps.vertices(e)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      val next = peel(e, alive, k).localCheckpoint(eager = true)
-      alive.unpersist(blocking = false)
-      alive = next
-    }
+    val verts = GraphOps.vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
+    val alive = peelRounds(e, verts, k, rounds)
+    if (alive ne verts) verts.unpersist(blocking = false)
     e.unpersist(blocking = false)
     alive
   }
@@ -110,22 +104,17 @@ object KCore {
     require(s >= 1, s"s-core requires s >= 1, got $s")
     val e = weightedEdges.select(col("src"), col("dst"), col("weight"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var alive = GraphOps.vertices(e)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      val sub = e
-        .join(alive.select(col("id").as("sid")), col("src") === col("sid"), "left_semi")
+    val verts = GraphOps.vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
+    // the survivors feed both semi-joins
+    val alive = Superstep.fixed(verts, rounds, readsPrevOnce = false) { (alive, _) =>
+      e.join(alive.select(col("id").as("sid")), col("src") === col("sid"), "left_semi")
         .join(alive.select(col("id").as("did")), col("dst") === col("did"), "left_semi")
-      val next = sub.groupBy(col("src").as("id"))
+        .groupBy(col("src").as("id"))
         .agg(sum(col("weight")).cast("long").as("strength"))
         .filter(col("strength") >= s)
         .select(col("id"))
-        .localCheckpoint(eager = true)
-      alive.unpersist(blocking = false)
-      alive = next
     }
+    if (alive ne verts) verts.unpersist(blocking = false)
     e.unpersist(blocking = false)
     alive
   }
@@ -146,19 +135,13 @@ object KCore {
   }
 
   /** One fixed-schedule peel pass at level k starting from `alive`
-    * (shared by both coreness forms below): `rounds` degree-filter
-    * rounds against the full symmetrized edge table.
+    * (shared by [[peelFixed]] and the fixed coreness forms below):
+    * `rounds` degree-filter rounds against the full symmetrized edge
+    * table. The survivors feed both semi-joins of [[peel]].
     */
-  private def peelRounds(e: DataFrame, alive0: DataFrame, k: Long,
-                         rounds: Int): DataFrame = {
-    var alive = alive0
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      alive = peel(e, alive, k).localCheckpoint(eager = true)
-    }
-    alive
-  }
+  private def peelRounds(e: DataFrame, alive: DataFrame, k: Long,
+                         rounds: Int): DataFrame =
+    Superstep.fixed(alive, rounds, readsPrevOnce = false)((a, _) => peel(e, a, k))
 
   /** Full coreness decomposition on a FIXED schedule — the gate-able
     * form: for k = 1..maxK run exactly `roundsPerK` peel rounds, each
@@ -193,7 +176,7 @@ object KCore {
       .groupBy("id").agg(max(col("k")).as("coreness"))
     val res = verts.join(out, Seq("id"), "left")
       .select(col("id"), coalesce(col("coreness"), lit(0L)).as("coreness"))
-      .localCheckpoint(eager = true)
+      .transform(Materialize.eager(_).state)
     e.unpersist(blocking = false)
     verts.unpersist(blocking = false)
     res
@@ -227,7 +210,7 @@ object KCore {
         .groupBy("id").agg(max(col("k")).as("coreness"))
     val res = verts.join(out, Seq("id"), "left")
       .select(col("id"), coalesce(col("coreness"), lit(0L)).as("coreness"))
-      .localCheckpoint(eager = true)
+      .transform(Materialize.eager(_).state)
     e.unpersist(blocking = false)
     verts.unpersist(blocking = false)
     res
@@ -278,7 +261,7 @@ object KCore {
     }
     layers += alive.select(col("id"),
       lit((maxK * roundsPerK + 1).toLong).as("layer"))
-    val res = layers.reduce(_ union _).localCheckpoint(eager = true)
+    val res = Materialize.eager(layers.reduce(_ union _)).state
     e.unpersist(blocking = false)
     verts.unpersist(blocking = false)
     res

@@ -370,7 +370,7 @@ object LabelPropagation {
     val init = verts
       .join(seeds.select(col("id"), col("label")), Seq("id"), "left")
       .select(col("id"), col("label"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     Superstep.fixed(init, supersteps, readsPrevOnce = false) { (labels, _) =>
       val msgs = edges.join(labels.filter(col("label").isNotNull),
           edges("dst") === col("id"))

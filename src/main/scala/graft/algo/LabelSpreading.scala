@@ -42,9 +42,9 @@ object LabelSpreading {
     require(supersteps >= 1)
     val deg = GraphOps.degrees(edges)
       .select(col("id"), col("degree"))
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
     val y = seeds.select(col("id"), col("cls"), lit(1.0).as("y"))
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
     val f0 = y.select(col("id"), col("cls"), col("y").as("f"))
     Superstep.fixed(f0, supersteps, readsPrevOnce = false) { (f, _) =>
       val gathered = edges

@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.{Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** Deterministic synchronous Louvain — modularity-ascent community
@@ -143,8 +144,8 @@ object Louvain {
   }
 
   /** `rounds` synchronous move rounds from the singleton assignment —
-    * the gate-able fixed-schedule form. Each round eagerly truncates
-    * (the assignment is referenced several times per round).
+    * the gate-able fixed-schedule form. The assignment is referenced
+    * several times per round, so every round is eagerly truncated.
     */
   def moveFixed(edges: DataFrame, rounds: Int): DataFrame = {
     val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
@@ -153,13 +154,10 @@ object Louvain {
     // truncate the initial assignment too: moveRound references it four
     // times (tot, k_id, candidates, own-community join), so a lazy
     // vertices().distinct subtree would be recomputed per reference
-    var assign = GraphOps.vertices(e).select(col("id"), col("id").as("com"))
-      .transform(graft.engine.Materialize.eager)
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      assign = moveRound(e, strength, assign, m2, r).localCheckpoint(eager = true)
-    }
+    val init = GraphOps.vertices(e).select(col("id"), col("id").as("com"))
+      .transform(Materialize.eager(_).state)
+    val assign = Superstep.fixed(init, rounds, readsPrevOnce = false)(
+      moveRound(e, strength, _, m2, _))
     strength.unpersist(blocking = false)
     e.unpersist(blocking = false)
     assign
@@ -203,7 +201,7 @@ object Louvain {
       var stable = false
       while (!stable && r < maxRoundsPerLevel) {
         r += 1
-        val next = moveRound(g, strength, assign, m2, r).localCheckpoint(eager = true)
+        val next = Materialize.eager(moveRound(g, strength, assign, m2, r)).state
         // prev side hash-built (guide §3.1): the checkpointed assignment
         // carries no stats, so the stability count would plan sort-merge
         val moved = next.join(assign.withColumnRenamed("com", "prev")
@@ -219,11 +217,11 @@ object Louvain {
         .join(assign.alias("a").hint("shuffle_hash"),
           col("c.com") === col("a.id"))
         .select(col("c.id"), col("a.com"))
-        .localCheckpoint(eager = true)
+        .transform(Materialize.eager(_).state)
       composed.unpersist(blocking = false)
       composed = newComposed
       val contracted = aggregateGraph(g, assign)
-        .transform(graft.engine.Materialize.eager)
+        .transform(Materialize.eager(_).state)
       assign.unpersist(blocking = false)
       val nNew = GraphOps.vertices(contracted).count()
       g.unpersist(blocking = false)

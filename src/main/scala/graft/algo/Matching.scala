@@ -30,7 +30,7 @@ object Matching {
     val canon = GraphOps.canonical(edges)
       .select(col("src"), col("dst"),
         md5(concat_ws(":", col("src"), col("dst"), lit(seed))).as("prio"))
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
     selectRounds(canon, Nil, rounds)
   }
 
@@ -50,7 +50,7 @@ object Matching {
         .join(vmin.select(col("v").as("dst"), col("pmin").as("pd")), "dst")
         .filter(col("prio") === col("ps") && col("prio") === col("pd"))
         .select(kept :+ lit(r.toLong).as("round"): _*)
-        .transform(Materialize.eager)
+        .transform(Materialize.eager(_).state)
       picked += sel
       val mv = sel.select(col("src").as("id"))
         .union(sel.select(col("dst"))).distinct()
@@ -107,7 +107,7 @@ object Matching {
           10, "0"),
           md5(concat_ws(":", col("src"), col("dst"), lit(seed))))
           .as("prio"))
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
     selectRounds(canon, Seq("weight"), rounds)
   }
 

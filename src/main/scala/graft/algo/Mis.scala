@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.engine.Materialize
+import graft.engine.{Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** Maximal independent set by Luby-style rounds over fixed seeded
@@ -24,9 +24,10 @@ import graft.graph.GraphOps
   * Per round: two edge-keyed hash joins (restrict edges to
   * undecided×undecided), one (priority, id) struct-min aggregation, and
   * vertex-sized status joins — no windows, no per-vertex collect, so
-  * each round is a constant number of shuffles at any graph size. State
-  * is eagerly truncated per round (it feeds both the update and the next
-  * round's restriction).
+  * each round is a constant number of shuffles at any graph size. The
+  * rounds run on `Superstep.converge`, whose eager truncation per round
+  * (the state feeds both the update and the next round's restriction)
+  * also counts the undecided vertices.
   *
   * Expects symmetrized deduplicated edges. The tie pair (priority, id)
   * makes md5 collisions harmless: ordering stays total.
@@ -56,13 +57,10 @@ object Mis {
                   stopWhenDecided: Boolean): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var state = Materialize.eager(GraphOps.vertices(e)
+    val init = Materialize.eager(GraphOps.vertices(e)
       .select(col("id"), priority(col("id"), seed).as("prio"),
-        lit("und").as("status")))
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      r += 1
+        lit("und").as("status"))).state
+    val res = Superstep.converge("mis", init, rounds) { (state, _) =>
       val und = state.filter(col("status") === "und")
       // undecided×undecided edges; min (priority, id) per source
       val nbrMin = e
@@ -79,21 +77,17 @@ object Mis {
       val losers = e
         .join(winners.select(col("id").as("src")), Seq("src"))
         .select(col("dst").as("id")).distinct()
-      // state is referenced twice next round (restriction + fold) and
-      // feeds the output — eager truncation via the shared leak-free path
-      val next = Materialize.eager(state
+      state
         .join(winners.select(col("id"), lit(1).as("_in")), Seq("id"), "left")
         .join(losers.select(col("id"), lit(1).as("_out")), Seq("id"), "left")
         .select(col("id"), col("prio"),
           when(col("status") =!= "und", col("status"))
             .when(col("_in").isNotNull, lit("in"))
             .when(col("_out").isNotNull, lit("out"))
-            .otherwise(lit("und")).as("status")))
-      state = next
-      if (stopWhenDecided)
-        done = state.filter(col("status") === "und").isEmpty
-    }
+            .otherwise(lit("und")).as("status"))
+    }(Superstep.Observe(_ => Seq(count_if(col("status") === "und"))), (_, row) =>
+      Superstep.Verdict(row.getLong(0), 0L, stopWhenDecided && row.getLong(0) == 0L))
     e.unpersist(blocking = false)
-    state.select(col("id"), col("status"))
+    res.labels.select(col("id"), col("status"))
   }
 }

@@ -191,14 +191,15 @@ object PageRank {
             .select(edgesDeg("dst").as("id"), (col("rank") / col("outdeg")).as("c"))
       }
       val sums = contribs.groupBy("id").agg(sum("c").as("s"))
-      verts.join(sums, Seq("id"), "left")
+      // prev covers every vertex; each row carries its previous rank for
+      // the probe
+      prev.join(sums, Seq("id"), "left")
         .select(col("id"),
           (lit((1.0 - damping) / n) +
             lit(damping) * (coalesce(col("s"), lit(0.0)) + lit(dMass / n)))
-            .as("label"))
-    }((next, prev, _) =>
-      next.join(prev.withColumnRenamed("label", "prev").hint("shuffle_hash"), "id")
-        .agg(max(abs(col("label") - col("prev")))),
+            .as("label"),
+          col("label").as("prev"))
+    }(Superstep.Observe(_ => Seq(max(abs(col("label") - col("prev"))))),
       (_, row) => {
         val delta = row.getDouble(0)
         hist += delta
@@ -331,7 +332,7 @@ object PageRank {
       .select(col("topic"), col("id"),
         when(col("isSeed").isNotNull, lit(1.0) / col("ns"))
           .otherwise(lit(0.0)).as("reset"))
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
 
     // read twice per step when danglers exist (dangling probe + contribs)
     val ranks = Superstep.fixed(
@@ -452,7 +453,7 @@ object PageRank {
 
     val init = verts
       .select(col("id"), lit(1.0 / n).as("cash"), lit(1.0 / n).as("hist"))
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
     val out = Superstep.fixed(init, iterations, readsPrevOnce = false) { (st, _) =>
       val dMass =
         if (hasDangling)
@@ -509,7 +510,7 @@ object PageRank {
     val init = verts
       .join(seeds.select(col("id"), lit(1.0 / nS).as("t")), Seq("id"), "left")
       .select(col("id"), coalesce(col("t"), lit(0.0)).as("trust"))
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
     val trust = Superstep.fixed(init, iterations, readsPrevOnce = false) { (trust, _) =>
       val sums = edgesDeg
         .join(trust, edgesDeg("src") === trust("id"))
@@ -522,7 +523,7 @@ object PageRank {
     val res = trust.join(outDeg, Seq("id"), "left")
       .select(col("id"), col("trust"),
         (col("trust") / coalesce(col("outdeg"), lit(1L))).as("score"))
-      .localCheckpoint(eager = true)
+      .transform(Materialize.eager(_).state)
     edgesDeg.unpersist(blocking = false)
     outDeg.unpersist(blocking = false)
     verts.unpersist(blocking = false)

@@ -4,6 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
+import graft.engine.{Materialize, Superstep}
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Deterministic random-walk generation — the corpus builder for
   * graph-embedding training (DeepWalk / node2vec consume exactly this:
@@ -20,6 +23,8 @@ import org.apache.spark.storage.StorageLevel
   * two equi-joins on the walk state (degree lookup, then (vertex, idx)
   * neighbor lookup). State is one row per active walk; at 10^9 walks the
   * step cost is walks ⋈ adjacency, partition-pruned by the join keys.
+  * Every step's state is read twice, by the next step and by the output
+  * union, so the walks run on `Superstep.fixed(…, readsPrevOnce = false)`.
   */
 object RandomWalks {
 
@@ -45,11 +50,6 @@ object RandomWalks {
   val StepMixA = 1103515L
   val StepMixB = 12345L
 
-  /** One walk per row of `starts` (walk_id = start id), `length` steps.
-    * Returns (walk_id, step, vertex) for steps 0..length — a walk stops
-    * early only at a sink (impossible on a symmetrized graph). Exact for
-    * all vertex/walk ids < 2^40 (see [[StepMixA]]).
-    */
   /** Second-order (node2vec-style) biased walks: from step 2 on, the
     * neighbor choice is weighted by the walk's PREVIOUS vertex — wReturn
     * for stepping back to it, wCommon for neighbors it shares with the
@@ -78,22 +78,21 @@ object RandomWalks {
     val step0 = starts.select(col("id").as("walk_id"),
       lit(0L).as("step"), col("id").as("vertex"))
     // step 1: uniform LCG choice, identical to walks()'s t=1
-    var state = step0
+    val step1 = Materialize.eager(step0
       .join(deg.select(col("id").as("did"), col("d")), col("vertex") === col("did"))
       .join(adj.select(col("src").as("asrc"), col("dst").as("adst"), col("idx")),
         col("vertex") === col("asrc") &&
           col("idx") === (col("vertex") * StepMixA + col("walk_id") * StepMixB
             + lit(1L)) % col("d"))
-      .select(col("walk_id"), col("adst").as("cur"), col("vertex").as("prev"))
-      .localCheckpoint(eager = true)
+      .select(col("walk_id"), lit(1L).as("step"), col("adst").as("cur"),
+        col("vertex").as("prev"))).state
     // only step 1 reads the indexed adjacency; free it before the loop
     adj.unpersist(blocking = false)
-    val frames = scala.collection.mutable.ArrayBuffer[DataFrame](
-      step0, state.select(col("walk_id"), lit(1L).as("step"),
-        col("cur").as("vertex")))
-    var t = 1
-    while (t < length) {
-      t += 1
+    val frames = ArrayBuffer(step0)
+    // step i + 1 from the state of step i
+    val last = Superstep.fixed(step1, length - 1, readsPrevOnce = false) { (state, i) =>
+      frames += state.select(col("walk_id"), col("step"), col("cur").as("vertex"))
+      val t = i + 1
       val cand = state
         .join(e.select(col("src").as("cs"), col("dst").as("x")),
           col("cur") === col("cs"))
@@ -110,44 +109,42 @@ object RandomWalks {
         .withColumn("tw", sum(col("w")).over(Window.partitionBy("walk_id")))
       val r = (col("cur") * StepMixA + col("walk_id") * StepMixB
         + lit(t.toLong)) % col("tw")
-      state = cum
+      cum
         .filter(r >= col("cw") - col("w") && r < col("cw"))
-        .select(col("walk_id"), col("x").as("cur"), col("cur").as("prev"))
-        .localCheckpoint(eager = true)
-      frames += state.select(col("walk_id"), lit(t.toLong).as("step"),
-        col("cur").as("vertex"))
+        .select(col("walk_id"), lit(t.toLong).as("step"), col("x").as("cur"),
+          col("cur").as("prev"))
     }
+    frames += last.select(col("walk_id"), col("step"), col("cur").as("vertex"))
     val out = frames.reduce(_ union _)
       .select(col("walk_id"), col("step"), col("vertex"))
     e.unpersist(blocking = false)
     out
   }
 
+  /** One walk per row of `starts` (walk_id = start id), `length` steps.
+    * Returns (walk_id, step, vertex) for steps 0..length — a walk stops
+    * early only at a sink (impossible on a symmetrized graph). Exact for
+    * all vertex/walk ids < 2^40 (see [[StepMixA]]).
+    */
   def walks(edges: DataFrame, starts: DataFrame, length: Int): DataFrame = {
     val adj = indexedAdjacency(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val deg = edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("d"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var state = starts.select(col("id").as("walk_id"),
-        lit(0L).as("step"), col("id").as("cur"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val frames = scala.collection.mutable.ArrayBuffer[DataFrame](state)
-    var t = 0
-    while (t < length) {
-      t += 1
-      val next = state
+    val frames = ArrayBuffer.empty[DataFrame]
+    val last = Superstep.fixed(starts.select(col("id").as("walk_id"),
+        lit(0L).as("step"), col("id").as("cur")), length,
+        readsPrevOnce = false) { (state, t) =>
+      frames += state
+      state
         .join(deg.select(col("id").as("did"), col("d")), col("cur") === col("did"))
         .join(adj.select(col("src").as("asrc"), col("dst").as("adst"), col("idx")),
           col("cur") === col("asrc") &&
             col("idx") === (col("cur") * StepMixA + col("walk_id") * StepMixB
               + lit(t.toLong)) % col("d"))
         .select(col("walk_id"), lit(t.toLong).as("step"), col("adst").as("cur"))
-        .localCheckpoint(eager = true)
-      frames += next
-      state = next
     }
-    val out = frames.reduce(_ union _)
+    val out = (frames :+ last).reduce(_ union _)
       .select(col("walk_id"), col("step"), col("cur").as("vertex"))
     adj.unpersist(blocking = false)
     deg.unpersist(blocking = false)
@@ -175,13 +172,11 @@ object RandomWalks {
                     length: Int): DataFrame = {
     val e = wEdges.select(col("src"), col("dst"), col("weight"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var state = starts.select(col("id").as("walk_id"),
-        lit(0L).as("step"), col("id").as("cur"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val frames = scala.collection.mutable.ArrayBuffer[DataFrame](state)
-    var t = 0
-    while (t < length) {
-      t += 1
+    val frames = ArrayBuffer.empty[DataFrame]
+    val last = Superstep.fixed(starts.select(col("id").as("walk_id"),
+        lit(0L).as("step"), col("id").as("cur")), length,
+        readsPrevOnce = false) { (state, t) =>
+      frames += state
       val cand = state.select(col("walk_id"), col("cur"))
         .join(e, col("cur") === col("src"))
         .select(col("walk_id"), col("cur"), col("dst"), col("weight"))
@@ -192,14 +187,12 @@ object RandomWalks {
           .over(Window.partitionBy("walk_id")))
       val r = (col("cur") * StepMixA + col("walk_id") * StepMixB
         + lit(t.toLong)) % col("tw")
-      state = cum
+      cum
         .filter(r >= col("cw") - col("weight") && r < col("cw"))
         .select(col("walk_id"), lit(t.toLong).as("step"),
           col("dst").as("cur"))
-        .localCheckpoint(eager = true)
-      frames += state
     }
-    val out = frames.reduce(_ union _)
+    val out = (frames :+ last).reduce(_ union _)
       .select(col("walk_id"), col("step"), col("cur").as("vertex"))
     e.unpersist(blocking = false)
     out
@@ -231,7 +224,7 @@ object RandomWalks {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     var frontier = seeds.select(col("id").as("v"))
-    val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    val frames = ArrayBuffer.empty[DataFrame]
     var l = 0
     for (f <- fanouts) {
       l += 1
@@ -247,7 +240,7 @@ object RandomWalks {
         .select(lit(l.toLong).as("layer"), col("v").as("src"),
           col("adst").as("dst"))
         .distinct()
-      val sampledT = graft.engine.Materialize.eager(sampled)
+      val sampledT = Materialize.eager(sampled).state
       frames += sampledT
       frontier = sampledT.select(col("dst").as("v")).distinct()
     }

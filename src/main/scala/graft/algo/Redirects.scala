@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.{Materialize, Superstep}
 
 /** Redirect-chain resolution — the crawl-canonicalization step that maps
   * every redirecting URL to its final landing page before link-graph
@@ -32,16 +33,13 @@ object Redirects {
     // ptr after round k maps each redirect source to f*^(2^k) of it,
     // where f* extends f with the identity on terminals; composing ptr
     // with itself squares the step count. Each round references the
-    // current table twice → eager truncation per round.
-    var ptr = f.select(col("src").as("id"), col("dst").as("cur"))
-      .localCheckpoint(eager = true)
-    var k = 0
-    while (k < doublings) {
-      k += 1
+    // current table twice.
+    val ptr = Superstep.fixed(
+        Materialize.eager(f.select(col("src").as("id"), col("dst").as("cur"))).state,
+        doublings, readsPrevOnce = false) { (ptr, _) =>
       val hop = ptr.select(col("id").as("hid"), col("cur").as("hcur"))
-      ptr = ptr.join(hop, col("cur") === col("hid"), "left")
+      ptr.join(hop, col("cur") === col("hid"), "left")
         .select(col("id"), coalesce(col("hcur"), col("cur")).as("cur"))
-        .localCheckpoint(eager = true)
     }
     val srcs = f.select(col("src").as("s")).distinct()
     ptr.join(srcs, col("cur") === col("s"), "left")

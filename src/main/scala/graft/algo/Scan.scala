@@ -59,7 +59,7 @@ object Scan {
       // directions, core edges, borders) AND feeds the iterative CC —
       // materialize it once or every CC round re-derives the wedge join
       // and the task binaries carry the whole upstream plan
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     val epsBoth = eps.union(
       eps.select(col("dst").as("src"), col("src").as("dst")))
     val core = epsBoth.groupBy(col("src").as("id"))
@@ -75,7 +75,7 @@ object Scan {
     // materialized — referenced by borders AND the final assembly
     val coreClusters = core.join(cc, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("cluster"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     // borders: eps-adjacent to a core, min cluster id for determinism
     val borderClusters = epsBoth
       .join(coreClusters.select(col("id").as("d2"), col("cluster")),

@@ -63,13 +63,13 @@ object SemiSyncLP {
             filter(sequence(lit(0), coalesce(size(col("used")), lit(0))),
               c => !array_contains(coalesce(col("used"), array()), c)),
             1).as("newColor"))
-      val next = state
+      val next = graft.engine.Materialize.eager(state
         .join(assigned, Seq("id"), "left")
-        .select(col("id"), coalesce(col("color"), col("newColor")).as("color"))
-        .transform(graft.engine.Materialize.eager)
+        .select(col("id"), coalesce(col("color"), col("newColor")).as("color")),
+        count_if(col("color").isNull))
       state.unpersist(blocking = false)
-      state = next
-      remaining = state.filter(col("color").isNull).count()
+      state = next.state
+      remaining = next.scalars.getLong(0)
     }
     require(remaining == 0, s"coloring did not converge in $maxRounds rounds")
     state
@@ -141,7 +141,7 @@ object SemiSyncLP {
         val next = labels
           .join(winners, labels("id") === col("wid2"), "left")
           .select(labels("id"), coalesce(col("newLabel"), col("label")).as("label"))
-          .transform(graft.engine.Materialize.eager)
+          .transform(graft.engine.Materialize.eager(_).state)
         if (labels ne before) labels.unpersist(blocking = false)
         labels = next
         c += 1

@@ -24,7 +24,9 @@ import graft.engine.Superstep
   *
   * The distance state is referenced twice per round (relax + merge), so
   * each round eagerly truncates lineage — the Gauss–Seidel lesson: a lazy
-  * chain would double the plan per round.
+  * chain would double the plan per round. The fixed-round forms run on
+  * `Superstep.fixed(…, readsPrevOnce = false)`, [[run]] on
+  * `Superstep.converge`.
   */
 object ShortestPaths {
 
@@ -60,16 +62,10 @@ object ShortestPaths {
   def runFixed(weightedEdges: DataFrame, sources: DataFrame,
                rounds: Int): DataFrame = {
     val e = weighted(weightedEdges).persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = sources.select(col("id"), lit(0L).as("dist"))
+    val init = sources.select(col("id"), lit(0L).as("dist"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      val next = relaxOnce(e, dist)
-        .localCheckpoint(eager = true)
-      dist.unpersist(blocking = false)
-      dist = next
-    }
+    val dist = Superstep.fixed(init, rounds, readsPrevOnce = false)((d, _) => relaxOnce(e, d))
+    if (dist ne init) init.unpersist(blocking = false)
     e.unpersist(blocking = false)
     dist
   }
@@ -84,19 +80,17 @@ object ShortestPaths {
   def runFixedPerSource(weightedEdges: DataFrame, sources: DataFrame,
                         rounds: Int): DataFrame = {
     val e = weighted(weightedEdges).persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = sources
+    val init = sources
       .select(col("id").as("source"), col("id"), lit(0L).as("dist"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var r = 0
-    while (r < rounds) {
-      r += 1
+    val out = Superstep.fixed(init, rounds, readsPrevOnce = false) { (dist, _) =>
       val relaxed = e
         .join(dist.select(col("source"), col("id").as("rid"),
             col("dist").as("rdist")),
           col("src") === col("rid"))
         .groupBy(col("source"), col("dst").as("id"))
         .agg(min(col("rdist") + col("w")).as("cand"))
-      val next = dist
+      dist
         .join(relaxed.select(col("source").as("ns"), col("id").as("nid"),
             col("cand")),
           col("source") === col("ns") && col("id") === col("nid"), "full")
@@ -106,12 +100,10 @@ object ShortestPaths {
           least(
             coalesce(col("dist"), lit(Long.MaxValue)),
             coalesce(col("cand"), lit(Long.MaxValue))).as("dist"))
-        .localCheckpoint(eager = true)
-      dist.unpersist(blocking = false)
-      dist = next
     }
+    if (out ne init) init.unpersist(blocking = false)
     e.unpersist(blocking = false)
-    dist
+    out
   }
 
   /** Weighted closeness centrality from `rounds` per-source relaxations
@@ -187,7 +179,7 @@ object ShortestPaths {
           // an improvement is a new vertex or a strictly smaller distance
           (col("id").isNull || (col("cand").isNotNull && col("cand") < col("dist")))
             .as("improved"))
-    }((next, _, _) => next.agg(count_if(col("improved"))), Superstep.untilZero)
+    }(Superstep.Observe(_ => Seq(count_if(col("improved")))), Superstep.untilZero)
     if (res.labels ne init) init.unpersist(blocking = false)
     e.unpersist(blocking = false)
     (res.labels.select(col("id"), col("dist")), res.iterations, res.converged)
@@ -215,18 +207,16 @@ object ShortestPaths {
                       rounds: Int): DataFrame = {
     val e = timedEdges.select(col("src"), col("dst"), col("t").cast("long").as("t"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var arr = sources.select(col("id"), lit(0L).as("arr"))
+    val init = sources.select(col("id"), lit(0L).as("arr"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var r = 0
-    while (r < rounds) {
-      r += 1
+    val out = Superstep.fixed(init, rounds, readsPrevOnce = false) { (arr, _) =>
       val relaxed = e
         .join(arr.select(col("id").as("rid"), col("arr").as("ra")),
           col("src") === col("rid"))
         .filter(col("t") >= col("ra"))
         .groupBy(col("dst").as("id"))
         .agg(min(col("t")).as("cand"))
-      val next = arr
+      arr
         .join(relaxed.select(col("id").as("nid"), col("cand")),
           col("id") === col("nid"), "full")
         .select(
@@ -234,11 +224,9 @@ object ShortestPaths {
           least(
             coalesce(col("arr"), lit(Long.MaxValue)),
             coalesce(col("cand"), lit(Long.MaxValue))).as("arr"))
-        .localCheckpoint(eager = true)
-      arr.unpersist(blocking = false)
-      arr = next
     }
+    if (out ne init) init.unpersist(blocking = false)
     e.unpersist(blocking = false)
-    arr
+    out
   }
 }

@@ -100,7 +100,7 @@ object SkipGram {
                       buckets: Int = 64): DataFrame = {
     require(k >= 1 && buckets >= 1)
     // weights feed three branches (max-id, bucketing, total) — one scan
-    val wt = graft.engine.Materialize.eager(noiseWeights(edges))
+    val wt = graft.engine.Materialize.eager(noiseWeights(edges)).state
     val mx = wt.agg(max(col("id")).as("_mx"))
     // id-range buckets (monotone in id, so per-bucket order ∘ bucket
     // order = global id order), then the two-level prefix sum

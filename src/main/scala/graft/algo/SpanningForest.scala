@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.engine.Superstep
+import graft.engine.{Materialize, Superstep}
 
 /** Minimum spanning forest by Boruvka hooking — the distributed MSF
   * algorithm (Kruskal and Prim are inherently sequential): every round,
@@ -41,22 +41,22 @@ object SpanningForest {
       .persist(StorageLevel.MEMORY_AND_DISK)
     var labels = canon.select(col("a").as("id")).union(canon.select(col("b")))
       .distinct().select(col("id"), col("id").as("comp"))
-      .localCheckpoint(eager = true)
+      .transform(Materialize.eager(_).state)
     val picked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var rounds = 0
     var done = false
     while (!done) {
       rounds += 1
       require(rounds <= maxRounds, s"Boruvka did not converge in $maxRounds rounds")
-      val rel = canon
+      val inter = Materialize.eager(canon
         .join(labels.select(col("id").as("ida"), col("comp").as("ca")),
           col("a") === col("ida"))
         .join(labels.select(col("id").as("idb"), col("comp").as("cb")),
           col("b") === col("idb"))
         .filter(col("ca") =!= col("cb"))
-        .select(col("a"), col("b"), col("w"), col("ca"), col("cb"))
-        .localCheckpoint(eager = true)
-      if (rel.isEmpty) done = true
+        .select(col("a"), col("b"), col("w"), col("ca"), col("cb")))
+      val rel = inter.state
+      if (inter.rows == 0L) done = true
       else {
         // each component's lightest incident inter-component edge,
         // candidates seen from both sides, total order (w, a, b)
@@ -65,7 +65,7 @@ object SpanningForest {
           .union(rel.select(col("cb"),
             struct(col("w"), col("a"), col("b"), col("ca").as("oc"))))
         val minE = cand.groupBy("comp").agg(min(col("c")).as("c"))
-          .localCheckpoint(eager = true)
+          .transform(Materialize.eager(_).state)
         picked += minE.select(col("c.w").as("w"), col("c.a").as("a"),
           col("c.b").as("b")).distinct()
         // hooking pointers comp → other side of its pick; only 2-cycles
@@ -78,19 +78,20 @@ object SpanningForest {
               .otherwise(col("to")).as("par"))
         // pointer doubling: after j hops every pointer spans 2^j tree
         // levels, so 63 hops flatten any tree of at most 2^63 vertices
-        // and the 64th round sees no change
+        // and the 64th round sees no change; each row carries its
+        // previous pointer for the probe
         val jumped = Superstep.converge("boruvka_jump",
-            g2.localCheckpoint(eager = true), 64) { (parent, _) =>
+            Materialize.eager(g2).state, 64) { (parent, _) =>
           val hop = parent.select(col("comp").as("hc"), col("par").as("hp"))
           parent.join(hop, col("par") === col("hc"))
-            .select(col("comp"), col("hp").as("par"))
-        }(Superstep.changedRows("comp", "par"), Superstep.untilZero)
+            .select(col("comp"), col("hp").as("par"), col("par").as("prev"))
+        }(Superstep.changedRows("par", "prev"), Superstep.untilZero)
         require(jumped.converged, "Boruvka pointer jumping did not converge in 64 rounds")
         val parent = jumped.labels
         val newLabels = labels
           .join(parent.select(col("comp"), col("par")), Seq("comp"))
           .select(col("id"), col("par").as("comp"))
-          .localCheckpoint(eager = true)
+          .transform(Materialize.eager(_).state)
         labels = newLabels
       }
     }

@@ -204,11 +204,11 @@ object Spectral {
         .groupBy(col("mid").as("src"), col("to").as("dst"))
         .agg(sum(col("c")).as("c"))
       if (it % 3 == 0 && it < iterations)
-        state = graft.engine.Materialize.eager(state)
+        state = graft.engine.Materialize.eager(state).state
     }
     val out = state.groupBy(col("dst").as("id"))
       .agg(sum(col("c")).cast("long").as("nb_count"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     e.unpersist(blocking = false)
     out
   }
@@ -261,7 +261,7 @@ object Spectral {
         (coalesce(col("triangles"), lit(0L)) * 2L).cast("long").as("walks3"),
         (col("deg") * col("deg") + coalesce(col("cn_sq"), lit(0L)))
           .cast("long").as("walks4"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     e.unpersist(blocking = false)
     out
   }

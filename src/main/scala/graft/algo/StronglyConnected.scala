@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.engine.Superstep
+import graft.engine.{Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** Strongly connected components of the DIRECTED link graph — the
@@ -61,7 +61,7 @@ object StronglyConnected {
       val sub = e0
         .join(remaining.select(col("id").as("sid")), col("src") === col("sid"), "left_semi")
         .join(remaining.select(col("id").as("did")), col("dst") === col("did"), "left_semi")
-        .transform(graft.engine.Materialize.eager)
+        .transform(Materialize.eager(_).state)
       // 1. forward max-color fixpoint. A color travels one edge per round
       //    along a simple path, so `nRemaining` rounds always suffice.
       val cap = math.min(nRemaining, Int.MaxValue.toLong).toInt
@@ -69,15 +69,16 @@ object StronglyConnected {
           remaining.select(col("id"), col("id").as("color")), cap) { (colors, _) =>
         // self-message fold (the CC superstep shape with max for min):
         // max(own ∪ predecessor colors) needs no keep-previous join, and
-        // the stats-less color state hash-builds (PageRank.stateSide
-        // rationale) instead of re-sorting the subgraph every round
+        // the own message carries the previous color for the probe; the
+        // color state hash-builds (PageRank.stateSide rationale) instead
+        // of re-sorting the subgraph every round
         sub
           .join(colors.select(col("id").as("cid"), col("color"))
             .hint("shuffle_hash"), col("src") === col("cid"))
-          .select(col("dst").as("id"), col("color"))
-          .union(colors.select(col("id"), col("color")))
-          .groupBy("id").agg(max(col("color")).as("color"))
-      }(Superstep.changedRows("id", "color"), Superstep.untilZero)
+          .select(col("dst").as("id"), col("color"), lit(null).cast("long").as("own"))
+          .union(colors.select(col("id"), col("color"), col("color").as("own")))
+          .groupBy("id").agg(max(col("color")).as("color"), max(col("own")).as("prev"))
+      }(Superstep.changedRows("color", "prev"), Superstep.untilZero)
       require(fixpoint.converged,
         s"SCC coloring did not converge in $nRemaining rounds")
       val colors = fixpoint.labels
@@ -108,10 +109,10 @@ object StronglyConnected {
       // their color root within the class → SCC membership keyed by color
       val sccs = reached.select(col("id")).join(colors, Seq("id"))
         .select(col("id"), col("color").as("root"))
-        .localCheckpoint(eager = true)
+        .transform(Materialize.eager(_).state)
       assigned += sccs
       remaining.join(sccs.select(col("id")), Seq("id"), "left_anti")
-    }((next, _, _) => next.agg(count(lit(1))), (_, row) => {
+    }(Superstep.Observe(_ => Seq(count(lit(1)))), (_, row) => {
       val left = row.getLong(0)
       val verdict = Superstep.Verdict(nRemaining - left, 0L, left == 0L)
       nRemaining = left
@@ -148,7 +149,7 @@ object StronglyConnected {
         col("dst") === col("did"))
       .filter(col("csrc") =!= col("cdst"))
       .select(col("csrc"), col("cdst")).distinct()
-      .localCheckpoint(eager = true)
+      .transform(Materialize.eager(_).state)
     l.unpersist(blocking = false)
     (labels, ce)
   }
@@ -172,7 +173,7 @@ object StronglyConnected {
     val lv0 = e.select(col("csrc").as("comp"))
       .union(e.select(col("cdst"))).distinct()
       .select(col("comp"), lit(0L).as("level"))
-      .localCheckpoint(eager = true)
+      .transform(Materialize.eager(_).state)
     val levels = Superstep.converge("dag_levels", lv0, maxRounds) { (lv, _) =>
       val gathered = e
         .join(lv.select(col("comp").as("cid"), col("level").as("plv")),
@@ -181,12 +182,13 @@ object StronglyConnected {
         .agg((max(col("plv")) + 1L).as("inLv"))
       lv.join(gathered, Seq("comp"), "left")
         .select(col("comp"),
-          greatest(col("level"), coalesce(col("inLv"), col("level"))).as("level"))
-    }(Superstep.changedRows("comp", "level"), Superstep.untilZero)
+          greatest(col("level"), coalesce(col("inLv"), col("level"))).as("level"),
+          col("level").as("prev"))
+    }(Superstep.changedRows("level", "prev"), Superstep.untilZero)
     require(levels.converged,
       s"dagLevels did not stabilize in $maxRounds rounds — input has a cycle")
     e.unpersist(blocking = false)
-    levels.labels
+    levels.labels.select(col("comp"), col("level"))
   }
 
   /** Bounded-length path counts from the DAG's sources: paths(v) =
@@ -214,11 +216,11 @@ object StronglyConnected {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val comps = e.select(col("csrc").as("comp"))
       .union(e.select(col("cdst"))).distinct()
-      .transform(graft.engine.Materialize.eager)
+      .transform(Materialize.eager(_).state)
     val p0 = comps.join(e.select(col("cdst").as("comp")).distinct(),
         Seq("comp"), "left_anti")
       .select(col("comp"), lit(1L).as("w"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(Materialize.eager(_).state)
     // each step keeps its input p_{r−1}; p_rounds is the returned state
     val shorter = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val last = Superstep.fixed(p0, rounds, readsPrevOnce = false) { (p, _) =>
@@ -232,7 +234,7 @@ object StronglyConnected {
     val out = comps.join(agg, Seq("comp"), "left")
       .select(col("comp"),
         coalesce(col("paths"), lit(0L)).cast("long").as("paths"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(Materialize.eager(_).state)
     e.unpersist(blocking = false)
     out
   }

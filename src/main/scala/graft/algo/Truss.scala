@@ -76,7 +76,7 @@ object Truss {
     */
   def peelFixed(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    val canon = GraphOps.canonical(edges).transform(Materialize.eager)
+    val canon = GraphOps.canonical(edges).transform(Materialize.eager(_).state)
     val peel = new Peel
     val out = Superstep.fixed(canon, rounds, readsPrevOnce = false)((c, _) => peel(c, k))
     peel.release()
@@ -102,7 +102,7 @@ object Truss {
     */
   def trussnessFixed(edges: DataFrame, maxK: Int, roundsPerK: Int): DataFrame = {
     require(maxK >= 3 && roundsPerK >= 1)
-    val all = GraphOps.canonical(edges).transform(Materialize.eager)
+    val all = GraphOps.canonical(edges).transform(Materialize.eager(_).state)
     val peel = new Peel
     var alive = all
     val memberships = (3 to maxK).map { k =>
@@ -155,7 +155,7 @@ object Truss {
             .cast("long")).as("overlap_e6"),
         when(col("common") === 0, lit(1L)).otherwise(lit(0L))
           .as("local_bridge"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     canon.unpersist(blocking = false)
     out
   }
@@ -163,19 +163,18 @@ object Truss {
   /** Peel to convergence on the convergence driver: the k-truss. A
     * round's probe counts the survivors, and an unchanged count is the
     * fixed point (the edge set only shrinks) — and so is an empty one
-    * (the k-truss does not exist; nothing left to peel). The step joins
-    * the edge set with its own orientation, so rounds keep real
-    * statistics. Throws IllegalArgumentException when
-    * `maxRounds` rounds do not reach the fixed point.
+    * (the k-truss does not exist; nothing left to peel). Throws
+    * IllegalArgumentException when `maxRounds` rounds do not reach the
+    * fixed point.
     */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 1000): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    val canon = GraphOps.canonical(edges).transform(Materialize.eager)
-    var size = canon.count()
+    val canon = Materialize.eager(GraphOps.canonical(edges))
+    var size = canon.rows
     val peel = new Peel
-    val res = Superstep.converge("ktruss", canon, maxRounds, realStats = true) {
+    val res = Superstep.converge("ktruss", canon.state, maxRounds) {
       (c, _) => peel(c, k)
-    }((next, _, _) => next.agg(count(lit(1))), (_, row) => {
+    }(Superstep.Observe(_ => Seq(count(lit(1)))), (_, row) => {
       val m = row.getLong(0)
       val verdict = Superstep.Verdict(size - m, 0L, m == size || m == 0L)
       size = m
@@ -218,7 +217,7 @@ object Truss {
         (lit(4L) - col("du") - col("dv")
           + lit(3L) * coalesce(col("support"), lit(0L)))
           .cast("long").as("curvature"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     canon.unpersist(blocking = false)
     out
   }

@@ -49,7 +49,7 @@ object WlRefinement {
     val c0 = GraphOps.degrees(e)
       .select(col("id"),
         md5(concat(lit("d:"), col("degree").cast("string"))).as("color"))
-      .transform(Materialize.eager)
+      .transform(Materialize.eager(_).state)
     val colors = Superstep.fixed(c0, rounds, readsPrevOnce = false) { (colors, _) =>
       val gathered = e
         .join(colors.select(col("id").as("src"), col("color").as("nc")), "src")

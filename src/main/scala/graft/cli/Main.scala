@@ -580,10 +580,10 @@ object Main {
       // pairs back three consumers (draw spine, example spine, count);
       // examples are written AND counted — truncate both once
       val pairs = graft.engine.Materialize.eager(
-        graft.algo.RandomWalks.skipGramPairs(w, window = 2))
+        graft.algo.RandomWalks.skipGramPairs(w, window = 2)).state
       val ex = graft.engine.Materialize.eager(
         graft.algo.SkipGram.trainingExamples(pairs,
-          graft.algo.SkipGram.negativeSamples(edges, pairs, k = 5)))
+          graft.algo.SkipGram.negativeSamples(edges, pairs, k = 5))).state
       ex.write.mode("overwrite").parquet(s"$outDir/sgns_examples")
       println(s"[graft] walks: starts=${starts.count()} len=$len " +
         s"pairs=${pairs.count()} examples=${ex.count()}")

@@ -1,34 +1,44 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import java.util.concurrent.atomic.AtomicLong
 
-/** Eager plan truncation with sane statistics and no cache leak — the
-  * pattern every iterative loop that references its state more than once
-  * per round must use.
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.functions.{count, lit}
+
+/** The engine's one eager plan truncation: every state that a later plan
+  * reads more than once, and every round of [[Superstep.converge]] but
+  * LP/CC's, is cut here.
   *
-  * Why all three steps:
-  *   - `persist` first: `Dataset.localCheckpoint` copies the ORIGIN
-  *     plan's statistics into the checkpoint wrapper. For a persisted
-  *     dataset those are the materialized cache's actual size; for a raw
-  *     iterative plan they are Catalyst's multiplicative ESTIMATES, whose
-  *     BigInt size products grow without bound across rounds and drive
-  *     the optimizer into minutes-long `BigInteger.multiply` stalls on
-  *     the next join (the round-4 `SizeInBytesOnlyStatsPlanVisitor`
-  *     pathology — a bare eager checkpoint reintroduced it).
-  *   - `localCheckpoint(eager = true)`: one job materializes the data
-  *     and truncates lineage, so per-round plans stay constant-size.
-  *   - `unpersist` the PRE-checkpoint handle afterwards: its plan still
-  *     matches the CacheManager entry, releasing the double-stored cache
-  *     copy. (Unpersisting the returned wrapper instead is a silent
-  *     no-op — its plan is the post-checkpoint LogicalRDD — and leaks
-  *     the entry for the session lifetime.)
+  * One job: an eager `localCheckpoint` of `df.observe(count(*), scalars…)`
+  * materializes the state, truncates its lineage (plans stay
+  * constant-size across rounds) and computes the caller's one-row
+  * aggregates in the same pass, read synchronously from the query's
+  * observed metrics — a round's probe costs no action of its own.
+  *
+  * The checkpoint is then rebuilt with statistics from the observed row
+  * count: rows × the row width Catalyst itself estimates from the
+  * schema's default sizes. A bare checkpoint copies the plan's size
+  * ESTIMATE instead, and a state that joins a function of itself squares
+  * that estimate every round — the digits double per round, until the
+  * optimizer stalls for minutes in `BigInteger.multiply` on the next join
+  * (the round-4 `SizeInBytesOnlyStatsPlanVisitor` pathology). Real sizes
+  * also let small states broadcast.
+  *
+  * Nothing is persisted, so nothing is left in the cache.
   */
 object Materialize {
-  def eager(df: DataFrame): DataFrame = {
-    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    val out = cached.localCheckpoint(eager = true)
-    cached.unpersist(blocking = false)
-    out
+
+  /** A truncated state, its row count and the observed `scalars` row. */
+  final case class Eager(state: DataFrame, rows: Long, scalars: Row)
+
+  private val names = new AtomicLong
+
+  def eager(df: DataFrame, scalars: Column*): Eager = {
+    val name = s"graft_eager_${names.incrementAndGet()}"
+    val observed = df.observe(name, count(lit(1)), scalars: _*)
+    val cut = observed.localCheckpoint(eager = true)
+    val row = observed.queryExecution.observedMetrics(name)
+    val rows = row.getLong(0)
+    Eager(GraftBridge.withRowCount(cut, rows), rows, Row.fromSeq(row.toSeq.tail))
   }
 }

@@ -46,7 +46,9 @@ object Superstep {
     * of the fixed-round loops that read their state more than once
     * (VoteRank, the LT/IC cascades, WL refinement, label spreading,
     * balanced-LP sharding, DAG path counts, greedy matching, MMR
-    * selection, the fixed truss peels). It
+    * selection, the fixed truss, k-core and s-core peels, fixed
+    * Bellman-Ford and earliest arrival, random walks, Louvain's fixed move
+    * rounds, redirect pointer doubling). It
     * owns every persist / truncate / release decision; the caller states
     * one fact about its step, `readsPrevOnce`: does the plan of step i+1
     * evaluate the state of step i exactly once (counting references
@@ -78,12 +80,8 @@ object Superstep {
     * Read more than once (`false`) — [[Materialize.eager]] after every
     * step: a lazy chain would re-evaluate the shared state once per
     * reference, doubling the plan per step (the Gauss–Seidel 2^n lesson).
-    * Each step is materialized and truncated, and no cache entry survives
-    * it. The persist inside [[Materialize.eager]] also gives every state
-    * its real size as statistics: a bare eager checkpoint copies the
-    * plan's size estimate, and a step that joins the state with itself
-    * (HITS, SALSA) squares that estimate every step — 3.6 million digits
-    * after 18 HITS steps on the 34-vertex karate graph.
+    * Each step is materialized and truncated with its real row count as
+    * statistics, and no cache entry survives it.
     *
     * The initial state is used as given; callers that read it more than
     * once materialize it themselves.
@@ -111,7 +109,7 @@ object Superstep {
           state = state.localCheckpoint(eager = true)
           release()
         }
-      } else state = Materialize.eager(next)
+      } else state = Materialize.eager(next).state
     }
     pending.filterNot(_ eq state).foreach(_.unpersist(blocking = false))
     state
@@ -122,34 +120,52 @@ object Superstep {
     */
   final case class Verdict(changes: Long, communities: Long, stop: Boolean)
 
+  /** What one round of [[converge]] computes about its new state. */
+  sealed trait Probe
+
+  /** Aggregate columns over the round's new state alone (round number →
+    * columns), observed inside the round's eager truncation. A probe that
+    * compares rows with their previous values reads a column the step
+    * carries for it ([[changedRows]]).
+    */
+  final case class Observe(scalars: Int => Seq[Column]) extends Probe
+
+  /** A one-row query over (next, prev, round) after a lazy truncation:
+    * [[run]]'s probe, and no one else's.
+    */
+  private final case class Query(agg: (DataFrame, DataFrame, Int) => DataFrame)
+    extends Probe
+
   /** Rounds until `stop` says so — the convergence driver of every
     * fixpoint whose stability test is one aggregate per round (LP, CC,
     * PageRank to tolerance, the SCC color fixpoint and outer peel, DAG
     * levels, Borůvka's pointer jump, k-core and k-truss peeling, shortest
-    * paths, HyperANF, and the frontier BFS loops: `GraphOps.reachableFrom`,
-    * `Betweenness.bfsLevels`, Brandes' forward pass and SCC's backward
-    * BFS). One round is the
-    * reference host loop (`algorithms.h:373-473`): the Jacobi `step` from
-    * the previous state, then ONE driver action, the caller's one-row
-    * `probe` aggregate — over `next` alone or over `next ⋈ prev` with the
-    * prev side hash-built (guide §3.1: a truncated state carries no real
-    * statistics, so an unhinted vertex-keyed join plans a sort-merge that
-    * re-sorts both sides every round). All monitored scalars come from
-    * that one pass, as in LMFAO's batched aggregates.
+    * paths, HyperANF, MIS, and the frontier BFS loops:
+    * `GraphOps.reachableFrom`, `Betweenness.bfsLevels`, Brandes' forward
+    * pass and SCC's backward BFS). One round is the reference host loop
+    * (`algorithms.h:373-473`): the Jacobi `step` from the previous state,
+    * then the round's scalars, all from one pass as in LMFAO's batched
+    * aggregates.
     *
     * The driver owns every per-round mechanic:
-    *   - truncation: a durable [[Checkpointer.checkpoint]] every
-    *     `checkpointEvery` rounds when a checkpointer is set (also the
-    *     resume point), a LAZY `localCheckpoint` otherwise (an eager
-    *     [[Materialize.eager]] under `realStats`). Lazy is safe
-    *     because the probe of round i materializes (and truncates) the
-    *     state of round i before step i+1 reads it, so a step that reads
-    *     its state twice still reads stored blocks. (The lazy
-    *     checkpoint is an SQL execution of its own, in which AQE runs the
-    *     step's shuffle-map stages; the state's last stage runs inside the
-    *     probe's job.) An eager checkpoint followed by a separate
-    *     stability action runs that last stage as a job of its own every
-    *     round (round 3's LP regression 15.5→26.9 s);
+    *   - truncation and probe: an [[Observe]] round ends with
+    *     [[Materialize.eager]] of the new state carrying the probe's
+    *     columns — one job that truncates, counts the rows (the state's
+    *     statistics) and computes the scalars. Only [[run]] (LP/CC) keeps
+    *     a LAZY `localCheckpoint` followed by a separate probe query over
+    *     `next ⋈ prev` (prev hash-built: guide §3.1), for two reasons: its
+    *     community count is a `countDistinct`, which `observe` rejects
+    *     (`INVALID_OBSERVED_METRICS.AGGREGATE_EXPRESSION_WITH_DISTINCT_UNSUPPORTED`),
+    *     and its superstep is the path the benchmark's lp/cc passes time.
+    *     The probe's type decides the round's kind. The lazy round is
+    *     safe because the probe materializes (and truncates) the state of
+    *     round i before step i+1 reads it;
+    *   - durable rounds: with a checkpointer, every `checkpointEvery`-th
+    *     round also writes a [[Checkpointer.checkpoint]] snapshot (the
+    *     resume point) and continues from its re-read. An [[Observe]]
+    *     round takes its scalars from the truncation before the write,
+    *     because the snapshot keeps only `(id, label)` and not the columns
+    *     a step carries for its probe; [[run]]'s query reads the re-read;
     *   - release of the superseded states it created (a durable
     *     snapshot's re-read is a cache entry). It never releases `init`,
     *     which stays the caller's;
@@ -160,40 +176,18 @@ object Superstep {
     *     `priorMetrics` and rewritten to `metrics.json` every round when a
     *     checkpointer is set.
     *
-    * Statistics: a lazily truncated state keeps the size ESTIMATE of the
-    * plan that produced it, not its real size. A step that joins the
-    * state with itself (or with a function of itself) multiplies that
-    * estimate by itself every round — the digits double per round, the
-    * `BigInteger.multiply` stall [[Materialize]] describes. Such a caller
-    * states `realStats`. `StronglyConnected.dagLevels`, Borůvka's pointer
-    * jump and `ShortestPaths.run` do join their state with a function of
-    * itself; they already compounded the estimate under the bare eager
-    * checkpoint they used before, and still do here.
-    *
     * A frontier BFS keeps one state, every reached row tagged with its
     * round `dist`: the step expands the rows with `dist == i − 1` along
     * the edges, anti-joins what it finds against the state and returns
     * the state with the new rows (`dist = i`) appended; the probe is
     * [[newRows]]. The loops whose round count the graph's diameter sets
     * (`reachableFrom`, SCC's backward BFS) append with [[appendRows]];
-    * `bfsLevels` and Brandes stop at `Betweenness.DepthCap`. Those steps
-    * need no `realStats`: the state meets a
-    * function of itself only through the anti-join and the union, whose
-    * estimates add, so the estimate gains one edge-join factor per round
-    * (its digits grow linearly) and never squares.
+    * `bfsLevels` and Brandes stop at `Betweenness.DepthCap`.
     *
-    * @param realStats true: every round that takes no durable checkpoint
-    *                  ends with [[Materialize.eager]] instead of the lazy
-    *                  `localCheckpoint`, so the state carries its real
-    *                  size, and then runs the probe — for steps that join
-    *                  the state with a function of itself (`Truss.kTruss`'s
-    *                  triangle legs, HyperANF's gather-and-merge). The
-    *                  eager truncation is a job of its own every round
-    *                  ahead of the probe's. The durable path is unchanged.
     * @param lastRound the last round number this call may run (a total-run
     *                  cap: a resumed call passes the same value)
     * @param step      (state after round i−1, i) → state after round i
-    * @param probe     (next, prev, i) → a one-row aggregate
+    * @param probe     the round's scalars ([[Observe]])
     * @param stop      (i, probe row) → the round's [[Verdict]]
     * @return the last state, the last round number, and whether `stop`
     *         ended the run (false when `lastRound` did)
@@ -201,11 +195,9 @@ object Superstep {
   def converge(algorithm: String, init: DataFrame, lastRound: Int,
                checkpointer: Option[Checkpointer] = None,
                checkpointEvery: Int = 5, startIter: Int = 0,
-               priorMetrics: Seq[SuperstepMetrics] = Nil,
-               realStats: Boolean = false)(
+               priorMetrics: Seq[SuperstepMetrics] = Nil)(
       step: (DataFrame, Int) => DataFrame)(
-      probe: (DataFrame, DataFrame, Int) => DataFrame,
-      stop: (Int, Row) => Verdict): Result = {
+      probe: Probe, stop: (Int, Row) => Verdict): Result = {
     val metrics = ArrayBuffer.from(priorMetrics)
     var state = init
     var iter = startIter
@@ -215,12 +207,18 @@ object Superstep {
       iter += 1
       val prev = state
       val next = step(prev, iter)
-      state = checkpointer match {
-        case Some(cp) if iter % checkpointEvery == 0 => cp.checkpoint(algorithm, iter, next)
-        case _ if realStats => Materialize.eager(next)
-        case _ => next.localCheckpoint(eager = false)
+      val durable = checkpointer.filter(_ => iter % checkpointEvery == 0)
+      val row = probe match {
+        case Observe(scalars) =>
+          val cut = Materialize.eager(next, scalars(iter): _*)
+          state = durable.fold(cut.state)(_.checkpoint(algorithm, iter, cut.state))
+          cut.scalars
+        case Query(agg) =>
+          state = durable.fold(next.localCheckpoint(eager = false))(
+            _.checkpoint(algorithm, iter, next))
+          agg(state, prev, iter).first()
       }
-      val verdict = stop(iter, probe(state, prev, iter).first())
+      val verdict = stop(iter, row)
       metrics += SuperstepMetrics(algorithm, iter, verdict.changes,
         verdict.communities, (System.nanoTime() - t0) / 1000000L)
       checkpointer.foreach(_.writeMetrics(algorithm, metrics.toSeq))
@@ -230,21 +228,19 @@ object Superstep {
     Result(state, iter, converged, metrics.toSeq)
   }
 
-  /** Probe for a state keyed by `key`: the number of rows whose `value`
-    * differs from the previous round's.
+  /** Probe for a state whose step carries each row's previous `value` as
+    * the column `previous`: the number of rows whose value changed (a row
+    * without a previous value is not counted).
     */
-  def changedRows(key: String, value: String)(
-      next: DataFrame, prev: DataFrame, iter: Int): DataFrame =
-    next.join(prev.withColumnRenamed(value, "prev").hint("shuffle_hash"), key)
-      .agg(coalesce(sum(when(col(value) =!= col("prev"), 1L).otherwise(0L)), lit(0L)))
+  def changedRows(value: String, previous: String): Probe =
+    Observe(_ => Seq(count_if(col(value) =!= col(previous))))
 
   /** Probe for a frontier state that tags every row with the round that
-    * reached it: the number of rows with `dist == iter`, over `next`
-    * alone. With [[untilZero]] the run stops on the first round that
-    * reaches nothing new.
+    * reached it: the number of rows with `dist == iter`. With
+    * [[untilZero]] the run stops on the first round that reaches nothing
+    * new.
     */
-  def newRows(dist: String)(next: DataFrame, prev: DataFrame, iter: Int): DataFrame =
-    next.filter(col(dist) === iter).agg(count(lit(1)))
+  def newRows(dist: String): Probe = Observe(i => Seq(count_if(col(dist) === i)))
 
   /** A frontier state with one round's new rows appended, in at most
     * `spark.sql.shuffle.partitions` partitions. A union keeps the
@@ -338,11 +334,11 @@ object Superstep {
         startIter + maxIter.getOrElse(maxIterations(nNodes)),
         checkpointer, checkpointEvery, startIter, priorMetrics)(
         (prev, _) => update(prev).select(col("id"), col("label")))(
-      (next, prev, iter) =>
+      Query((next, prev, iter) =>
         if (identityInit && iter == 1) next.transform(scalars(col("label") =!= col("id")))
         else next.join(prev.withColumnRenamed("label", "labelAnt")
             .hint("shuffle_hash"), "id")
-          .transform(scalars(col("label") =!= col("labelAnt"))),
+          .transform(scalars(col("label") =!= col("labelAnt")))),
       (iter, row) => {
         val (changes, communities) = (row.getLong(0), row.getLong(1))
         Verdict(changes, communities, conv.shouldStop(iter, changes, communities))
@@ -458,9 +454,12 @@ final class Checkpointer(val dir: String, spark: SparkSession) {
   private def isDir(fs: FileSystem, p: Path): Boolean =
     fs.exists(p) && fs.getFileStatus(p).isDirectory
 
+  /** Writes the `(id, label)` columns of `labels` (a step's other columns
+    * are not state) and returns the persisted re-read.
+    */
   def checkpoint(algorithm: String, iter: Int, labels: DataFrame): DataFrame = {
     val path = s"$dir/$algorithm/labels/iter=$iter"
-    labels.write.mode("overwrite").parquet(path)
+    labels.select(col("id"), col("label")).write.mode("overwrite").parquet(path)
     val reread = spark.read.parquet(path)
     val lineage = reread
       .groupBy(spark_partition_id().as("partitionId"))

@@ -1071,14 +1071,14 @@ object Similarity {
     val v = vectors.select(col("vec_id"),
       transform(col("embedding"), x =>
         round(x.cast("double") * 1000000).cast("long")).as("xe"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     def d2(a: Column, b: Column) =
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
         lit(0L), (acc, x) => acc + x)
     var seeds = v.orderBy(col("vec_id").asc).limit(1)
       .select(lit(1L).as("rank"), col("vec_id"), lit(0L).as("d_e6"),
         col("xe"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     // (vec_id, xe, dmin) for every non-seed vector: dmin = d² to the
     // nearest chosen seed so far. Seeding it from seed 1 and folding in
     // only the NEWEST seed each round computes exactly min over all seeds.
@@ -1088,16 +1088,16 @@ object Similarity {
           col("xe").as("se"))))
         .filter(col("vec_id") =!= col("sid"))
         .select(col("vec_id"), col("xe"), d2(col("xe"), col("se")).as("dmin"))
-        .transform(graft.engine.Materialize.eager)
+        .transform(graft.engine.Materialize.eager(_).state)
     var t = 1
     while (t < k) {
       t += 1
       val pick = state.orderBy(col("dmin").desc, col("vec_id").asc).limit(1)
         .select(lit(t.toLong).as("rank"), col("vec_id"),
           col("dmin").as("d_e6"), col("xe"))
-        .transform(graft.engine.Materialize.eager)
+        .transform(graft.engine.Materialize.eager(_).state)
       seeds = seeds.union(pick)
-        .transform(graft.engine.Materialize.eager)
+        .transform(graft.engine.Materialize.eager(_).state)
       if (t < k) {
         val prev = state
         state = state.crossJoin(broadcast(pick.select(
@@ -1105,7 +1105,7 @@ object Similarity {
           .filter(col("vec_id") =!= col("sid"))
           .select(col("vec_id"), col("xe"),
             least(col("dmin"), d2(col("xe"), col("se"))).as("dmin"))
-          .transform(graft.engine.Materialize.eager)
+          .transform(graft.engine.Materialize.eager(_).state)
         prev.unpersist(blocking = false)
       }
     }
@@ -1179,7 +1179,7 @@ object Similarity {
       .withColumn("rank", row_number().over(Window.partitionBy("qid")
         .orderBy(col("sim_e6").desc, col("vec_id").asc)))
       .filter(col("rank") <= cand).select("qid", "vec_id", "sim_e6")
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     val half = cnd.select(col("qid"), col("vec_id").as("a"))
       .join(cnd.select(col("qid"), col("vec_id").as("b")), Seq("qid"))
       .filter(col("a") < col("b"))
@@ -1191,7 +1191,7 @@ object Similarity {
         sim(col("va"), col("vb"), col("na"), col("nb")).as("cs"))
     val cc = half.union(half.select(col("qid"), col("b").as("a"),
         col("a").as("b"), col("cs")))
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     def argmax(scored: DataFrame, rank: Int) =
       scored.withColumn("rn", row_number().over(Window.partitionBy("qid")
           .orderBy(col("score_e6").desc, col("vec_id").asc)))
@@ -1200,7 +1200,7 @@ object Similarity {
           col("score_e6"))
     val first = argmax(
       cnd.select(col("qid"), col("vec_id"), col("sim_e6").as("score_e6")),
-      1).transform(graft.engine.Materialize.eager)
+      1).transform(graft.engine.Materialize.eager(_).state)
     // step t − 1 picks rank t
     val out = graft.engine.Superstep.fixed(first, k - 1,
         readsPrevOnce = false) { (selected, t1) =>

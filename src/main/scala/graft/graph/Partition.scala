@@ -53,13 +53,12 @@ object Partition {
                  capNum: Long = 11L, capDen: Long = 10L): DataFrame = {
     require(k >= 2 && iters >= 0 && capNum >= capDen && capDen >= 1)
     val e = edges.select(col("src"), col("dst"))
-      .transform(graft.engine.Materialize.eager)
-    val verts = GraphOps.vertices(e)
-      .transform(graft.engine.Materialize.eager)
-    val n = verts.count()
+      .transform(graft.engine.Materialize.eager(_).state)
+    val vertsCut = graft.engine.Materialize.eager(GraphOps.vertices(e))
+    val (verts, n) = (vertsCut.state, vertsCut.rows)
     val cap = (n * capNum) / (k * capDen)
     val hashed = verts.select(col("id"), (col("id") % k).as("shard"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     Superstep.fixed(hashed, iters, readsPrevOnce = false) { (assign, _) =>
       val sizes = assign.groupBy("shard").agg(count(lit(1)).as("sz"))
       // neighbor-shard census per vertex

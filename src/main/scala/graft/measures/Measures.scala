@@ -1063,10 +1063,9 @@ object Measures {
     */
   def corePeriphery(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
     val canon = edges.filter(col("src") < col("dst")).select("src", "dst")
-    val core = graft.algo.KCore.peelFixed(edges, k, rounds)
-      .transform(graft.engine.Materialize.eager)
+    val coreCut = graft.engine.Materialize.eager(graft.algo.KCore.peelFixed(edges, k, rounds))
+    val (core, nCore) = (coreCut.state, coreCut.rows)
     val verts = graft.graph.GraphOps.vertices(edges)
-    val nCore = core.count()
     val nAll = verts.count()
     val flagged = canon
       .join(core.select(col("id").as("src"), lit(1L).as("cs")),

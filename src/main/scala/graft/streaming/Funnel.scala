@@ -693,7 +693,7 @@ object Funnel {
         .select(col("t"),
           (coalesce(col("fl"), lit(0L)) + coalesce(col("hd"), lit(0L)))
             .cast("long").as("pi_e9"))
-        .transform(graft.engine.Materialize.eager)
+        .transform(graft.engine.Materialize.eager(_).state)
     }
     pi.select(col("t").as("event_type"), col("pi_e9"))
   }

@@ -196,9 +196,9 @@ object TextIndex {
     val pmat = sym.join(wsum, "u")
       .select(col("u"), col("v"),
         expr("(w * 1000000000) div wu").as("p_e9"))
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     val terms = sym.select(col("u").as("term")).distinct()
-      .transform(graft.engine.Materialize.eager)
+      .transform(graft.engine.Materialize.eager(_).state)
     var s = terms.select(col("term"), lit(1000000000L).as("s_e9"))
     var i = 0
     while (i < iters) {
@@ -210,7 +210,7 @@ object TextIndex {
         .withColumn("fl2", coalesce(col("fl"), lit(0L)))
         .select(col("term"),
           expr("150000000 + (850 * fl2) div 1000").cast("long").as("s_e9"))
-        .transform(graft.engine.Materialize.eager)
+        .transform(graft.engine.Materialize.eager(_).state)
     }
     pmat.unpersist(blocking = false)
     s

@@ -1,17 +1,34 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Column ↔ Expression bridge for custom Catalyst expressions.
+/** Column ↔ Expression bridge for custom Catalyst expressions, and the
+  * statistics rebuild of a checkpointed Dataset.
   *
   * Spark 4 made `Column` API-agnostic (it wraps a ColumnNode, not an
-  * Expression) and gated the classic converters `private[sql]`; this
-  * one-file shim in the sql package re-exports exactly the two
-  * conversions a library needs to expose native expressions as Columns.
+  * Expression) and gated the classic converters and `Dataset.ofRows`
+  * `private[sql]`; this one-file shim in the sql package re-exports
+  * exactly what the library needs of them.
   */
 object GraftBridge {
   def column(e: Expression): Column =
     classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** `checkpointed` (a `localCheckpoint` result, whose plan is one
+    * LogicalRDD) with its statistics set from a known row count: size =
+    * rows × the row width Catalyst's own estimates use
+    * (`EstimationUtils.getSizePerRow`, from the output's default sizes).
+    */
+  def withRowCount(checkpointed: DataFrame, rows: Long): DataFrame = {
+    val ds = checkpointed.asInstanceOf[classic.Dataset[Row]]
+    val rdd = ds.logicalPlan.asInstanceOf[LogicalRDD]
+    val stats = Statistics(rows * EstimationUtils.getSizePerRow(rdd.output), Some(rows))
+    classic.Dataset.ofRows(ds.sparkSession,
+      rdd.copy()(ds.sparkSession, Some(stats), Some(rdd.constraints)))
+  }
 }

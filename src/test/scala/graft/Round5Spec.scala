@@ -207,6 +207,23 @@ class EdgeBetweennessSpec extends GraftSuite {
     assert(math.abs(ebSum - (bcSum + pairs)) < 1e-6,
       s"ebSum=$ebSum bcSum=$bcSum pairs=$pairs")
   }
+
+  test("edge BC bits do not depend on broadcast joins") {
+    // the join strategies set the order rows reach each sum; the scores
+    // must not follow it
+    val e = edgesDf(undirected(Fixtures.karatePairs))
+    val all = graft.graph.GraphOps.vertices(e)
+    def bits(): Map[(Long, Long), Long] = graft.algo.Betweenness.runEdges(e, all)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2))).toMap
+    val withBroadcasts = bits()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val without = try bits() finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(without.size === 156)
+    assert(without === withBroadcasts)
+  }
 }
 
 class TopicPprSpec extends GraftSuite {

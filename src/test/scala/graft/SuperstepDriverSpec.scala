@@ -1,14 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.algo.{Betweenness, BowTie, Centrality, Hits, Influence, KCore, LabelPropagation,
-  LabelSpreading, Matching, PageRank, ShortestPaths, SpanningForest, Spectral,
-  StronglyConnected, Truss, WlRefinement}
+  LabelSpreading, Louvain, Matching, Mis, PageRank, RandomWalks, Redirects, ShortestPaths,
+  SpanningForest, Spectral, StronglyConnected, Truss, WlRefinement}
 import graft.engine.{Checkpointer, Superstep}
 import graft.functions.Similarity
 import graft.graph.{GraphOps, Partition}
+
+import scala.jdk.CollectionConverters._
 
 /** The two drivers of `engine/Superstep`: the fixed-step driver
   * [[Superstep.fixed]] and the convergence driver [[Superstep.converge]]
@@ -235,16 +237,42 @@ class SuperstepDriverSpec extends GraftSuite {
     val (emptyPeels, none) = trussRounds(Fixtures.karatePairs, 6)
     assert(emptyPeels === 3 && none.isEmpty)
     assert(Truss.kTruss(karate, 6, maxRounds = emptyPeels - 1).count() === 0L)
+    // the fixed-schedule loops: the 2-core of a 10-vertex path loses both
+    // ends per round, a unit path one more reached vertex per round, a
+    // walk one step, a pointer jump doubles its span, and MIS decides a
+    // single edge in one round
+    val path10 = edgesDf(chain(10))
+    val unitWeights = weighted(undirected(chain(10)).map { case (a, b) => (a, b, 1L) })
+    assert(KCore.peelFixed(path10, 2L, rounds = 3).count() === 4L)
+    assert(KCore.weightedCoreFixed(unitWeights, 2L, rounds = 3).count() === 4L)
+    assert(ShortestPaths.runFixed(unitPath(10), sources(1L), rounds = 3).count() === 4L)
+    assert(ShortestPaths.runFixedPerSource(unitPath(10), sources(1L, 2L), rounds = 3)
+      .count() === 8L)
+    assert(ShortestPaths.earliestArrival(unitPath(10).withColumnRenamed("weight", "t"),
+      sources(1L), rounds = 3).count() === 4L)
+    val symPath = edgesDf(undirected(chain(10)))
+    assert(RandomWalks.walks(symPath, sources(1L), 4).agg(max("step")).first().getLong(0) === 4L)
+    assert(RandomWalks.walksBiased(symPath, sources(1L), 4).count() === 5L)
+    assert(RandomWalks.walksWeighted(unitWeights, sources(1L), 4).count() === 5L)
+    // 1→…→9 needs 8 steps: two doublings take 4, three resolve it
+    val redirects = edgesDf(chain(9))
+    val resolved = (d: Int) => Redirects.resolve(redirects, doublings = d)
+      .filter(col("id") === 1L).select(col("target")).first().getLong(0)
+    assert(resolved(2) === 5L && resolved(3) === 9L)
+    val edge = edgesDf(undirected(Seq((1L, 2L))))
+    val undecided = (df: DataFrame) => df.filter(col("status") === "und").count()
+    assert(undecided(Mis.misFixed(edge, 7L, 0)) === 2L)
+    assert(undecided(Mis.misFixed(edge, 7L, 1)) === 0L)
+    assert(undecided(Mis.mis(edge, 7L)) === 0L)
   }
 
-  // A round's one action is its probe: one result job. Its lazy truncation
-  // is an SQL execution too, but AQE runs only the step's shuffle-map
-  // stages there, and the probe finishes the state inside its own job. An
-  // eager truncation would be a second result job every round. Each loop
-  // runs twice with the same setup and a known difference in rounds, with
-  // broadcast joins off; the bound leaves room for the odd job AQE adds at
-  // run time (a run of the whole suite measured one extra in 4 SSSP
-  // rounds), not for a second result job per round.
+  // A round's one action is its eager truncation, which observes the
+  // probe: one result job. A separate probe query would be a second
+  // result job every round. Each loop runs twice with the same setup and
+  // a known difference in rounds, with broadcast joins off; the bound
+  // leaves room for the odd job AQE adds at run time (a run of the whole
+  // suite measured one extra in 4 SSSP rounds), not for a second result
+  // job per round.
   test("a convergence round costs one action: fewer than two result jobs per round") {
     withoutBroadcastJoins {
       val symKarate = edgesDf(undirected(Fixtures.karatePairs))
@@ -330,7 +358,23 @@ class SuperstepDriverSpec extends GraftSuite {
       "Betweenness.bfsParents" -> (() => Betweenness.bfsParents(sym, sources(1L, 34L))),
       "Betweenness.run" -> (() => Betweenness.run(sym, sources(1L, 34L))),
       "Betweenness.runEdges" -> (() => Betweenness.runEdges(sym, sources(1L, 34L))),
-      "BowTie.classify" -> (() => BowTie.classify(karate)))
+      "BowTie.classify" -> (() => BowTie.classify(karate)),
+      "KCore.peelFixed" -> (() => KCore.peelFixed(karate, 4L, rounds = 2)),
+      "KCore.weightedCoreFixed" -> (() => KCore.weightedCoreFixed(symWeighted, 6L, rounds = 2)),
+      "ShortestPaths.runFixed" ->
+        (() => ShortestPaths.runFixed(weighted(weightedPath), sources(1L), rounds = 2)),
+      "ShortestPaths.runFixedPerSource" -> (() =>
+        ShortestPaths.runFixedPerSource(weighted(weightedPath), sources(1L, 2L), rounds = 2)),
+      "ShortestPaths.earliestArrival" -> (() => ShortestPaths.earliestArrival(
+        weighted(weightedPath).withColumnRenamed("weight", "t"), sources(1L), rounds = 2)),
+      "RandomWalks.walks" -> (() => RandomWalks.walks(sym, sources(1L, 34L), 3)),
+      "RandomWalks.walksBiased" -> (() => RandomWalks.walksBiased(sym, sources(1L, 34L), 3)),
+      "RandomWalks.walksWeighted" ->
+        (() => RandomWalks.walksWeighted(symWeighted, sources(1L, 34L), 3)),
+      "Louvain.moveFixed" -> (() => Louvain.moveFixed(symWeighted, 2)),
+      "Redirects.resolve" -> (() => Redirects.resolve(edgesDf(chain(9)), doublings = 2)),
+      "Mis.misFixed" -> (() => Mis.misFixed(sym, 7L, 2)),
+      "Mis.mis" -> (() => Mis.mis(sym, 7L)))
     runs.foreach { case (name, run) =>
       val before = cacheEntries()
       run()
@@ -351,26 +395,80 @@ class SuperstepDriverSpec extends GraftSuite {
       Truss.kTruss(edgesDf(Fixtures.karatePairs), 4, maxRounds = 1))
   }
 
-  /** `lastRound` rounds of a step that joins its state with a function of
-    * itself, on the convergence driver; the probe never stops the run.
-    */
-  private def selfJoinRounds(lastRound: Int, realStats: Boolean): DataFrame =
-    Superstep.converge("selfjoin", init, lastRound, realStats = realStats) { (prev, _) =>
-      prev.join(prev.select(col("id"), (col("x") + 1).as("y")), "id")
-        .select(col("id"), col("y").as("x"))
-    }((next, _, _) => next.agg(count(lit(1))), (_, row) =>
-      Superstep.Verdict(row.getLong(0), 0L, stop = false)).labels
+  /** One round of a step that joins its state with a function of itself. */
+  private def selfJoin(prev: DataFrame, step: Int): DataFrame =
+    prev.join(prev.select(col("id"), (col("x") + 1).as("y")), "id")
+      .select(col("id"), col("y").as("x"))
 
-  test("a realStats convergence round keeps real statistics") {
+  /** `lastRound` [[selfJoin]] rounds on the convergence driver; the probe
+    * never stops the run.
+    */
+  private def selfJoinRounds(lastRound: Int): DataFrame =
+    Superstep.converge("selfjoin", init, lastRound)(selfJoin)(
+      Superstep.Observe(_ => Seq(count(lit(1)))), (_, row) =>
+        Superstep.Verdict(row.getLong(0), 0L, stop = false)).labels
+
+  test("every truncation keeps real statistics") {
     val size = (df: DataFrame) => df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val real = selfJoinRounds(6, realStats = true)
-    assert(size(real) < (BigInt(1) << 20), s"estimated size has ${size(real).toString.length} digits")
-    assert(real.agg(min("x"), max("x")).first() === Row(6L, 6L))
-    // the lazy truncation copies the step's estimate, which squares every round
-    val lazily = selfJoinRounds(6, realStats = false)
-    assert(size(lazily) > (BigInt(1) << 64), s"lazy estimate ${size(lazily)}")
+    // control: a bare eager checkpoint copies the step's estimate, which
+    // squares every round
+    val bare = (1 to 6).foldLeft(init)((s, i) => selfJoin(s, i).localCheckpoint(eager = true))
+    assert(size(bare) > (BigInt(1) << 64), s"bare estimate ${size(bare)}")
+    // rows × (8 bytes of row overhead + 8 per long column)
+    val truncated: Seq[(String, DataFrame, Int)] = Seq(
+      ("a convergence round", selfJoinRounds(6), 24),
+      ("a read-more fixed step", Superstep.fixed(init, 6, readsPrevOnce = false)(selfJoin), 24),
+      ("KCore.peelFixed", KCore.peelFixed(edgesDf(Fixtures.karatePairs), 4L, rounds = 2), 16))
+    truncated.foreach { case (name, df, width) =>
+      assert(size(df) === BigInt(df.count() * width), name)
+    }
+    assert(truncated.head._2.agg(min("x"), max("x")).first() === Row(6L, 6L))
   }
 
+  test("the observed scalars equal an aggregate over the same state") {
+    val karate = edgesDf(undirected(Fixtures.karatePairs))
+    val e = karate.persist(StorageLevel.MEMORY_AND_DISK)
+    val w = weighted(weightedPath)
+      .select(col("src"), col("dst"), col("weight").as("w"))
+    // (name, init, step, probe columns): the kCore, SSSP and SCC color
+    // rounds, with the probes those loops observe
+    val loops: Seq[(String, DataFrame, (DataFrame, Int) => DataFrame, Seq[Column])] = Seq(
+      ("kCore", GraphOps.vertices(e), (alive, _) =>
+        e.join(alive.select(col("id").as("src")), "src")
+          .join(alive.select(col("id").as("dst")), "dst")
+          .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= 4).select(col("id")),
+        Seq(count(lit(1)))),
+      ("SSSP", sources(1L).select(col("id"), lit(0L).as("dist")), (d, _) => {
+        val next = ShortestPaths.relaxOnce(w, d.select(col("id"), col("dist")))
+        next.join(d.select(col("id"), col("dist").as("old")), Seq("id"), "left")
+          .select(col("id"), col("dist"),
+            (col("old").isNull || col("dist") < col("old")).as("improved"))
+      }, Seq(count_if(col("improved")))),
+      ("SCC color", GraphOps.vertices(e).select(col("id"), col("id").as("color")), (c, _) =>
+        e.join(c.select(col("id").as("src"), col("color")), "src")
+          .select(col("dst").as("id"), col("color"), lit(null).cast("long").as("own"))
+          .union(c.select(col("id"), col("color"), col("color").as("own")))
+          .groupBy("id").agg(max(col("color")).as("color"), max(col("own")).as("prev")),
+        Seq(count_if(col("color") =!= col("prev")), max(col("color")))))
+    loops.foreach { case (name, init, step, scalars) =>
+      val states = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val res = Superstep.converge(name, init, 4) { (prev, i) =>
+        if (i > 1) states += prev
+        step(prev, i)
+      }(Superstep.Observe(_ => scalars), (_, row) => {
+        rows += row
+        Superstep.Verdict(0L, 0L, stop = false)
+      })
+      states += res.labels
+      assert(rows.size === 4, name)
+      rows.zip(states).foreach { case (row, state) =>
+        assert(row === state.agg(scalars.head, scalars.tail: _*).first(), name)
+      }
+    }
+    e.unpersist(blocking = true)
+  }
   test("a frontier BFS state's size estimate grows by one edge-join factor per round") {
     // 40 rounds on a 41-vertex path, the depth cap; the estimate was
     // measured at 106 digits, and squaring would double them per round
@@ -380,12 +478,12 @@ class SuperstepDriverSpec extends GraftSuite {
     assert(levels.agg(max("dist")).first().getLong(0) === 40L)
   }
 
-  test("a realStats convergence round costs one eager truncation and one probe") {
-    val run = (rounds: Int) => countActions(Superstep.converge("plusone", init, rounds,
-        realStats = true)(plusOne)((next, _, _) => next.agg(count(lit(1))),
+  test("an observed round costs one eager truncation") {
+    val run = (rounds: Int) => countActions(Superstep.converge("plusone", init, rounds)(
+      plusOne)(Superstep.Observe(_ => Seq(count(lit(1)))),
       (_, row) => Superstep.Verdict(row.getLong(0), 0L, stop = false)))
     val (small, large) = (run(2), run(6))
-    assert(large.resultJobs - small.resultJobs === 2 * 4, s"$small in 2 rounds, $large in 6")
+    assert(large.resultJobs - small.resultJobs === 4 * 1, s"$small in 2 rounds, $large in 6")
   }
 
   test("durable checkpoints land on the cadence rounds and metrics list every round once") {
@@ -408,27 +506,19 @@ class SuperstepDriverSpec extends GraftSuite {
 
   // A probe plan is the only plan that reads the renamed previous state.
   private def probePlans(plans: Seq[String]): Seq[String] =
-    plans.filter(p => p.contains("prev#") || p.contains("labelAnt#"))
+    plans.filter(_.contains("labelAnt#"))
 
   test("the convergence probes hash-build prev with broadcast joins disabled") {
     withoutBroadcastJoins {
       val sym = GraphOps.prepareForGather(edgesDf(undirected(Fixtures.karatePairs)), 4)
-      val karate = edgesDf(Fixtures.karatePairs)
-      // (name, run, state key); the kCore and ShortestPaths.run probes
-      // aggregate over the new state alone and join nothing
+      // (name, run, state key): the two loops whose probe is a query over
+      // next ⋈ prev; every other convergence loop observes its probe over
+      // next alone and joins nothing
       val loops: Seq[(String, () => Unit, String)] = Seq(
         ("LabelPropagation.run", () => LabelPropagation.run(sym, 34L, symmetric = true),
           "id"),
         ("ConnectedComponents.run",
-          () => graft.algo.ConnectedComponents.run(sym, 34L), "id"),
-        ("PageRank.run", () => PageRank.run(karate, maxIter = 3, partitions = 4),
-          "id"),
-        ("StronglyConnected.run", () => StronglyConnected.run(edgesDf(reversePath)),
-          "id"),
-        ("StronglyConnected.dagLevels",
-          () => StronglyConnected.dagLevels(condensed(chain(5))), "comp"),
-        ("SpanningForest.boruvka", () => SpanningForest.boruvka(weightedKarate)
-          .collect(), "comp"))
+          () => graft.algo.ConnectedComponents.run(sym, 34L), "id"))
       loops.foreach { case (name, run, key) =>
         val plans = executedPlans(run())
         assert(keyJoins(probePlans(plans), "ShuffledHashJoin", key).nonEmpty,
@@ -437,5 +527,34 @@ class SuperstepDriverSpec extends GraftSuite {
         assert(smj.isEmpty, s"$name probes by sort-merge join: ${smj.mkString("; ")}")
       }
     }
+  }
+
+  test("SCC's sccs join plans a broadcast under default settings") {
+    // the reached set carries its real row count, so the join of it with
+    // the colors broadcasts from the start; the plan of the sccs state is
+    // the one that names the root column
+    val plans = executedPlans(StronglyConnected.run(edgesDf(headPath(6))))
+      .filter(_.contains(" AS root#"))
+    assert(plans.nonEmpty, "no sccs plan captured")
+    plans.foreach { p =>
+      val initial = p.substring(p.indexOf("== Initial Plan =="))
+      assert(initial.contains("BroadcastHashJoin"), p)
+    }
+  }
+
+  test("no eager checkpoint is taken outside the engine") {
+    // Materialize.eager is the one eager truncation: a bare eager
+    // checkpoint copies the plan's size estimate, which compounds
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.startsWith(root.resolve("engine"))).toSeq
+    assert(files.size > 50, s"only ${files.size} sources under $root")
+    val sites = files.flatMap { f =>
+      scala.io.Source.fromFile(f.toFile, "UTF-8").getLines().zipWithIndex
+        .collect { case (line, i) if line.contains("localCheckpoint(eager = true)") =>
+          s"$f:${i + 1}" }
+    }
+    assert(sites.isEmpty, sites.mkString("\n"))
   }
 }
