@@ -88,9 +88,14 @@ object Centrality {
     import spark.implicits._
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // coalesce: an empty vertex set sums to NULL, and the series should
-    // degrade to a single (0, 0) row rather than NPE
-    val total = coalesce(sum(hll_sketch_estimate(col("sk"))), lit(0L))
+    // A union's registers do not depend on the order its inputs arrive
+    // in, but its estimate can (the union carries order-sensitive
+    // estimator state); the estimate of a sketch's union with itself
+    // depends on its registers alone, so N(h) does not depend on the plan
+    // that gathered the balls. coalesce: an empty vertex set sums to
+    // NULL, and the series should degrade to a single (0, 0) row rather
+    // than NPE
+    val total = coalesce(sum(hll_sketch_estimate(hll_union(col("sk"), col("sk")))), lit(0L))
     val balls0 = Materialize.eager(GraphOps.vertices(e)
       .groupBy(col("id")).agg(hll_sketch_agg(col("id"), lgConfigK).as("sk")), total)
     var prevN = balls0.scalars.getLong(0)
@@ -106,7 +111,7 @@ object Centrality {
           when(col("gsk").isNull, col("sk"))
             .otherwise(hll_union(col("sk"), col("gsk"))).as("sk"))
     }(Superstep.Observe(_ => Seq(total)), (h, row) => {
-      val n = row.getLong(0)
+      val n = row.getLong(1)
       series += ((h.toLong, n))
       val verdict = Superstep.Verdict(n - prevN, 0L,
         n <= prevN || (n - prevN).toDouble / prevN < tolerance)

@@ -66,7 +66,7 @@ object KCore {
     var left = n
     val res = Superstep.converge("kcore", alive, if (n == 0L) 0 else maxRounds) {
       (a, _) => peel(e, a, k)
-    }(Superstep.Observe(_ => Seq(count(lit(1)))), (_, row) => {
+    }(Superstep.Observe(_ => Nil), (_, row) => {
       val m = row.getLong(0)
       val verdict = Superstep.Verdict(left - m, 0L, m == left || m == 0L)
       left = m

@@ -86,14 +86,15 @@ object Louvain {
                 m2: Long, round: Int): DataFrame = {
     // Σtot per community (self-strength included — the score subtracts
     // k_i again for the own-community candidate)
-    // vertex-state side hash-built (guide §3.1): assign is stats-less
-    // mid-loop and both sides are vertex-sized, so the planner would
+    // vertex-state side hash-built (guide §3.1): both sides are
+    // vertex-sized, too large to broadcast at scale, so the planner would
     // sort-merge; strength is the persisted side → build it
     val tot = assign.join(strength.hint("shuffle_hash"), "id")
       .groupBy(col("com")).agg(sum(col("k")).as("tot"))
     // k_{i,d}: i's weight into each neighbor community, neighbors j ≠ i
-    // shuffled-hash build of the assignment state (PageRank.stateSide
-    // rationale: no stats mid-loop → SMJ re-sorts the edge side)
+    // shuffled-hash build of the vertex-sized assignment state
+    // (PageRank.stateSide rationale: sort-merge would re-sort the edge
+    // side every round)
     val kid = edges.filter(col("src") =!= col("dst"))
       .join(assign.select(col("id").as("nid"), col("com")).hint("shuffle_hash"),
         col("dst") === col("nid"))
@@ -201,15 +202,16 @@ object Louvain {
       var stable = false
       while (!stable && r < maxRoundsPerLevel) {
         r += 1
-        val next = Materialize.eager(moveRound(g, strength, assign, m2, r)).state
-        // prev side hash-built (guide §3.1): the checkpointed assignment
-        // carries no stats, so the stability count would plan sort-merge
-        val moved = next.join(assign.withColumnRenamed("com", "prev")
-            .hint("shuffle_hash"), "id")
-          .filter(col("com") =!= col("prev")).count()
+        // each row carries its previous community, so the truncation
+        // observes the moved count; the vertex-sized prev side is
+        // hash-built (guide §3.1)
+        val next = Materialize.eager(moveRound(g, strength, assign, m2, r)
+            .join(assign.select(col("id"), col("com").as("prev"))
+              .hint("shuffle_hash"), "id"),
+          count_if(col("com") =!= col("prev")))
         assign.unpersist(blocking = false)
-        assign = next
-        stable = moved == 0L
+        assign = next.state.select(col("id"), col("com"))
+        stable = next.scalars.getLong(0) == 0L
       }
       strength.unpersist(blocking = false)
       // compose onto original ids, contract, and decide whether to go on

@@ -86,7 +86,7 @@ object Mis {
             .when(col("_out").isNotNull, lit("out"))
             .otherwise(lit("und")).as("status"))
     }(Superstep.Observe(_ => Seq(count_if(col("status") === "und"))), (_, row) =>
-      Superstep.Verdict(row.getLong(0), 0L, stopWhenDecided && row.getLong(0) == 0L))
+      Superstep.Verdict(row.getLong(1), 0L, stopWhenDecided && row.getLong(1) == 0L))
     e.unpersist(blocking = false)
     res.labels.select(col("id"), col("status"))
   }

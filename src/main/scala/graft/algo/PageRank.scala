@@ -201,7 +201,7 @@ object PageRank {
           col("label").as("prev"))
     }(Superstep.Observe(_ => Seq(max(abs(col("label") - col("prev"))))),
       (_, row) => {
-        val delta = row.getDouble(0)
+        val delta = row.getDouble(1)
         hist += delta
         Superstep.Verdict(math.round(delta * 1e15), 0L, delta < eps)
       })

@@ -75,8 +75,10 @@ object RandomWalks {
     val adj = indexedAdjacency(e).persist(StorageLevel.MEMORY_AND_DISK)
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
 
+    // read by step 1 and by the output union: truncated lazily, as in
+    // walkCorpus
     val step0 = starts.select(col("id").as("walk_id"),
-      lit(0L).as("step"), col("id").as("vertex"))
+      lit(0L).as("step"), col("id").as("vertex")).localCheckpoint(eager = false)
     // step 1: uniform LCG choice, identical to walks()'s t=1
     val step1 = Materialize.eager(step0
       .join(deg.select(col("id").as("did"), col("d")), col("vertex") === col("did"))
@@ -121,6 +123,27 @@ object RandomWalks {
     out
   }
 
+  /** The corpus of one walk per row of `starts` (walk_id = start id):
+    * (walk_id, step, vertex) for steps 0..length, where `move(rows of
+    * step t − 1, t)` gives the rows of step t as (walk_id, step, cur).
+    * Step 0 is read twice too, by step 1 and by the output union, so it
+    * is truncated lazily (the frontier loops' init idiom): step 1's job
+    * computes it once and the union reads the stored rows, with no job
+    * of its own and no cache entry.
+    */
+  private def walkCorpus(starts: DataFrame, length: Int)(
+      move: (DataFrame, Int) => DataFrame): DataFrame = {
+    val frames = ArrayBuffer.empty[DataFrame]
+    val last = Superstep.fixed(starts.select(col("id").as("walk_id"),
+        lit(0L).as("step"), col("id").as("cur")).localCheckpoint(eager = false),
+        length, readsPrevOnce = false) { (state, t) =>
+      frames += state
+      move(state, t)
+    }
+    (frames :+ last).reduce(_ union _)
+      .select(col("walk_id"), col("step"), col("cur").as("vertex"))
+  }
+
   /** One walk per row of `starts` (walk_id = start id), `length` steps.
     * Returns (walk_id, step, vertex) for steps 0..length — a walk stops
     * early only at a sink (impossible on a symmetrized graph). Exact for
@@ -131,11 +154,7 @@ object RandomWalks {
     val deg = edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("d"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val frames = ArrayBuffer.empty[DataFrame]
-    val last = Superstep.fixed(starts.select(col("id").as("walk_id"),
-        lit(0L).as("step"), col("id").as("cur")), length,
-        readsPrevOnce = false) { (state, t) =>
-      frames += state
+    val out = walkCorpus(starts, length) { (state, t) =>
       state
         .join(deg.select(col("id").as("did"), col("d")), col("cur") === col("did"))
         .join(adj.select(col("src").as("asrc"), col("dst").as("adst"), col("idx")),
@@ -144,8 +163,6 @@ object RandomWalks {
               + lit(t.toLong)) % col("d"))
         .select(col("walk_id"), lit(t.toLong).as("step"), col("adst").as("cur"))
     }
-    val out = (frames :+ last).reduce(_ union _)
-      .select(col("walk_id"), col("step"), col("cur").as("vertex"))
     adj.unpersist(blocking = false)
     deg.unpersist(blocking = false)
     out
@@ -172,11 +189,7 @@ object RandomWalks {
                     length: Int): DataFrame = {
     val e = wEdges.select(col("src"), col("dst"), col("weight"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val frames = ArrayBuffer.empty[DataFrame]
-    val last = Superstep.fixed(starts.select(col("id").as("walk_id"),
-        lit(0L).as("step"), col("id").as("cur")), length,
-        readsPrevOnce = false) { (state, t) =>
-      frames += state
+    val out = walkCorpus(starts, length) { (state, t) =>
       val cand = state.select(col("walk_id"), col("cur"))
         .join(e, col("cur") === col("src"))
         .select(col("walk_id"), col("cur"), col("dst"), col("weight"))
@@ -192,8 +205,6 @@ object RandomWalks {
         .select(col("walk_id"), lit(t.toLong).as("step"),
           col("dst").as("cur"))
     }
-    val out = (frames :+ last).reduce(_ union _)
-      .select(col("walk_id"), col("step"), col("cur").as("vertex"))
     e.unpersist(blocking = false)
     out
   }

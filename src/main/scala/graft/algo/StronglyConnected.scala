@@ -112,7 +112,7 @@ object StronglyConnected {
         .transform(Materialize.eager(_).state)
       assigned += sccs
       remaining.join(sccs.select(col("id")), Seq("id"), "left_anti")
-    }(Superstep.Observe(_ => Seq(count(lit(1)))), (_, row) => {
+    }(Superstep.Observe(_ => Nil), (_, row) => {
       val left = row.getLong(0)
       val verdict = Superstep.Verdict(nRemaining - left, 0L, left == 0L)
       nRemaining = left

@@ -174,7 +174,7 @@ object Truss {
     val peel = new Peel
     val res = Superstep.converge("ktruss", canon.state, maxRounds) {
       (c, _) => peel(c, k)
-    }(Superstep.Observe(_ => Seq(count(lit(1)))), (_, row) => {
+    }(Superstep.Observe(_ => Nil), (_, row) => {
       val m = row.getLong(0)
       val verdict = Superstep.Verdict(size - m, 0L, m == size || m == 0L)
       size = m

@@ -84,7 +84,8 @@ object Superstep {
     * statistics, and no cache entry survives it.
     *
     * The initial state is used as given; callers that read it more than
-    * once materialize it themselves.
+    * once truncate it themselves (the random walks checkpoint it lazily,
+    * so step 1's job stores it for the later reads).
     *
     * @param step (state after step i−1, i) → state after step i, for
     *             i = 1..steps
@@ -124,9 +125,11 @@ object Superstep {
   sealed trait Probe
 
   /** Aggregate columns over the round's new state alone (round number →
-    * columns), observed inside the round's eager truncation. A probe that
-    * compares rows with their previous values reads a column the step
-    * carries for it ([[changedRows]]).
+    * columns), observed inside the round's eager truncation. `stop` reads
+    * the state's row count, which the truncation observes anyway, in
+    * column 0 and these columns after it, so a probe never counts the
+    * rows itself. A probe that compares rows with their previous values
+    * reads a column the step carries for it ([[changedRows]]).
     */
   final case class Observe(scalars: Int => Seq[Column]) extends Probe
 
@@ -188,7 +191,8 @@ object Superstep {
     *                  cap: a resumed call passes the same value)
     * @param step      (state after round i−1, i) → state after round i
     * @param probe     the round's scalars ([[Observe]])
-    * @param stop      (i, probe row) → the round's [[Verdict]]
+    * @param stop      (i, row) → the round's [[Verdict]]; an [[Observe]]
+    *                  round's row is (row count, probe columns…)
     * @return the last state, the last round number, and whether `stop`
     *         ended the run (false when `lastRound` did)
     */
@@ -212,7 +216,7 @@ object Superstep {
         case Observe(scalars) =>
           val cut = Materialize.eager(next, scalars(iter): _*)
           state = durable.fold(cut.state)(_.checkpoint(algorithm, iter, cut.state))
-          cut.scalars
+          Row.fromSeq(cut.rows +: cut.scalars.toSeq)
         case Query(agg) =>
           state = durable.fold(next.localCheckpoint(eager = false))(
             _.checkpoint(algorithm, iter, next))
@@ -254,9 +258,9 @@ object Superstep {
     state.union(found)
       .coalesce(state.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
 
-  /** Stop when the probe's count (column 0) is zero. */
+  /** Stop when the [[Observe]] probe's count (column 1) is zero. */
   def untilZero(iter: Int, row: Row): Verdict =
-    Verdict(row.getLong(0), 0L, row.getLong(0) == 0L)
+    Verdict(row.getLong(1), 0L, row.getLong(1) == 0L)
 
   /** Label propagation and connected components on [[converge]]: run
     * `update` until the [[Convergence]] rules stop it.

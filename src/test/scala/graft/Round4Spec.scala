@@ -891,6 +891,25 @@ class HyperAnfSpec extends GraftSuite {
       assert(math.abs(est - ex).toDouble / ex < 0.10, s"depth $d: $est vs $ex")
     }
   }
+
+  test("the series does not depend on broadcast joins") {
+    // the join strategies set the order sketches reach each union; at
+    // lgConfigK 4 the balls' sketches leave the exact coupon modes early
+    val rnd = new scala.util.Random(5)
+    val pairs = Seq.fill(900)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+      .filter(p => p._1 != p._2).distinct
+    val e = edgesDf(undirected(pairs))
+    def series(): Seq[(Long, Long)] =
+      Centrality.neighborhoodFunctionApprox(e, maxDepth = 6, lgConfigK = 4)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    val withBroadcasts = series()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val without = try series() finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(without.size >= 4)
+    assert(without === withBroadcasts)
+  }
 }
 
 class StreamingDurabilitySpec extends GraftSuite {

@@ -405,7 +405,7 @@ class SuperstepDriverSpec extends GraftSuite {
     */
   private def selfJoinRounds(lastRound: Int): DataFrame =
     Superstep.converge("selfjoin", init, lastRound)(selfJoin)(
-      Superstep.Observe(_ => Seq(count(lit(1)))), (_, row) =>
+      Superstep.Observe(_ => Nil), (_, row) =>
         Superstep.Verdict(row.getLong(0), 0L, stop = false)).labels
 
   test("every truncation keeps real statistics") {
@@ -414,15 +414,26 @@ class SuperstepDriverSpec extends GraftSuite {
     // squares every round
     val bare = (1 to 6).foldLeft(init)((s, i) => selfJoin(s, i).localCheckpoint(eager = true))
     assert(size(bare) > (BigInt(1) << 64), s"bare estimate ${size(bare)}")
-    // rows × (8 bytes of row overhead + 8 per long column)
+    // variable-width states: 1,000-byte binaries (Catalyst's default is
+    // 100) and arrays of 100 doubles (the default is one element)
+    val blobs = init.select(col("id"), unhex(repeat(lit("ab"), 1000)).as("b"))
+    val vectors = init.select(col("id"), array_repeat(lit(0.5), 100).as("v"))
+    val touch = (df: DataFrame, _: Int) => df.select(col("*"))
+    // rows × (8 bytes of row overhead + 8 per long column + the observed
+    // average length of a variable-width column)
     val truncated: Seq[(String, DataFrame, Int)] = Seq(
       ("a convergence round", selfJoinRounds(6), 24),
       ("a read-more fixed step", Superstep.fixed(init, 6, readsPrevOnce = false)(selfJoin), 24),
-      ("KCore.peelFixed", KCore.peelFixed(edgesDf(Fixtures.karatePairs), 4L, rounds = 2), 16))
+      ("KCore.peelFixed", KCore.peelFixed(edgesDf(Fixtures.karatePairs), 4L, rounds = 2), 16),
+      ("a binary state", Superstep.fixed(blobs, 2, readsPrevOnce = false)(touch), 16 + 1000),
+      ("an array state", Superstep.fixed(vectors, 2, readsPrevOnce = false)(touch), 16 + 800))
     truncated.foreach { case (name, df, width) =>
       assert(size(df) === BigInt(df.count() * width), name)
     }
     assert(truncated.head._2.agg(min("x"), max("x")).first() === Row(6L, 6L))
+    // the binary state's estimate covers the bytes it holds
+    val blobState = truncated(3)._2
+    assert(size(blobState) >= BigInt(blobState.agg(sum(octet_length(col("b")))).first().getLong(0)))
   }
 
   test("the observed scalars equal an aggregate over the same state") {
@@ -438,7 +449,7 @@ class SuperstepDriverSpec extends GraftSuite {
           .join(alive.select(col("id").as("dst")), "dst")
           .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= 4).select(col("id")),
-        Seq(count(lit(1)))),
+        Nil),
       ("SSSP", sources(1L).select(col("id"), lit(0L).as("dist")), (d, _) => {
         val next = ShortestPaths.relaxOnce(w, d.select(col("id"), col("dist")))
         next.join(d.select(col("id"), col("dist").as("old")), Seq("id"), "left")
@@ -463,8 +474,9 @@ class SuperstepDriverSpec extends GraftSuite {
       })
       states += res.labels
       assert(rows.size === 4, name)
+      // the row count leads the probe's columns
       rows.zip(states).foreach { case (row, state) =>
-        assert(row === state.agg(scalars.head, scalars.tail: _*).first(), name)
+        assert(row === state.agg(count(lit(1)), scalars: _*).first(), name)
       }
     }
     e.unpersist(blocking = true)
@@ -480,7 +492,7 @@ class SuperstepDriverSpec extends GraftSuite {
 
   test("an observed round costs one eager truncation") {
     val run = (rounds: Int) => countActions(Superstep.converge("plusone", init, rounds)(
-      plusOne)(Superstep.Observe(_ => Seq(count(lit(1)))),
+      plusOne)(Superstep.Observe(_ => Nil),
       (_, row) => Superstep.Verdict(row.getLong(0), 0L, stop = false)))
     val (small, large) = (run(2), run(6))
     assert(large.resultJobs - small.resultJobs === 4 * 1, s"$small in 2 rounds, $large in 6")
