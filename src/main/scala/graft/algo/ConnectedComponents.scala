@@ -139,6 +139,9 @@ object ConnectedComponents {
     *        to its holder, so the per-new-component minimum of seed
     *        labels IS the new component's minimum id. (An edge-REMOVING
     *        delta invalidates this — re-run from scratch there.)
+    * @param checkpointer durable snapshots every `checkpointEvery`-th
+    *        round. Unlike `LabelPropagation.run` and `PageRank.run`, the
+    *        run does not resume from them: it always starts from `init`.
     */
   def run(
       edges: DataFrame,

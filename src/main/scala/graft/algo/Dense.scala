@@ -29,35 +29,31 @@ object Dense {
     */
   def peelRounds(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    var slots = edges.select(col("src"), col("dst"))
-      .transform(Materialize.eager(_).state)
-    var alive = GraphOps.vertices(slots).transform(Materialize.eager(_).state)
+    // each truncation observes its row count: n = alive vertices,
+    // t = surviving slots (= 2m)
+    var slots = Materialize.eager(edges.select(col("src"), col("dst")))
+    var alive = Materialize.eager(GraphOps.vertices(slots.state))
     var out: DataFrame = null
     var r = 0
     while (r < rounds) {
       r += 1
-      val n = alive.count()
-      val t = slots.count() // = 2m
+      val (n, t) = (alive.rows, slots.rows)
       if (n > 0) {
-        val deg = slots.groupBy(col("src").as("id"))
+        val deg = slots.state.groupBy(col("src").as("id"))
           .agg(count(lit(1)).as("deg"))
-        val removed = alive.join(deg, Seq("id"), "left")
+        val removed = alive.state.join(deg, Seq("id"), "left")
           .filter(coalesce(col("deg"), lit(0L)) * n <= t)
           .select(col("id"), lit(r.toLong).as("peel_round"))
           .transform(Materialize.eager(_).state)
         out = if (out == null) removed else out.union(removed)
-        val nextAlive = alive.join(removed, Seq("id"), "left_anti")
-          .transform(Materialize.eager(_).state)
-        val nextSlots = slots
-          .join(nextAlive.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(nextAlive.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-          .transform(Materialize.eager(_).state)
-        alive = nextAlive
-        slots = nextSlots
+        alive = Materialize.eager(alive.state.join(removed, Seq("id"), "left_anti"))
+        slots = Materialize.eager(slots.state
+          .join(alive.state.select(col("id").as("src")), Seq("src"), "left_semi")
+          .join(alive.state.select(col("id").as("dst")), Seq("dst"), "left_semi")
+          .select(col("src"), col("dst")))
       }
     }
-    val survivors = alive
+    val survivors = alive.state
       .select(col("id"), lit(rounds.toLong + 1).as("peel_round"))
     if (out == null) survivors else out.union(survivors)
   }

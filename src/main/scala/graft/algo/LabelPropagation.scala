@@ -58,20 +58,17 @@ object LabelPropagation {
 
   /** Packed-argmax eligibility: every vertex id (= every possible label)
     * must fit 40 bits and every per-label neighbor count (bounded by max
-    * in-degree) must fit 23 bits. One aggregation job: per-dst group gives
-    * the in-degree and carries max(src), so both bounds come from a single
-    * shuffle. Every public entry point consults this (or an explicit
-    * caller override) — outside the budget `LabelMask - label` goes
-    * negative and the packed max would elect wrong winners silently.
+    * in-degree) must fit 23 bits; an empty edge table fits. One
+    * aggregation job ([[GraphOps.degreeProfile]]). Every public entry
+    * point consults this (or an explicit caller override) — outside the
+    * budget `LabelMask - label` goes negative and the packed max would
+    * elect wrong winners silently.
     */
-  def packedBudgetOk(edges: DataFrame): Boolean = {
-    val row = edges.groupBy(col("dst"))
-      .agg(count(lit(1)).as("indeg"), max(col("src")).as("maxSrc"))
-      .agg(max(col("indeg")).as("maxDeg"),
-        max(greatest(col("dst"), col("maxSrc"))).as("maxId"))
-      .first()
-    row.getLong(1) < (1L << PackLabelBits) && row.getLong(0) < (1L << 23)
-  }
+  def packedBudgetOk(edges: DataFrame): Boolean =
+    GraphOps.degreeProfile(edges).forall(packedFits)
+
+  private def packedFits(p: GraphOps.DegreeProfile): Boolean =
+    p.maxId < (1L << PackLabelBits) && p.maxDegree < (1L << 23)
 
   private def resolvePacked(edges: DataFrame, packed: Option[Boolean]): Boolean =
     packed.getOrElse(packedBudgetOk(edges))
@@ -333,21 +330,6 @@ object LabelPropagation {
       .groupBy("id", "label").agg(count(lit(1)).as("n_rounds"))
   }
 
-  /** Run to convergence. `edges` should be symmetrized for undirected
-    * semantics and pre-partitioned via [[GraphOps.prepareForGather]].
-    *
-    * @param autoSkew with no explicit `skewPlan`, derive the hot-vertex
-    *        threshold from the in-degree distribution (p99.9 with a mean
-    *        floor, [[GraphOps.planSkewAuto]]) and route supersteps through
-    *        the broadcast hot/cold split when a hot set exists — the
-    *        SURVEY §7.4 default. One extra aggregation job at setup; a
-    *        near-uniform graph (or one whose max in-degree is below a
-    *        reducer's fair share) derives no plan and runs the plain
-    *        superstep. Skipped when a hashed tie-break seed is requested
-    *        (the skew-aware path is pinned-tie-break only). Labels are
-    *        plan-routing-invariant — gated label-exact against the plain
-    *        plan (`g_lp_skew_t3` / `g_lp_autoskew_t3`).
-    */
   /** Seed-constrained (semi-supervised) label propagation — the
     * TrustRank-style spreading primitive: seed vertices carry fixed
     * labels, every other vertex starts UNLABELED (null) and per superstep
@@ -388,6 +370,34 @@ object LabelPropagation {
     }
   }
 
+  /** Run to convergence. `edges` should be symmetrized for undirected
+    * semantics and pre-partitioned via [[GraphOps.prepareForGather]].
+    *
+    * Setup is one aggregation job ([[GraphOps.degreeProfile]]) that
+    * serves both decisions: the packed-argmax bit budget and, with
+    * `autoSkew`, the skew threshold.
+    *
+    * @param checkpointer durable snapshots every `checkpointEvery`-th
+    *        superstep; the run resumes itself from the latest validated
+    *        one ([[Checkpointer.resume]]) and continues its numbering,
+    *        convergence history and hashed tie-break seeds. `maxIter` is a
+    *        TOTAL-run cap, so interrupt + resume never runs more supersteps
+    *        than a straight run with the same cap (ADVICE r2). The first
+    *        superstep's shortcuts (identity init, no init materialization,
+    *        the symmetric gather-free first step) apply only to a fresh
+    *        start.
+    * @param autoSkew with no explicit `skewPlan`, derive the hot-vertex
+    *        threshold from the in-degree distribution (p99.9 with a mean
+    *        floor, [[GraphOps.DegreeProfile.skewThreshold]]) and route
+    *        supersteps through the broadcast hot/cold split when a hot set
+    *        exists — the SURVEY §7.4 default. A near-uniform graph (or one
+    *        whose max in-degree is below a reducer's fair share) derives no
+    *        plan and runs the plain superstep. Skipped when a hashed
+    *        tie-break seed is requested (the skew-aware path is
+    *        pinned-tie-break only). Labels are plan-routing-invariant —
+    *        gated label-exact against the plain plan (`g_lp_skew_t3` /
+    *        `g_lp_autoskew_t3`).
+    */
   def run(
       edges: DataFrame,
       nNodes: Long,
@@ -399,44 +409,21 @@ object LabelPropagation {
       symmetric: Boolean = false,
       tieBreakSeed: Option[Long] = None,
       autoSkew: Boolean = true): Superstep.Result = {
-    val init = initLabels(
-      if (symmetric) GraphOps.verticesSymmetric(edges)
-      else GraphOps.vertices(edges))
+    val (start, init, priorMetrics) = checkpointer.flatMap(_.resume("lp"))
+      .getOrElse((0, initLabels(
+        if (symmetric) GraphOps.verticesSymmetric(edges)
+        else GraphOps.vertices(edges)), Nil))
     val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val wantAuto = skewPlan.isEmpty && autoSkew && tieBreakSeed.isEmpty
-    // ONE aggregation job serves both setup decisions: the packed-argmax
-    // bit budget and the skew threshold read the same groupBy(dst) degree
-    // table (round 5 ran two identical-shaped jobs here, both inside the
-    // timed region of lp_converge — guide §2.4, share the pass).
-    val (packed, derivedPlan) =
-      if (wantAuto) {
-        val row = edges.groupBy(col("dst"))
-          .agg(count(lit(1)).as("deg"), max(col("src")).as("maxSrc"))
-          .agg(max(col("deg")).as("maxDeg"),
-            max(greatest(col("dst"), col("maxSrc"))).as("maxId"),
-            percentile_approx(col("deg"), lit(0.999), lit(10000)).as("q"),
-            avg(col("deg")).as("mean"), sum(col("deg")).as("total"))
-          .first()
-        if (row.isNullAt(0)) (true, None) // empty edge table
-        else {
-          val p = row.getLong(1) < (1L << PackLabelBits) &&
-            row.getLong(0) < (1L << 23)
-          // identical derivation to GraphOps.deriveSkewThreshold/planSkewAuto
-          val threshold = math.max(row.getLong(2),
-            math.ceil(row.getDouble(3) * 8.0).toLong)
-          val fairShare = math.max(row.getLong(4) / math.max(parts, 1), 1L)
-          val plan =
-            if (row.getLong(0) > math.max(threshold, fairShare)) {
-              val pl = GraphOps.planSkewBy(edges, "dst", threshold, parts)
-              if (pl.hotIds.count() <= 1000000L) Some(pl)
-              else { GraphOps.unpersistSkew(pl); None }
-            } else None
-          (p, plan)
-        }
-      } else (packedBudgetOk(edges), None)
+    val profile = GraphOps.degreeProfile(edges)
+    val packed = profile.forall(packedFits)
+    val derivedPlan =
+      if (skewPlan.isEmpty && autoSkew && tieBreakSeed.isEmpty)
+        profile.flatMap(_.skewThreshold(parts))
+          .flatMap(GraphOps.planSkewBy(edges, "dst", _, parts, GraphOps.MaxHotIds))
+      else None
     // hashed tie-break re-seeds per iteration (the reference re-draws
     // rand() every call; a fixed per-(id,label) choice can 2-cycle)
-    var it = 0
+    var it = start
     def seedNow(): Option[Long] = { it += 1; tieBreakSeed.map(_ + it) }
     val step: DataFrame => DataFrame = skewPlan.orElse(derivedPlan) match {
       case Some(p) => labels => superstepSkewAware(p, labels, packed)
@@ -451,17 +438,20 @@ object LabelPropagation {
         else superstep(edges, labels, symmetric, packed, seed)
       }
     }
-    // init is always the identity labeling here, so iteration 1's
-    // convergence scalars need no prev-side join (Superstep identityInit);
-    // on the plain pinned symmetric path the first superstep reads only the
-    // edge table (firstStepSymmetric), so the init table is referenced at
-    // most zero times and its setup persist+count job is skipped too.
-    val plainSymmetric = symmetric && tieBreakSeed.isEmpty &&
+    // a fresh init is the identity labeling, so iteration 1's convergence
+    // scalars need no prev-side join (Superstep identityInit); on the
+    // plain pinned symmetric path the first superstep reads only the edge
+    // table (firstStepSymmetric), so the init table is referenced at most
+    // zero times and its setup persist+count job is skipped too.
+    val fresh = start == 0
+    val plainSymmetric = fresh && symmetric && tieBreakSeed.isEmpty &&
       skewPlan.isEmpty && derivedPlan.isEmpty
+    val cap = maxIter.getOrElse(Superstep.maxIterations(nNodes))
     try Superstep.run("lp", init, step, nNodes,
       earlyStop = earlyStop, checkpointer = checkpointer,
-      checkpointEvery = checkpointEvery, maxIter = maxIter,
-      identityInit = true, materializeInit = !plainSymmetric)
+      checkpointEvery = checkpointEvery, maxIter = Some(math.max(cap - start, 0)),
+      startIter = start, priorMetrics = priorMetrics,
+      identityInit = fresh, materializeInit = !plainSymmetric)
     finally derivedPlan.foreach(GraphOps.unpersistSkew) // auto plan is run-scoped
   }
 }

@@ -196,23 +196,17 @@ object Louvain {
       level += 1
       val strength = strengths(g).persist(StorageLevel.MEMORY_AND_DISK)
       val m2 = g.agg(sum(col("weight")).cast("long")).first().getLong(0)
-      var assign = GraphOps.vertices(g).select(col("id"), col("id").as("com"))
+      val single = GraphOps.vertices(g).select(col("id"), col("id").as("com"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      var r = 0
-      var stable = false
-      while (!stable && r < maxRoundsPerLevel) {
-        r += 1
-        // each row carries its previous community, so the truncation
-        // observes the moved count; the vertex-sized prev side is
-        // hash-built (guide §3.1)
-        val next = Materialize.eager(moveRound(g, strength, assign, m2, r)
-            .join(assign.select(col("id"), col("com").as("prev"))
-              .hint("shuffle_hash"), "id"),
-          count_if(col("com") =!= col("prev")))
-        assign.unpersist(blocking = false)
-        assign = next.state.select(col("id"), col("com"))
-        stable = next.scalars.getLong(0) == 0L
-      }
+      // move rounds until one moves nothing: each row carries its previous
+      // community, so the round's truncation observes the moved count; the
+      // vertex-sized prev side is hash-built (guide §3.1)
+      val moved = Superstep.converge("louvain", single, maxRoundsPerLevel) { (prev, r) =>
+        val last = prev.select(col("id"), col("com"))
+        moveRound(g, strength, last, m2, r)
+          .join(last.withColumnRenamed("com", "prev").hint("shuffle_hash"), "id")
+      }(Superstep.changedRows("com", "prev"), Superstep.untilZero)
+      val assign = moved.labels.select(col("id"), col("com"))
       strength.unpersist(blocking = false)
       // compose onto original ids, contract, and decide whether to go on
       val newComposed = composed.alias("c")
@@ -224,7 +218,7 @@ object Louvain {
       composed = newComposed
       val contracted = aggregateGraph(g, assign)
         .transform(Materialize.eager(_).state)
-      assign.unpersist(blocking = false)
+      single.unpersist(blocking = false)
       val nNew = GraphOps.vertices(contracted).count()
       g.unpersist(blocking = false)
       g = contracted

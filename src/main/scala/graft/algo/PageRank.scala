@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.engine.{Materialize, Superstep}
+import graft.engine.{Checkpointer, Materialize, Superstep}
 import graft.graph.GraphOps
 
 /** PageRank over the edge table (north_rule algorithm; absent from the
@@ -131,12 +131,12 @@ object PageRank {
     * @param checkpointer when set, every `checkpointEvery`-th iteration's
     *        ranks go to a durable snapshot (rank carried in the shared
     *        `label` column; lineage + metrics alongside — the north-rule
-    *        resume contract LP/CC already honor, metrics `changes` = the
-    *        L∞ delta ×1e15 as an exact long since ranks are < 1)
-    * @param initRanks resume point (id, rank) — pair with `startIter` from
-    *        `Checkpointer.validatedLatest("pagerank")`; `maxIter` stays a
-    *        TOTAL-run cap, so interrupt+resume never runs more iterations
-    *        than a straight run with the same cap
+    *        resume contract, metrics `changes` = the L∞ delta ×1e15 as an
+    *        exact long since ranks are < 1), and the run resumes itself
+    *        from the latest validated one ([[Checkpointer.resume]]).
+    *        `maxIter` is a TOTAL-run cap, so interrupt + resume never runs
+    *        more iterations than a straight run with the same cap
+    * @param initRanks warm start (id, rank); a resume snapshot wins over it
     */
   def run(
       edges: DataFrame,
@@ -145,11 +145,9 @@ object PageRank {
       maxIter: Int = 100,
       partitions: Int = 32,
       autoSkew: Boolean = true,
-      checkpointer: Option[graft.engine.Checkpointer] = None,
+      checkpointer: Option[Checkpointer] = None,
       checkpointEvery: Int = 5,
-      initRanks: Option[DataFrame] = None,
-      startIter: Int = 0,
-      priorMetrics: Seq[graft.model.SuperstepMetrics] = Nil): Result = {
+      initRanks: Option[DataFrame] = None): Result = {
     val setup = new Setup(edges, partitions)
     import setup.{dangling, edgesDeg, verts}
     val n = verts.count()
@@ -161,10 +159,11 @@ object PageRank {
 
     // the rank rides the `label` column inside the loop: it is the column
     // the durable snapshots (and their resume readers) carry
-    val init = initRanks
-      .map(_.select(col("id"), col("rank").as("label")))
-      .getOrElse(verts.select(col("id"), lit(1.0 / n).as("label")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (startIter, start, priorMetrics) = checkpointer.flatMap(_.resume("pagerank"))
+      .getOrElse((0, initRanks
+        .map(_.select(col("id"), col("rank").as("label")))
+        .getOrElse(verts.select(col("id"), lit(1.0 / n).as("label"))), Nil))
+    val init = start.persist(StorageLevel.MEMORY_AND_DISK)
     init.count()
 
     val hist = scala.collection.mutable.ArrayBuffer.empty[Double]

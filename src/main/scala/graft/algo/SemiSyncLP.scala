@@ -27,16 +27,14 @@ import graft.graph.GraphOps
   */
 object SemiSyncLP {
 
-  /** Proper distance-1 coloring: (id, color). */
+  /** Proper distance-1 coloring: (id, color). One [[Superstep.converge]]
+    * round per Jones–Plassmann round, until no vertex is uncolored.
+    */
   def greedyColoring(edges: DataFrame, maxRounds: Int = 200): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-    var state = GraphOps.vertices(edges)
+    val init = GraphOps.vertices(edges)
       .select(col("id"), lit(null).cast("int").as("color"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var round = 0
-    var remaining = state.filter(col("color").isNull).count()
-    while (remaining > 0 && round < maxRounds) {
-      round += 1
+    val res = Superstep.converge("coloring", init, maxRounds) { (state, _) =>
       val unc = state.filter(col("color").isNull).select(col("id"))
       val uncS = unc.select(col("id").as("usrc"))
       val uncD = unc.select(col("id").as("udst"))
@@ -63,16 +61,12 @@ object SemiSyncLP {
             filter(sequence(lit(0), coalesce(size(col("used")), lit(0))),
               c => !array_contains(coalesce(col("used"), array()), c)),
             1).as("newColor"))
-      val next = graft.engine.Materialize.eager(state
+      state
         .join(assigned, Seq("id"), "left")
-        .select(col("id"), coalesce(col("color"), col("newColor")).as("color")),
-        count_if(col("color").isNull))
-      state.unpersist(blocking = false)
-      state = next.state
-      remaining = next.scalars.getLong(0)
-    }
-    require(remaining == 0, s"coloring did not converge in $maxRounds rounds")
-    state
+        .select(col("id"), coalesce(col("color"), col("newColor")).as("color"))
+    }(Superstep.Observe(_ => Seq(count_if(col("color").isNull))), Superstep.untilZero)
+    require(res.converged, s"coloring did not converge in $maxRounds rounds")
+    res.labels
   }
 
   /** Semi-synchronous LP: color classes updated one per sub-step within a
@@ -106,57 +100,46 @@ object SemiSyncLP {
   def sweepByClasses(edges: DataFrame, classes: DataFrame, nClasses: Long,
                      nNodes: Long, maxSweeps: Option[Int] = None,
                      tieBreakSeed: Option[Long] = None): (DataFrame, Int) = {
-    var subStep = 0L
     val packed = LabelPropagation.packedBudgetOk(edges)
     val edgesByClass = edges
       .join(classes.select(col("id").as("src"), col("cls").as("srcCls")), "src")
       .persist(StorageLevel.MEMORY_AND_DISK)
     edgesByClass.count()
-    var labels = LabelPropagation.initLabels(GraphOps.vertices(edges))
+    val init = LabelPropagation.initLabels(GraphOps.vertices(edges))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cap = maxSweeps.getOrElse(Superstep.maxIterations(nNodes))
-    var sweep = 0
-    var converged = false
-    while (sweep < cap && !converged) {
-      sweep += 1
-      val before = labels // kept persisted until the sweep's change count
-      var c = 0L
-      while (c < nClasses) {
-        // On the symmetrized graph every vertex occurs as src, so the
-        // class-restricted gather covers the whole class: winners are
-        // exactly the class vertices (symmetric=true semantics).
-        val classEdges = edgesByClass.filter(col("srcCls") === c)
-          .select(col("src"), col("dst"))
-        subStep += 1
-        val winners = LabelPropagation
-          .superstep(classEdges, labels, symmetric = true, packedArgmax = packed,
-            tieBreakSeed = tieBreakSeed.map(_ + subStep))
-          .select(col("id").as("wid2"), col("label").as("newLabel"))
-        // The eager per-sub-step checkpoint is load-bearing: every
-        // sub-step references `labels` twice (gather + merge), so a lazy
-        // chain doubles the logical plan per sub-step — 2^nClasses plan
-        // copies by sweep end hang the optimizer. Gauss–Seidel sub-steps
-        // are driver-sequential by nature; one |class|-sized
-        // materialization per sub-step is the honest cost of the schedule.
-        val next = labels
-          .join(winners, labels("id") === col("wid2"), "left")
-          .select(labels("id"), coalesce(col("newLabel"), col("label")).as("label"))
-          .transform(graft.engine.Materialize.eager(_).state)
-        if (labels ne before) labels.unpersist(blocking = false)
-        labels = next
-        c += 1
-      }
-      // prev side hash-built (guide §3.1): stats-less checkpointed state
-      // would otherwise plan this stability count as sort-merge
-      val changes = labels
-        .join(before.withColumnRenamed("label", "prev")
-          .hint("shuffle_hash"), "id")
-        .filter(col("label") =!= col("prev")).count()
-      before.unpersist(blocking = false)
-      converged = changes == 0L
+    val n = nClasses.toInt
+    // Sub-step c of sweep s updates class c − 1 against the CURRENT
+    // labels; every row carries its label from the start of the sweep as
+    // `prev`.
+    def subStep(sweep: Int)(labels: DataFrame, c: Int): DataFrame = {
+      // On the symmetrized graph every vertex occurs as src, so the
+      // class-restricted gather covers the whole class: winners are
+      // exactly the class vertices (symmetric=true semantics).
+      val classEdges = edgesByClass.filter(col("srcCls") === (c - 1).toLong)
+        .select(col("src"), col("dst"))
+      val winners = LabelPropagation
+        .superstep(classEdges, labels, symmetric = true, packedArgmax = packed,
+          tieBreakSeed = tieBreakSeed.map(_ + (sweep - 1).toLong * n + c))
+        .select(col("id").as("wid2"), col("label").as("newLabel"))
+      labels
+        .join(winners, labels("id") === col("wid2"), "left")
+        .select(labels("id"), coalesce(col("newLabel"), col("label")).as("label"),
+          col("prev"))
     }
+    // Every sub-step references its labels twice (gather + merge), so the
+    // sub-steps run on the read-more driver: a lazy chain would double the
+    // logical plan per sub-step. Gauss–Seidel sub-steps are
+    // driver-sequential by nature; one |class|-sized materialization per
+    // sub-step is the honest cost of the schedule. The last sub-step's is
+    // the sweep's own truncation, which counts the changed labels.
+    val res = Superstep.converge("sweep", init,
+        maxSweeps.getOrElse(Superstep.maxIterations(nNodes))) { (prev, sweep) =>
+      val start = prev.select(col("id"), col("label"), col("label").as("prev"))
+      subStep(sweep)(Superstep.fixed(start, n - 1, readsPrevOnce = false)(subStep(sweep)), n)
+    }(Superstep.changedRows("label", "prev"), Superstep.untilZero)
+    init.unpersist(blocking = false)
     edgesByClass.unpersist(blocking = false)
-    (labels, sweep)
+    (res.labels.select(col("id"), col("label")), res.iterations)
   }
 }
 

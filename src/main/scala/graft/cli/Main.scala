@@ -84,46 +84,10 @@ object Main {
 
     def runLp(): Unit = {
       val t0 = System.nanoTime()
-      // resume mid-convergence from the latest VALIDATED durable snapshot
-      // (_SUCCESS marker + matching metrics entry) if present
-      val r = cp.validatedLatest("lp") match {
-        case Some((iter, snapshot)) =>
-          println(s"[graft] lp: resuming from checkpoint iter=$iter")
-          // drop stale snapshots beyond the VALIDATED point — a torn,
-          // farther-advanced snapshot from a crashed run must neither be
-          // selected nor survive to shadow this run's progress (ADVICE r2)
-          cp.pruneAbove("lp", iter)
-          val packed = LabelPropagation.packedBudgetOk(edges)
-          // same default-path skew defense as the fresh run: auto-derived
-          // threshold, broadcast hot/cold routing when a hot set exists
-          // (pinned tie-break only — the skew path has no hashed mode)
-          val skew =
-            if (tieSeed.isEmpty) GraphOps.planSkewAuto(edges, partitions)
-            else None
-          var it = iter
-          // maxIter is a TOTAL-run cap: the resumed invocation gets only
-          // the remaining budget (Superstep.run's maxIter counts additional
-          // iterations past startIter), so interrupt+resume never exceeds
-          // what a straight run with the same cap would do (ADVICE r2)
-          val capTotal = maxIter.getOrElse(graft.engine.Superstep.maxIterations(nNodes))
-          try graft.engine.Superstep.run("lp", snapshot,
-            l => skew match {
-              case Some(p) =>
-                LabelPropagation.superstepSkewAware(p, l, packed)
-              case None =>
-                it += 1
-                LabelPropagation.superstep(edges, l, symmetric = true,
-                  packedArgmax = packed, tieBreakSeed = tieSeed.map(_ + it))
-            },
-            nNodes, checkpointer = Some(cp), checkpointEvery = 1,
-            maxIter = Some(math.max(capTotal - iter, 0)), startIter = iter,
-            priorMetrics = cp.readMetrics("lp").filter(_.iteration <= iter))
-          finally skew.foreach(GraphOps.unpersistSkew)
-        case None =>
-          LabelPropagation.run(edges, nNodes, checkpointer = Some(cp),
-            checkpointEvery = 1, maxIter = maxIter, symmetric = true,
-            tieBreakSeed = tieSeed)
-      }
+      // resumes from the latest validated snapshot; maxIter is a total cap
+      val r = LabelPropagation.run(edges, nNodes, checkpointer = Some(cp),
+        checkpointEvery = 1, maxIter = maxIter, symmetric = true,
+        tieBreakSeed = tieSeed)
       r.labels.write.mode("overwrite").parquet(s"$outDir/lp_labels")
       val q = Measures.modularity(edges, r.labels)
       val c = Measures.communityCount(r.labels)
@@ -142,23 +106,8 @@ object Main {
         s"components=${Measures.communityCount(r.labels)}")
     }
     def runPr(): Unit = {
-      // same resume contract as LP/CC: restart from the latest VALIDATED
-      // durable snapshot; maxIter stays a TOTAL-run cap
-      val r = cp.validatedLatest("pagerank") match {
-        case Some((it, snap)) =>
-          println(s"[graft] pagerank: resuming from checkpoint iter=$it")
-          cp.pruneAbove("pagerank", it)
-          PageRank.run(edges, maxIter = maxIter.getOrElse(100),
-            partitions = partitions,
-            checkpointer = Some(cp), checkpointEvery = 1,
-            initRanks = Some(snap.select(col("id"), col("label").as("rank"))),
-            startIter = it,
-            priorMetrics = cp.readMetrics("pagerank").filter(_.iteration <= it))
-        case None =>
-          PageRank.run(edges, maxIter = maxIter.getOrElse(100),
-            partitions = partitions,
-            checkpointer = Some(cp), checkpointEvery = 1)
-      }
+      val r = PageRank.run(edges, maxIter = maxIter.getOrElse(100),
+        partitions = partitions, checkpointer = Some(cp), checkpointEvery = 1)
       r.ranks.write.mode("overwrite").parquet(s"$outDir/pagerank")
       println(s"[graft] pagerank: iters=${r.iterations} converged=${r.converged}")
     }

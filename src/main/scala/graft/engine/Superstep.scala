@@ -273,10 +273,10 @@ object Superstep {
     * @param maxIter     iterations THIS invocation may run (cap =
     *                    startIter + maxIter); a resuming caller that wants a
     *                    total-run budget must pass the remainder (see
-    *                    [[graft.cli.Main]], ADVICE r2)
-    * @param startIter   resume offset (see [[converge]]) — pair with
-    *                    [[Checkpointer.pruneAbove]] to drop stale post-crash
-    *                    snapshots first
+    *                    `LabelPropagation.run`, ADVICE r2)
+    * @param startIter   resume offset (see [[converge]]) — take it from
+    *                    [[Checkpointer.resume]], which drops stale
+    *                    post-crash snapshots first
     * @param priorMetrics metrics history of the interrupted run up to the
     *                    resume point; re-emitted in metrics.json (no
     *                    history loss) and used to seed the convergence
@@ -433,7 +433,9 @@ final class Convergence(earlyStop: Boolean, usePlateau: Boolean = true) {
 
 /** Durable per-superstep checkpoint + metrics + per-partition lineage
   * (north_rule: "every superstep checkpoints per-partition lineage and
-  * iteration metrics ... so runs resume mid-convergence").
+  * iteration metrics ... so runs resume mid-convergence"). A run given a
+  * checkpointer resumes itself from [[resume]]
+  * (`LabelPropagation.run`, `PageRank.run`).
   *
   * Layout (Parquet stand-in for an Iceberg table — the offline image has
   * no iceberg-spark-runtime jar; this is the `TableIO` seam of SURVEY.md
@@ -441,6 +443,12 @@ final class Convergence(earlyStop: Boolean, usePlateau: Boolean = true) {
   *   {dir}/{algorithm}/labels/iter={N}/        label snapshot
   *   {dir}/{algorithm}/lineage/iter={N}/       per-partition (count, labelSum)
   *   {dir}/{algorithm}/metrics.json            iteration metrics history
+  *
+  * Lineage rows are per partition of the WRITTEN snapshot as read back,
+  * not of the round's plan: the snapshot is written from the round's
+  * truncated state, whose partitions are the ones AQE coalesced, so on
+  * small inputs the whole snapshot may be one partition and one lineage
+  * row. The rows always sum to the snapshot's row count and label sum.
   */
 final class Checkpointer(val dir: String, spark: SparkSession) {
   import org.apache.hadoop.fs.{FileSystem, Path}
@@ -532,6 +540,19 @@ final class Checkpointer(val dir: String, spark: SparkSession) {
             fs.delete(st.getPath, true)
         }
       }
+    }
+
+  /** The resume point of `algorithm`: the latest validated snapshot's
+    * iteration, the snapshot, and the metrics history up to it. Snapshots
+    * above it are pruned first, so a later run never adopts them. None
+    * when no validated snapshot exists (a fresh run). File-system checks
+    * only until a snapshot is found: no Spark job.
+    */
+  def resume(algorithm: String): Option[(Int, DataFrame, Seq[SuperstepMetrics])] =
+    validatedLatest(algorithm).map { case (iter, snapshot) =>
+      println(s"[graft] $algorithm: resuming from checkpoint iter=$iter")
+      pruneAbove(algorithm, iter)
+      (iter, snapshot, readMetrics(algorithm).filter(_.iteration <= iter))
     }
 
   /** Latest durable snapshot for `algorithm`, if any — no completeness

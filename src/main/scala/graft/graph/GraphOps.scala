@@ -132,28 +132,32 @@ object GraphOps {
       hotIds: DataFrame)     // one column `id` — small, broadcastable
 
   def planSkew(edges: DataFrame, threshold: Long, partitions: Int): SkewPlan =
-    planSkewBy(edges, "dst", threshold, partitions)
+    planSkewBy(edges, "dst", threshold, partitions).get
 
   /** [[planSkew]] generalized over the skew key: `dst` for the gather
     * joins of LP/CC (in-degree skew), `src` for PageRank's rank-split
     * join (out-degree skew). The hot slice is re-partitioned by the
     * OPPOSITE key so a hot vertex's edges spread across partitions while
     * its (broadcast) state needs no shuffle at all.
+    *
+    * @return None when more than `maxHotIds` vertices are hot (a quantile
+    *         can flag 0.1% of a 10^12-vertex graph, which is NOT
+    *         broadcastable; such graphs keep the AQE skew-join backstop)
     */
   def planSkewBy(edges: DataFrame, key: String, threshold: Long,
-                 partitions: Int): SkewPlan = {
+                 partitions: Int, maxHotIds: Long = Long.MaxValue): Option[SkewPlan] = {
     val other = if (key == "dst") "src" else "dst"
     val deg = edges.groupBy(col(key).as("id")).agg(count(lit(1)).as("deg"))
     val hotIds = deg.filter(col("deg") > threshold).select("id")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    hotIds.count() // materialize so both slices below see a stable set
-    val hot = edges.join(broadcast(hotIds), edges(key) === hotIds("id"), "left_semi")
-      .repartition(partitions, col(other))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cold = edges.join(broadcast(hotIds), edges(key) === hotIds("id"), "left_anti")
-      .repartition(partitions, col(key))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    SkewPlan(hot, cold, hotIds)
+    // materialized, so both slices below see a stable set
+    if (hotIds.count() > maxHotIds) { hotIds.unpersist(blocking = false); None }
+    else Some(SkewPlan(
+      edges.join(broadcast(hotIds), edges(key) === hotIds("id"), "left_semi")
+        .repartition(partitions, col(other)).persist(StorageLevel.MEMORY_AND_DISK),
+      edges.join(broadcast(hotIds), edges(key) === hotIds("id"), "left_anti")
+        .repartition(partitions, col(key)).persist(StorageLevel.MEMORY_AND_DISK),
+      hotIds))
   }
 
   /** Release a [[SkewPlan]]'s cached slices (they are persisted at build
@@ -165,56 +169,79 @@ object GraphOps {
     plan.hotIds.unpersist(blocking = false)
   }
 
-  /** Automatic skew-threshold derivation (SURVEY.md §7.4: "computed from
-    * the degree distribution at load (p99.9)") — ONE aggregation job over
-    * the keyed degree distribution.
-    *
-    * threshold = max( p`quantile` of the degree distribution,
-    *                  `floorFactor` × mean degree )
-    *
-    * The p99.9 quantile adapts to the power-law tail; the mean floor keeps
-    * near-uniform graphs (where p99.9 ≈ mean) from flagging ordinary
-    * vertices. The plan ENGAGES only when the max degree also exceeds a
-    * reducer's fair share (|E| / partitions): below that, even the hottest
-    * key fits comfortably in one task and the broadcast routing would be
-    * pure overhead — skew is a property of the degree distribution
-    * RELATIVE to the parallelism, not of the distribution alone.
-    *
-    * @return Some(threshold) iff a hot set exists under that criterion
+  /** The keyed degree distribution in one number each: the largest
+    * degree, the largest vertex id at either end of an edge, the
+    * `quantile` degree, the mean degree and the total slot count.
+    */
+  final case class DegreeProfile(maxDegree: Long, maxId: Long, quantile: Long,
+                                 mean: Double, total: Long) {
+
+    /** Automatic skew threshold (SURVEY.md §7.4: "computed from the
+      * degree distribution at load (p99.9)"):
+      *
+      * threshold = max( the quantile degree, `floorFactor` × mean degree )
+      *
+      * The p99.9 quantile adapts to the power-law tail; the mean floor
+      * keeps near-uniform graphs (where p99.9 ≈ mean) from flagging
+      * ordinary vertices. The plan ENGAGES only when the max degree also
+      * exceeds a reducer's fair share (|E| / partitions): below that, even
+      * the hottest key fits comfortably in one task and the broadcast
+      * routing would be pure overhead — skew is a property of the degree
+      * distribution RELATIVE to the parallelism, not of the distribution
+      * alone.
+      *
+      * @return Some(threshold) iff a hot set exists under that criterion
+      */
+    def skewThreshold(partitions: Int, floorFactor: Double = 8.0): Option[Long] = {
+      val threshold = math.max(quantile, math.ceil(mean * floorFactor).toLong)
+      val fairShare = math.max(total / math.max(partitions, 1), 1L)
+      if (maxDegree > math.max(threshold, fairShare)) Some(threshold) else None
+    }
+  }
+
+  /** The [[DegreeProfile]] of `edges` keyed by `key`, in ONE aggregation
+    * job over the keyed degree table, so every setup decision that reads
+    * the degree distribution shares the pass (LMFAO's batched aggregates):
+    * the packed-argmax budget (`LabelPropagation.packedBudgetOk`) and the
+    * skew threshold read the same row. None for an empty edge table.
+    */
+  def degreeProfile(edges: DataFrame, key: String = "dst",
+                    quantile: Double = 0.999): Option[DegreeProfile] = {
+    val other = if (key == "dst") "src" else "dst"
+    val row = edges.groupBy(col(key))
+      .agg(count(lit(1)).as("deg"), max(col(other)).as("maxOther"))
+      .agg(max(col("deg")), max(greatest(col(key), col("maxOther"))),
+        percentile_approx(col("deg"), lit(quantile), lit(10000)),
+        avg(col("deg")), sum(col("deg")))
+      .first()
+    // an empty edge table aggregates to one all-NULL row
+    if (row.isNullAt(0)) None
+    else Some(DegreeProfile(row.getLong(0), row.getLong(1), row.getLong(2),
+      row.getDouble(3), row.getLong(4)))
+  }
+
+  /** The skew threshold of `edges` ([[DegreeProfile.skewThreshold]]) —
+    * None when no hot set exists or the edge table is empty.
     */
   def deriveSkewThreshold(edges: DataFrame, partitions: Int,
                           key: String = "dst", quantile: Double = 0.999,
-                          floorFactor: Double = 8.0): Option[Long] = {
-    val row = edges.groupBy(col(key)).agg(count(lit(1)).as("deg"))
-      .agg(percentile_approx(col("deg"), lit(quantile), lit(10000)).as("q"),
-        avg(col("deg")).as("mean"), max(col("deg")).as("mx"),
-        sum(col("deg")).as("total"))
-      .first()
-    // an empty edge table aggregates to one all-NULL row: nothing to skew
-    if (row.isNullAt(0)) return None
-    val threshold = math.max(row.getLong(0),
-      math.ceil(row.getDouble(1) * floorFactor).toLong)
-    val fairShare = math.max(row.getLong(3) / math.max(partitions, 1), 1L)
-    if (row.getLong(2) > math.max(threshold, fairShare)) Some(threshold) else None
-  }
+                          floorFactor: Double = 8.0): Option[Long] =
+    degreeProfile(edges, key, quantile).flatMap(_.skewThreshold(partitions, floorFactor))
+
+  /** Largest hot set the derived skew plans broadcast. */
+  val MaxHotIds = 1000000L
 
   /** Derive-then-build: the default-path skew defense. Returns None when
     * no hot set exists (near-uniform graph, or max degree below a
-    * reducer's fair share) or when the derived hot set is too large to
-    * broadcast (`maxHotIds` — a quantile can flag 0.1% of a 10^12-vertex
-    * graph, which is NOT broadcastable; such graphs keep the AQE skew-join
-    * backstop instead).
+    * reducer's fair share) or when the derived hot set is larger than
+    * `maxHotIds` ([[planSkewBy]]).
     */
   def planSkewAuto(edges: DataFrame, partitions: Int,
                    key: String = "dst", quantile: Double = 0.999,
                    floorFactor: Double = 8.0,
-                   maxHotIds: Long = 1000000L): Option[SkewPlan] =
-    deriveSkewThreshold(edges, partitions, key, quantile, floorFactor).flatMap {
-      threshold =>
-        val plan = planSkewBy(edges, key, threshold, partitions)
-        if (plan.hotIds.count() <= maxHotIds) Some(plan)
-        else { unpersistSkew(plan); None }
-    }
+                   maxHotIds: Long = MaxHotIds): Option[SkewPlan] =
+    deriveSkewThreshold(edges, partitions, key, quantile, floorFactor)
+      .flatMap(planSkewBy(edges, key, _, partitions, maxHotIds))
 
   /** Degree-distribution histogram — the summary [[deriveSkewThreshold]]
     * derives from, exposed as its own operator (the first thing a user

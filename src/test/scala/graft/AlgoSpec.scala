@@ -67,6 +67,15 @@ class LabelPropagationSpec extends GraftSuite {
     assert(plan.hotIds.count() > 0) // karate hubs really take the hot path
   }
 
+  test("an empty edge table gives packed = true and no rows on every setup path") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(LabelPropagation.packedBudgetOk(empty))
+    assert(LabelPropagation.run(empty, 0L, tieBreakSeed = Some(1L)).labels.count() === 0L)
+    assert(LabelPropagation.runFixed(empty, 2, symmetric = true).count() === 0L)
+    assert(LabelPropagation.run(empty, 0L).labels.count() === 0L)
+  }
+
   test("random graphs: engine matches oracle exactly") {
     val rnd = new scala.util.Random(42)
     for (_ <- 1 to 5) {

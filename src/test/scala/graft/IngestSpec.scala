@@ -156,9 +156,14 @@ class CheckpointResumeSpec extends GraftSuite {
     val resumed = Superstep.run("lp", snapshot,
       l => LabelPropagation.superstep(edges, l), n, earlyStop = false)
     assert(labelsMap(resumed.labels) === full)
-    // lineage records exist for the checkpointed superstep
+    // lineage records exist for the checkpointed superstep, one per
+    // partition of the written snapshot, and add up to the snapshot
     val lineage = spark.read.parquet(s"$dir/lp/lineage/iter=2")
     assert(lineage.count() > 0)
+    import org.apache.spark.sql.functions.{col, sum}
+    val totals = lineage.agg(sum(col("rowCount")), sum(col("labelSum"))).first()
+    assert(totals.getLong(0) === snapshot.count())
+    assert(totals.getLong(1) === snapshot.agg(sum(col("label"))).first().getLong(0))
   }
 
   test("superstep metrics are recorded each iteration") {

@@ -169,6 +169,40 @@ class ResumeNumberingSpec extends GraftSuite {
   }
 }
 
+class LpResumeSpec extends GraftSuite {
+
+  test("LabelPropagation.run interrupted at round 2 resumes itself to the straight run") {
+    val edges = GraphOps.prepareForGather(
+      edgesDf(undirected(Fixtures.karatePairs)), 4)
+    val n = GraphOps.vertices(edges).count()
+    // (case, tie-break seed, skew plan): the hashed seeds must keep
+    // counting from the resume round, the forced plan must be re-derived
+    val forced = GraphOps.planSkew(edges, threshold = 5, partitions = 4)
+    val cases: Seq[(String, Option[Long], Option[GraphOps.SkewPlan])] = Seq(
+      ("hashed tie-break", Some(11L), None),
+      ("forced skew plan", None, Some(forced)))
+    cases.foreach { case (name, seed, plan) =>
+      def dir() = new Checkpointer(
+        java.nio.file.Files.createTempDirectory("graft-lp-resume").toString, spark)
+      def lp(cp: Checkpointer, cap: Option[Int]) = LabelPropagation.run(edges, n,
+        checkpointer = Some(cp), checkpointEvery = 1, maxIter = cap,
+        skewPlan = plan, symmetric = true, tieBreakSeed = seed)
+      val (straightCp, resumedCp) = (dir(), dir())
+      val straight = lp(straightCp, None)
+      val first = lp(resumedCp, Some(2))
+      assert(first.iterations === 2 && !first.converged, name)
+      val resumed = lp(resumedCp, None)
+      // the first two rounds' records are carried over, not re-run
+      assert(resumed.metrics.take(2) === first.metrics, name)
+      assert(resumed.iterations === straight.iterations, name)
+      assert(labelsMap(resumed.labels) === labelsMap(straight.labels), name)
+      assert(resumedCp.readMetrics("lp").map(_.iteration) ===
+        straightCp.readMetrics("lp").map(_.iteration), name)
+    }
+    GraphOps.unpersistSkew(forced)
+  }
+}
+
 class PlanGateR2Spec extends GraftSuite {
 
   private val sf = "/root/testdata/sf0.001"

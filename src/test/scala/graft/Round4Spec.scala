@@ -1081,10 +1081,7 @@ class PageRankResumeSpec extends GraftSuite {
     assert(it === 4)
     cp.pruneAbove("pagerank", it)
     val resumed = PageRank.run(e, maxIter = 9, partitions = 4, eps = 0.0,
-      checkpointer = Some(cp), checkpointEvery = 1,
-      initRanks = Some(snap.select(col("id"), col("label").as("rank"))),
-      startIter = it,
-      priorMetrics = cp.readMetrics("pagerank").filter(_.iteration <= it))
+      checkpointer = Some(cp), checkpointEvery = 1)
     assert(resumed.iterations === 9)
     val a = straight.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val b = resumed.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
